@@ -320,31 +320,17 @@ def _ensure_loaded() -> None:
     global _LOADED
     if _LOADED:
         return
-    # Imports are for their registration side effects.
-    from ploverdb_spark.queries import relational  # noqa: F401
+    # Imports are for their registration side effects, in registration
+    # order; a module that fails to import fails here instead of
+    # shrinking the catalog.
+    from ploverdb_spark.queries import (  # noqa: F401
+        relational,
+        graph,
+        pipeline,
+        semantics,
+        windows,
+        media,
+        curation,
+    )
 
-    try:
-        from ploverdb_spark.queries import graph  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from ploverdb_spark.queries import pipeline  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from ploverdb_spark.queries import semantics  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from ploverdb_spark.queries import windows  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from ploverdb_spark.queries import media  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from ploverdb_spark.queries import curation  # noqa: F401
-    except ImportError:
-        pass
     _LOADED = True

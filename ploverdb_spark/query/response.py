@@ -1,10 +1,11 @@
 """TRAPI response assembly (O1-O3 + A6) and the query entry points.
 
 Reference behavior reimplemented (NOT ported): plover.py:2121-2416.
-The distributed part ends with two aggregations (result grouping and
-knowledge-graph hydration); the final JSON envelope is assembled
-driver-side from the collected, cutoff-bounded answer set — the same
-boundary where the reference serializes via Flask.
+Every one-hop response is built in one pass, as in the reference: answer
+edges -> results grouped driver-side by (input, output) -> serialized
+nodes and edges -> one TRAPI envelope.  Only the serialization step
+depends on the answer size: big answers are serialized executor-side by a
+mapInPandas JSON stage, small ones by the driver.
 
 Core vs attribute properties follow the reference's split
 (plover.py:699-704): core node/edge properties become TRAPI structure;
@@ -278,6 +279,20 @@ def edge_to_trapi(
     return out
 
 
+def _oriented(d: dict) -> dict:
+    """An answer row with ``subject``/``object`` rebuilt from its traversal
+    direction.  Both orientations of one edge rebuild identically, so
+    de-duplicating by edge id does not depend on which one was kept."""
+    if d.get("direction") == DIR_FORWARD:
+        return {**d, "subject": d["input_id"], "object": d["output_id"]}
+    return {**d, "subject": d["output_id"], "object": d["input_id"]}
+
+
+def _answer_edge_to_trapi(d: dict, kp_infores_curie: str, shells=None) -> dict:
+    """O2 for one answer row: the edge payload plus traversal columns."""
+    return edge_to_trapi(_oriented(d), kp_infores_curie, shells)
+
+
 def _result_node_binding(node_id: str, query_id: str | None) -> dict:
     binding = {"id": node_id, "attributes": []}
     if query_id is not None and query_id != node_id:
@@ -285,54 +300,50 @@ def _result_node_binding(node_id: str, query_id: str | None) -> dict:
     return binding
 
 
-def assemble_results(
-    answers: DataFrame, compiled: CompiledQEdge, qg: dict, kp_infores_curie: str
+def _endpoint_ids(rows) -> set:
+    return {r["input_id"] for r in rows} | {r["output_id"] for r in rows}
+
+
+def _assemble_results_local(
+    rows, compiled: CompiledQEdge, qg: dict, kp_infores_curie: str
 ) -> list[dict]:
-    """A6 + O3 (plover.py:2330-2406): group answer edges into results keyed
-    by (input-or-*, output-or-*) depending on is_set; collect per-group
-    edge/node sets distributed-side, assemble JSON driver-side."""
+    """A6 + O3 (plover.py:2330-2406): group answer key rows into results
+    keyed by (input-or-*, output-or-*) depending on is_set.  Edge ids are
+    bound as strings: knowledge_graph edge keys are JSON object keys, so a
+    numeric edge-id column must bind by the same string key."""
     qnodes = qg["nodes"]
     in_set = bool(qnodes[compiled.input_qnode_key].get("is_set"))
     out_set = bool(qnodes[compiled.output_qnode_key].get("is_set"))
-
-    key_in = F.lit("*") if in_set else F.col("input_id")
-    key_out = F.lit("*") if out_set else F.col("output_id")
-    grouped = (
-        answers.groupBy(
-            key_in.alias("__kin"), key_out.alias("__kout")
+    groups: dict[tuple, dict] = {}
+    for r in rows:
+        key = (
+            "*" if in_set else r["input_id"],
+            "*" if out_set else r["output_id"],
         )
-        .agg(
-            F.collect_set("id").alias("edge_ids"),
-            F.collect_set(F.struct("input_id", "input_query_id")).alias("inputs"),
-            F.collect_set(F.struct("output_id", "output_query_id")).alias("outputs"),
+        g = groups.setdefault(
+            key, {"edge_ids": set(), "inputs": set(), "outputs": set()}
         )
-        .collect()
-    )
+        g["edge_ids"].add(str(r["id"]))
+        g["inputs"].add((r["input_id"], r["input_query_id"]))
+        g["outputs"].add((r["output_id"], r["output_query_id"]))
     results = []
-    for g in grouped:
+    for g in groups.values():
         results.append(
             {
                 "node_bindings": {
                     compiled.input_qnode_key: [
-                        _result_node_binding(i.input_id, i.input_query_id)
-                        for i in g.inputs
+                        _result_node_binding(i, q) for i, q in g["inputs"]
                     ],
                     compiled.output_qnode_key: [
-                        _result_node_binding(o.output_id, o.output_query_id)
-                        for o in g.outputs
+                        _result_node_binding(o, q) for o, q in g["outputs"]
                     ],
                 },
                 "analyses": [
                     {
                         "edge_bindings": {
-                            # str(e): knowledge_graph edge keys are
-                            # stringified everywhere (edge_to_trapi,
-                            # _edges_from_rows) — a numeric edge-id column
-                            # must bind by the same string key in BOTH the
-                            # distributed and driver-side assembly paths
                             compiled.qedge_key: [
-                                {"id": str(e), "attributes": []}
-                                for e in g.edge_ids
+                                {"id": e, "attributes": []}
+                                for e in g["edge_ids"]
                             ]
                         },
                         "resource_id": kp_infores_curie,
@@ -404,8 +415,65 @@ def _int_cols(df: DataFrame) -> tuple[str, ...]:
     return tuple(c for c, t in df.dtypes if t in _INTEGRAL_TYPES)
 
 
-def _node_to_trapi_kp(row: dict, kp: str, shells: dict | None = None) -> dict:
-    return node_to_trapi(row, kp, shells)
+def _serialize_on_executors(
+    df: DataFrame, to_trapi, kp_infores_curie: str, shells: dict[str, dict]
+) -> dict[str, dict]:
+    """``to_trapi`` over every row of ``df``, keyed by string id, run in a
+    mapInPandas stage; the driver only json.loads compact strings."""
+    rows = df.mapInPandas(
+        _json_serializer(to_trapi, kp_infores_curie, _int_cols(df), shells),
+        "id string, json string",
+    ).collect()
+    return {r.id: json.loads(r.json) for r in rows}
+
+
+def _collect_dicts(df) -> list[dict]:
+    """Arrow-batched collect to plain dicts, with a row-wise fallback for
+    the rare column type Arrow cannot transport (a custom KG property
+    schema outside the KGX norm must degrade, not 500)."""
+    try:
+        return df.toArrow().to_pylist()
+    except Exception:
+        return [r.asDict(recursive=True) for r in df.collect()]
+
+
+def _node_rows(
+    engine: TrapiEngine, node_ids, answers: DataFrame | None = None
+) -> DataFrame:
+    """The node-table rows of ``node_ids``.
+
+    An answer-sized id list is pushed into the nodes scan as one IN: a
+    semi-join alone full-scans the node table per query, and its
+    broadcast is a job of its own under AQE (see pushdown_id_filter).
+    Longer lists take a broadcast semi-join.  Its id side is derived from
+    the persisted ``answers`` when the caller has them, because a
+    driver-built tiny_df stops at MAX_TINY_ROWS and a cutoff-sized answer
+    can have more node ids than that."""
+    nodes = engine.kg.nodes
+    if len(node_ids) <= MAX_ISIN_PUSHDOWN:
+        return nodes.where(in_predicate("id", sorted(node_ids)))
+    if answers is None:
+        nid = tiny_df(engine.spark, [(n,) for n in node_ids], "nid string")
+    else:
+        nid = (
+            answers.select(F.col("input_id").alias("nid"))
+            .unionByName(answers.select(F.col("output_id").alias("nid")))
+            .distinct()
+        )
+    return nodes.join(F.broadcast(nid), nodes.id == nid.nid, "left_semi")
+
+
+def _fetch_nodes(engine: TrapiEngine, node_ids, shells) -> dict[str, dict]:
+    """TRAPI nodes of ``node_ids``, serialized driver-side; no Spark action
+    for an empty id set."""
+    if not node_ids:
+        return {}
+    # Arrow collect: node payloads carry arrays/structs, and py4j row-wise
+    # collect is the slow path for them
+    return {
+        d["id"]: node_to_trapi(d, engine.kp_infores_curie, shells)
+        for d in _collect_dicts(_node_rows(engine, node_ids))
+    }
 
 
 # Below this many answer edges a driver-side loop beats the Python-worker
@@ -417,88 +485,20 @@ DISTRIBUTED_SERIALIZE_MIN_EDGES = 5000
 
 
 def hydrate_knowledge_graph(
-    engine: TrapiEngine, answers: DataFrame
+    engine: TrapiEngine, answers: DataFrame, node_ids
 ) -> tuple[dict, dict]:
-    """J9 (plover.py:2136-2173): answer ids -> full TRAPI nodes/edges.
-
-    Serialization of large answers is distributed (mapInPandas -> JSON
-    strings); the driver only json.loads compact strings, so a
-    cutoff-sized (1M-edge) answer no longer costs minutes of
-    single-threaded dict building.  Small answers take the direct collect
-    path (one Arrow batch, no Python-worker round trip)."""
-    # reconstruct subject/object from traversal direction
-    edge_df = (
-        answers.withColumn(
-            "subject",
-            F.when(F.col("direction") == DIR_FORWARD, F.col("input_id")).otherwise(
-                F.col("output_id")
-            ),
-        )
-        .withColumn(
-            "object",
-            F.when(F.col("direction") == DIR_FORWARD, F.col("output_id")).otherwise(
-                F.col("input_id")
-            ),
-        )
-        .dropDuplicates(["id"])
-    )
+    """J9 (plover.py:2136-2173) for big answers: the persisted answer
+    edges and their ``node_ids`` -> TRAPI nodes and edges, serialized
+    executor-side in two Spark actions.  The driver only json.loads
+    compact strings, so a cutoff-sized (1M-edge) answer costs no minutes
+    of single-threaded dict building.  An edge met in both orientations
+    serializes identically; the id-keyed dict keeps one."""
     shells = attribute_shells_for(engine.kg.config)
-    distributed = (
-        answers.limit(DISTRIBUTED_SERIALIZE_MIN_EDGES).count()
-        >= DISTRIBUTED_SERIALIZE_MIN_EDGES
+    kp = engine.kp_infores_curie
+    edges = _serialize_on_executors(answers, _answer_edge_to_trapi, kp, shells)
+    nodes = _serialize_on_executors(
+        _node_rows(engine, node_ids, answers), node_to_trapi, kp, shells
     )
-    if distributed:
-        edge_rows = edge_df.mapInPandas(
-            _json_serializer(
-                edge_to_trapi, engine.kp_infores_curie, _int_cols(edge_df), shells
-            ),
-            "id string, json string",
-        ).collect()
-        edges = {r.id: json.loads(r.json) for r in edge_rows}
-    else:
-        edges = {
-            str(r["id"]): edge_to_trapi(
-                r.asDict(recursive=True), engine.kp_infores_curie, shells
-            )
-            for r in edge_df.collect()
-        }
-    node_ids = answers.select(
-        F.col("input_id").alias("nid")
-    ).unionByName(answers.select(F.col("output_id").alias("nid"))).distinct()
-    # For answer sets under the isin cap, collect the (persisted) ids and
-    # push them into the nodes scan — the semi-join alone full-scans the
-    # node table per query (see pushdown_id_filter).
-    # answer-sized id list: the single-scan IN beats the broadcast
-    # semi-join on JOB COUNT (broadcast materialization is its own job
-    # under AQE), so this path stays unconditional — unlike the
-    # subclass-expanded lookup pushdowns gated on kg.pruned_id_scans
-    nid_sample = node_ids.limit(MAX_ISIN_PUSHDOWN + 1).collect()
-    if len(nid_sample) <= MAX_ISIN_PUSHDOWN:
-        hydrated = engine.kg.nodes.where(
-            in_predicate("id", [r.nid for r in nid_sample])
-        )
-    else:
-        hydrated = engine.kg.nodes.join(
-            F.broadcast(node_ids), engine.kg.nodes.id == node_ids.nid, "left_semi"
-        )
-    if distributed:
-        node_rows = hydrated.mapInPandas(
-            _json_serializer(
-                _node_to_trapi_kp,
-                engine.kp_infores_curie,
-                _int_cols(hydrated),
-                shells,
-            ),
-            "id string, json string",
-        ).collect()
-        nodes = {r.id: json.loads(r.json) for r in node_rows}
-    else:
-        nodes = {
-            r["id"]: node_to_trapi(
-                r.asDict(recursive=True), engine.kp_infores_curie, shells
-            )
-            for r in hydrated.collect()
-        }
     return nodes, edges
 
 
@@ -513,25 +513,32 @@ def _log_entry(level: str, message: str) -> dict:
     }
 
 
+def _envelope(qg: dict, nodes: dict, edges: dict, results: list) -> dict:
+    return {
+        "message": {
+            "query_graph": qg,
+            "knowledge_graph": {"nodes": nodes, "edges": edges},
+            "results": results,
+        }
+    }
+
+
 def _slim_tuple_response(
     engine: TrapiEngine, compiled: CompiledQEdge, answers: DataFrame
 ) -> dict:
     """R6, include_metadata=True (plover.py:1878-1893, tuple format):
     nodes as (name, category, [query_ids]) tuples; edges as
     (subject, object, predicate, primary_source, qualifiers..., 'False')
-    tuples — Pathfinder back-compat."""
-    rows = answers.collect()
-    in_nodes: dict[str, list] = {}
-    out_nodes: dict[str, list] = {}
+    tuples — Pathfinder back-compat.  The category is the node's raw first
+    one, not the sorted TRAPI list."""
+    in_nodes: dict[str, None] = {}
+    out_nodes: dict[str, None] = {}
     edges: dict[str, list] = {}
     node_qids: dict[str, set] = {}
-    for r in rows:
-        d = r.asDict()
-        subj = d["input_id"] if d["direction"] == DIR_FORWARD else d["output_id"]
-        obj = d["output_id"] if d["direction"] == DIR_FORWARD else d["input_id"]
+    for d in map(_oriented, _collect_dicts(answers)):
         edges[str(d["id"])] = [
-            subj,
-            obj,
+            d["subject"],
+            d["object"],
             d["predicate"],
             d.get("primary_knowledge_source"),
             d.get("qualified_predicate") or "",
@@ -540,25 +547,16 @@ def _slim_tuple_response(
             "False",
         ]
         for side, nid, qid in (
-            ("in", d["input_id"], d.get("input_query_id")),
-            ("out", d["output_id"], d.get("output_query_id")),
+            (in_nodes, d["input_id"], d.get("input_query_id")),
+            (out_nodes, d["output_id"], d.get("output_query_id")),
         ):
             if qid is not None and qid != nid:
                 node_qids.setdefault(nid, set()).add(qid)
-            (in_nodes if side == "in" else out_nodes).setdefault(nid, None)
+            side.setdefault(nid, None)
+    node_rows = _node_rows(engine, {*in_nodes, *out_nodes}, answers)
     names = {
-        r["id"]: (r["name"], (r["categories"] or [None])[0])
-        for r in engine.kg.nodes.join(
-            F.broadcast(
-                tiny_df(
-                    engine.spark,
-                    [(n,) for n in {*in_nodes, *out_nodes}],
-                    "nid string",
-                )
-            ),
-            engine.kg.nodes.id == F.col("nid"),
-            "left_semi",
-        ).collect()
+        d["id"]: (d["name"], (d["categories"] or [None])[0])
+        for d in _collect_dicts(node_rows.select("id", "name", "categories"))
     }
 
     def node_tuple(nid: str) -> list:
@@ -574,196 +572,87 @@ def _slim_tuple_response(
     }
 
 
-def _collect_dicts(df) -> list[dict]:
-    """Arrow-batched collect to plain dicts, with a row-wise fallback for
-    the rare column type Arrow cannot transport (a custom KG property
-    schema outside the KGX norm must degrade, not 500)."""
-    try:
-        return df.toArrow().to_pylist()
-    except Exception:
-        return [r.asDict(recursive=True) for r in df.collect()]
-
-
-def _edges_from_rows(engine: TrapiEngine, rows, shells) -> dict[str, dict]:
-    """Answer row dicts -> TRAPI edge dicts, reconstructing subject/object
-    from the traversal direction (same math as hydrate_knowledge_graph's
-    edge_df; both orientations of one edge reconstruct identically, so
-    dedup by id is orientation-independent)."""
-    edges: dict[str, dict] = {}
-    for r in rows:
-        eid = str(r["id"])
-        if eid in edges:
-            continue
-        d = dict(r)
-        if d.get("direction") == DIR_FORWARD:
-            d["subject"], d["object"] = d["input_id"], d["output_id"]
-        else:
-            d["subject"], d["object"] = d["output_id"], d["input_id"]
-        edges[eid] = edge_to_trapi(d, engine.kp_infores_curie, shells)
-    return edges
-
-
-def _assemble_results_local(
-    rows, compiled: CompiledQEdge, qg: dict, kp_infores_curie: str
-) -> list[dict]:
-    """Driver-side twin of :func:`assemble_results` for already-collected
-    answers: identical grouping keys/sets, zero Spark actions."""
-    qnodes = qg["nodes"]
-    in_set = bool(qnodes[compiled.input_qnode_key].get("is_set"))
-    out_set = bool(qnodes[compiled.output_qnode_key].get("is_set"))
-    groups: dict[tuple, dict] = {}
-    for r in rows:
-        key = (
-            "*" if in_set else r["input_id"],
-            "*" if out_set else r["output_id"],
-        )
-        g = groups.setdefault(
-            key, {"edge_ids": set(), "inputs": set(), "outputs": set()}
-        )
-        g["edge_ids"].add(str(r["id"]))
-        g["inputs"].add((r["input_id"], r["input_query_id"]))
-        g["outputs"].add((r["output_id"], r["output_query_id"]))
-    results = []
-    for g in groups.values():
-        results.append(
-            {
-                "node_bindings": {
-                    compiled.input_qnode_key: [
-                        _result_node_binding(i, q) for i, q in g["inputs"]
-                    ],
-                    compiled.output_qnode_key: [
-                        _result_node_binding(o, q) for o, q in g["outputs"]
-                    ],
-                },
-                "analyses": [
-                    {
-                        "edge_bindings": {
-                            compiled.qedge_key: [
-                                {"id": e, "attributes": []}
-                                for e in g["edge_ids"]
-                            ]
-                        },
-                        "resource_id": kp_infores_curie,
-                    }
-                ],
-                "resource_id": kp_infores_curie,
-            }
-        )
-    return results
-
-
-def _fetch_nodes(engine: TrapiEngine, node_ids, shells) -> dict[str, dict]:
-    """One pruned scan of the node table -> TRAPI node dicts."""
-    ids = sorted(node_ids)
-    if not ids:
-        return {}
-    # answer-sized list; unconditional for job count (see hydrate note)
-    if len(ids) <= MAX_ISIN_PUSHDOWN:
-        hydrated = engine.kg.nodes.where(in_predicate("id", ids))
-    else:
-        nid_df = tiny_df(engine.spark, [(n,) for n in ids], "nid string")
-        hydrated = engine.kg.nodes.join(
-            F.broadcast(nid_df), engine.kg.nodes.id == F.col("nid"), "left_semi"
-        )
-    # Arrow collect: node payloads carry arrays/structs, and py4j row-wise
-    # collect is the slow path for them
-    return {
-        d["id"]: node_to_trapi(d, engine.kp_infores_curie, shells)
-        for d in _collect_dicts(hydrated)
-    }
-
-
 def run_query(engine: TrapiEngine, query: dict) -> dict:
     """POST /query (plover.py:1788-1932 lifecycle): full TRAPI response,
     or the R6 legacy slim formats when the QG carries include_metadata.
 
-    Serving-latency design: answers under FAST-PATH size are collected in
-    ONE bounded action and the whole response (cutoff check, edge
-    serialization, result grouping) is assembled driver-side, plus one
-    pruned node-payload fetch — 2 Spark actions per query instead of ~6.
+    Every one-hop response takes one path: collect the answer key rows,
+    group them into results (_assemble_results_local), serialize the
+    edges and nodes, wrap one envelope.  Only where serialization runs
+    depends on the answer size, which the bounded probe collect that
+    opens the query measures:
+
+    - at most DISTRIBUTED_SERIALIZE_MIN_EDGES answers: the probe holds
+      every answer row, the driver serializes them, and one pruned node
+      fetch follows — 2 Spark actions;
+    - larger answers are persisted, checked against the cutoff, their key
+      columns collected, and hydrate_knowledge_graph serializes edges and
+      nodes executor-side — 5 Spark actions (4 without a cutoff).
+
     Under concurrent load the driver's job-scheduling throughput is the
     serving bottleneck (measured at reference scale: 100-burst wall time
     tracks total job count, not scan cost), so action count IS the
-    latency.  Big answers keep the distributed persist + mapInPandas
-    path."""
+    latency."""
     logs = [_log_entry("INFO", "Received query")]
     qg = TrapiEngine.normalize_envelope(query)
     engine.validate(qg)
     if not qg.get("edges"):
         return _run_single_node_query(engine, qg)
     include_metadata = qg.get("include_metadata")
-    if include_metadata is None:
-        compiled, matched = engine.lookup(
-            qg, persist_answers=False, enforce_cutoff=False
-        )
-        probe_n = DISTRIBUTED_SERIALIZE_MIN_EDGES
-        if engine.answer_cutoff is not None:
-            probe_n = min(probe_n, engine.answer_cutoff)
-        rows = _collect_dicts(matched.limit(probe_n + 1))
-        if len(rows) <= probe_n:
-            # FAST PATH: every answer row is in hand (and under cutoff)
-            shells = attribute_shells_for(engine.kg.config)
-            edges = _edges_from_rows(engine, rows, shells)
-            results = _assemble_results_local(
-                rows, compiled, qg, engine.kp_infores_curie
-            )
-            node_ids = {r["input_id"] for r in rows} | {
-                r["output_id"] for r in rows
-            }
-            nodes = _fetch_nodes(engine, node_ids, shells)
-            logs.append(
-                _log_entry(
-                    "INFO", f"Done with query, returning {len(results)} results"
-                )
-            )
+    if include_metadata is not None:
+        # R6 slim modes: collected-answer volume is caller-controlled;
+        # keep the persisted multi-pass path
+        compiled, answers = engine.lookup(qg)  # returned persisted
+        try:
+            if include_metadata:
+                return _slim_tuple_response(engine, compiled, answers)
+            # ids-only format (plover.py:1894-1901)
+            rows = answers.select("id", "input_id", "output_id").collect()
             return {
-                "message": {
-                    "query_graph": qg,
-                    "knowledge_graph": {"nodes": nodes, "edges": edges},
-                    "results": results,
+                "nodes": {
+                    compiled.input_qnode_key: sorted({r.input_id for r in rows}),
+                    compiled.output_qnode_key: sorted({r.output_id for r in rows}),
                 },
-                "logs": logs,
+                "edges": {compiled.qedge_key: sorted({str(r["id"]) for r in rows})},
             }
+        finally:
+            answers.unpersist()
+
+    compiled, matched = engine.lookup(
+        qg, persist_answers=False, enforce_cutoff=False
+    )
+    probe_n = DISTRIBUTED_SERIALIZE_MIN_EDGES
+    if engine.answer_cutoff is not None:
+        probe_n = min(probe_n, engine.answer_cutoff)
+    rows = _collect_dicts(matched.limit(probe_n + 1))
+    shells = attribute_shells_for(engine.kg.config)
+    if len(rows) <= probe_n:
+        # every answer row is in hand (and under the cutoff)
+        edges = {
+            str(d["id"]): _answer_edge_to_trapi(d, engine.kp_infores_curie, shells)
+            for d in rows
+        }
+        nodes = _fetch_nodes(engine, _endpoint_ids(rows), shells)
+    else:
         answers = matched.persist()
         try:
             engine.enforce_answer_cutoff(answers)
-            nodes, edges = hydrate_knowledge_graph(engine, answers)
-            results = assemble_results(
-                answers, compiled, qg, engine.kp_infores_curie
+            # the columns that result grouping reads
+            rows = _collect_dicts(
+                answers.select(
+                    "id", "input_id", "output_id", "input_query_id", "output_query_id"
+                )
+            )
+            nodes, edges = hydrate_knowledge_graph(
+                engine, answers, _endpoint_ids(rows)
             )
         finally:
             answers.unpersist()
-        logs.append(
-            _log_entry(
-                "INFO", f"Done with query, returning {len(results)} results"
-            )
-        )
-        return {
-            "message": {
-                "query_graph": qg,
-                "knowledge_graph": {"nodes": nodes, "edges": edges},
-                "results": results,
-            },
-            "logs": logs,
-        }
-
-    # R6 slim modes: collected-answer volume is caller-controlled; keep
-    # the persisted multi-pass path
-    compiled, answers = engine.lookup(qg)  # returned persisted
-    try:
-        if include_metadata:
-            return _slim_tuple_response(engine, compiled, answers)
-        # ids-only format (plover.py:1894-1901)
-        rows = answers.select("id", "input_id", "output_id").collect()
-        return {
-            "nodes": {
-                compiled.input_qnode_key: sorted({r.input_id for r in rows}),
-                compiled.output_qnode_key: sorted({r.output_id for r in rows}),
-            },
-            "edges": {compiled.qedge_key: sorted({str(r["id"]) for r in rows})},
-        }
-    finally:
-        answers.unpersist()
+    results = _assemble_results_local(rows, compiled, qg, engine.kp_infores_curie)
+    logs.append(
+        _log_entry("INFO", f"Done with query, returning {len(results)} results")
+    )
+    return {**_envelope(qg, nodes, edges, results), "logs": logs}
 
 
 def _run_single_node_query(engine: TrapiEngine, qg: dict) -> dict:
@@ -782,24 +671,17 @@ def _run_single_node_query(engine: TrapiEngine, qg: dict) -> dict:
             "resource_id": engine.kp_infores_curie,
         }
     ]
-    return {
-        "message": {
-            "query_graph": qg,
-            "knowledge_graph": {"nodes": nodes, "edges": {}},
-            "results": results,
-        }
-    }
+    return _envelope(qg, nodes, {}, results)
 
 
 def get_edges(engine: TrapiEngine, pairs: list[list[str]]) -> dict:
     """POST /edges (J10, plover.py:1934-1980) — vectorized: one join for
     all pairs instead of the reference's per-pair loop.  No subclass
     reasoning, by design (plover.py:1936-1938)."""
-    spark = engine.spark
     flat_ids = sorted({i for p in pairs for i in p})
     canon = engine.canonicalize_ids(flat_ids)
     pairs_df = tiny_df(
-        spark,
+        engine.spark,
         [(canon.get(a, a), canon.get(b, b), a, b) for a, b in pairs],
         "node_a string, node_b string, orig_a string, orig_b string",
     )
@@ -832,37 +714,18 @@ def get_edges(engine: TrapiEngine, pairs: list[list[str]]) -> dict:
         F.broadcast(pairs_df),
         (e.subject == pairs_df.node_b) & (e.object == pairs_df.node_a),
     )
-    hits = fwd.unionByName(rev).select(
-        "orig_a", "orig_b", *[c for c in e.columns]
-    )
-    rows = hits.collect()
+    hits = fwd.unionByName(rev).select("orig_a", "orig_b", *e.columns)
     shells = attribute_shells_for(engine.kg.config)
-    pairs_to_edge_ids: dict[str, list[str]] = {}
+    pairs_to_edge_ids: dict[str, list[str]] = {f"{a}--{b}": [] for a, b in pairs}
     kg_edges: dict[str, dict] = {}
-    for r in rows:
-        key = f"{r.orig_a}--{r.orig_b}"
-        pairs_to_edge_ids.setdefault(key, []).append(str(r["id"]))
-        d = r.asDict(recursive=True)
-        d.pop("orig_a", None)
-        d.pop("orig_b", None)
-        kg_edges[str(r["id"])] = edge_to_trapi(d, engine.kp_infores_curie, shells)
-    for a, b in pairs:
-        pairs_to_edge_ids.setdefault(f"{a}--{b}", [])
+    for d in _collect_dicts(hits):
+        eid = str(d["id"])
+        pairs_to_edge_ids[f"{d.pop('orig_a')}--{d.pop('orig_b')}"].append(eid)
+        kg_edges[eid] = edge_to_trapi(d, engine.kp_infores_curie, shells)
     node_ids = {e["subject"] for e in kg_edges.values()} | {
         e["object"] for e in kg_edges.values()
     }
-    nodes = {}
-    if node_ids:
-        nid_df = tiny_df(spark, [(n,) for n in node_ids], "nid string")
-        node_rows = engine.kg.nodes.join(
-            F.broadcast(nid_df), engine.kg.nodes.id == F.col("nid"), "left_semi"
-        ).collect()
-        nodes = {
-            r["id"]: node_to_trapi(
-                r.asDict(recursive=True), engine.kp_infores_curie, shells
-            )
-            for r in node_rows
-        }
+    nodes = _fetch_nodes(engine, node_ids, shells)
     return {
         "pairs_to_edge_ids": pairs_to_edge_ids,
         "knowledge_graph": {"nodes": nodes, "edges": kg_edges},

@@ -13,6 +13,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 48g.  A fixed 48g heap on
+    a smaller host lets the driver JVM grow past physical RAM, and the
+    kernel OOM-kills it before it collects garbage; the other half is left
+    to the Python workers and the OS."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, phys_mb // 2)}m"
+
+
 # Sized for local[32] testing; on a 1000-executor cluster these would be set
 # by the deployment (shuffle.partitions ~ 2-3x total cores, autoBroadcast
 # threshold per executor memory).
@@ -30,7 +40,9 @@ _DEFAULTS = {
     "spark.scheduler.mode": "FAIR",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+    ),
     "spark.ui.enabled": "false",
     "spark.sql.parquet.filterPushdown": "true",
     # limit().collect() otherwise probes 1 partition, then 4, 16, ... —

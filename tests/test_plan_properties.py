@@ -562,6 +562,62 @@ def test_run_query_fast_path_action_count(spark):
     assert after - before <= 3, f"fast path ran {after - before} jobs"
 
 
+def test_run_query_big_path_action_count(spark, monkeypatch):
+    """The big-answer path (forced with DISTRIBUTED_SERIALIZE_MIN_EDGES=0)
+    runs 5 Spark actions: the bounded probe, the cutoff check, the
+    answer-key collect, and the executor-side edge and node serializers.
+    Result grouping runs driver-side on the collected keys, with no Spark
+    action of its own."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from ploverdb_spark.build.ingest import build_knowledge_graph
+    from ploverdb_spark.query import response
+    from ploverdb_spark.query.compiler import TrapiEngine
+    from ploverdb_spark.sources.kgx import KgxConfig
+    from tests.test_trapi_engine import EDGE_SCHEMA, EDGES, NODES, one_hop
+
+    nodes = spark.createDataFrame(
+        NODES,
+        "id string, name string, all_categories array<string>, "
+        "equivalent_curies array<string>, publications array<string>",
+    )
+    edges = spark.createDataFrame(EDGES, EDGE_SCHEMA)
+    kg = build_knowledge_graph(nodes, edges, KgxConfig()).persist()
+    eng = TrapiEngine(kg, kp_infores_curie="infores:test-kp")
+    qg = one_hop(
+        {"ids": ["CHEM:1", "CHEM:2"]},
+        {"categories": ["biolink:Disease"]},
+        "biolink:treats",
+    )
+    monkeypatch.setattr(response, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 0)
+    response.run_query(eng, qg)  # prime lazy state
+
+    actions: list[str] = []
+    depth = [0]
+
+    def counted(name, orig):
+        def wrapped(self, *a, **kw):
+            if not depth[0]:
+                actions.append(name)
+            depth[0] += 1
+            try:
+                return orig(self, *a, **kw)
+            finally:
+                depth[0] -= 1
+
+        return wrapped
+
+    for name in ("collect", "toArrow", "count", "isEmpty", "toPandas"):
+        monkeypatch.setattr(DataFrame, name, counted(name, getattr(DataFrame, name)))
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or ())
+    resp = response.run_query(eng, qg)
+    jobs = len(tracker.getJobIdsForGroup(None) or ()) - before
+    assert resp["message"]["results"]
+    assert len(actions) == 5, f"big path ran actions {actions}"
+    assert jobs <= 9, f"big path ran {jobs} jobs"
+
+
 def test_t7_vocab_topk_is_take_ordered(spark):
     """t7's top-k must compile to TakeOrderedAndProject over the hash
     aggregate (bounded driver result), with a partial_count partial agg —

@@ -252,21 +252,38 @@ def test_attribute_template_default_and_override():
     assert out["attribute_source"] == "infores:kp"
 
 
-def test_hydrate_distributed_serializer_parity(engine, monkeypatch):
-    """The mapInPandas JSON serializer and the direct collect path must
-    produce byte-identical TRAPI nodes/edges (threshold forced to 1 to
-    exercise the distributed path on the small fixture)."""
+def test_hydrate_distributed_serializer_parity(request):
+    """The executor-side (mapInPandas JSON) serializer and the driver-side
+    one must produce byte-identical TRAPI nodes and edges from the same
+    answers: big and small answers differ only in where they serialize.
+    numeric_id_engine covers long-typed edge ids, keyed as strings."""
+    import json
+
     import ploverdb_spark.query.response as R
 
-    qg = one_hop({"ids": ["CHEM:1"]}, {})
-    compiled, answers = engine.lookup(qg)
-    try:
-        direct = R.hydrate_knowledge_graph(engine, answers)
-        monkeypatch.setattr(R, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 1)
-        distributed = R.hydrate_knowledge_graph(engine, answers)
-    finally:
-        answers.unpersist()
-    assert direct == distributed
+    def as_json(kg):
+        return {k: json.dumps(v) for k, v in kg.items()}
+
+    for name in ("engine", "numeric_id_engine"):
+        eng = request.getfixturevalue(name)
+        _, answers = eng.lookup(one_hop({"ids": ["CHEM:1"]}, {}))
+        try:
+            rows = R._collect_dicts(answers)
+            node_ids = R._endpoint_ids(rows)
+            nodes, edges = R.hydrate_knowledge_graph(eng, answers, node_ids)
+            shells = R.attribute_shells_for(eng.kg.config)
+            driver_nodes = R._fetch_nodes(eng, node_ids, shells)
+            driver_edges = {
+                str(d["id"]): R._answer_edge_to_trapi(
+                    d, eng.kp_infores_curie, shells
+                )
+                for d in rows
+            }
+        finally:
+            answers.unpersist()
+        assert edges, f"expected answer edges on {name}"
+        assert as_json(nodes) == as_json(driver_nodes)
+        assert as_json(edges) == as_json(driver_edges)
 
 
 # -- canonical predicate handling (ref test_kg2c.py:344-387) ---------------
@@ -964,6 +981,40 @@ def test_numeric_edge_id_fast_path_parity(numeric_id_engine, monkeypatch):
         return msg
 
     assert canon(fast) == canon(slow)
+
+
+def test_semi_join_node_fetch_parity(engine, monkeypatch):
+    """Past MAX_ISIN_PUSHDOWN node ids, the node fetch is a broadcast
+    semi-join instead of an IN filter: against a driver-built id table on
+    the fast path, against the persisted answers' endpoints on the big
+    path.  Both must give the response of the IN fetch."""
+    import ploverdb_spark.query.response as R
+
+    qg = one_hop(
+        {"ids": ["CHEM:1", "CHEM:2"]},
+        {"categories": ["biolink:Disease"]},
+        "biolink:treats",
+    )
+
+    def canon(resp):
+        msg = resp["message"]
+        for r in msg["results"]:
+            for binds in r["node_bindings"].values():
+                binds.sort(key=lambda b: b["id"])
+            for a in r["analyses"]:
+                for eb in a["edge_bindings"].values():
+                    eb.sort(key=lambda e: e["id"])
+        msg["results"].sort(key=repr)
+        return msg
+
+    expected = canon(run_query(engine, qg))
+    assert len(expected["knowledge_graph"]["nodes"]) > 1
+    monkeypatch.setattr(R, "MAX_ISIN_PUSHDOWN", 1)
+    fast = canon(run_query(engine, qg))
+    monkeypatch.setattr(R, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 0)
+    big = canon(run_query(engine, qg))
+    assert fast == expected
+    assert big == expected
 
 
 def test_get_neighbors_empty_ids(engine):
