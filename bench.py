@@ -55,6 +55,44 @@ def _data_fingerprint(sf_dir: str) -> dict:
     return fp
 
 
+def bench_line(
+    timings: dict[str, float],
+    *,
+    sf: float,
+    load_start: float,
+    reps: int,
+    reps_file: str,
+    load_end: float,
+    gate_passed: bool | None,
+    io_bulk_mb_s: float,
+) -> str:
+    """The one JSON line bench.py prints.
+
+    The driver keeps only the LAST 2,000 characters of stdout.  So the
+    queries dict, the bulk of the line, goes last but for a compact
+    summary (total, gate verdict, bulk-IO reading), and it lists the
+    queries slowest last: the tail always holds the entries that dominate
+    the total.  Per-rep lists and the data fingerprint go to the sidecar
+    file named by ``reps_file``."""
+    total = round(sum(t for t in timings.values() if t >= 0), 4)
+    return json.dumps(
+        {
+            "metric": "total_query_wall_sec",
+            "value": total,
+            "unit": "sec",
+            "sf": sf,
+            "host_load_avg_start": load_start,
+            "reps": reps,
+            "reps_file": reps_file,
+            "queries": dict(sorted(timings.items(), key=lambda kv: kv[1])),
+            "host_load_avg_end": load_end,
+            "gate_passed": gate_passed,
+            "io_bulk_mb_s_end": io_bulk_mb_s,
+            "total_sec": total,
+        }
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -123,32 +161,6 @@ def main() -> None:
             rep_lists[name] = runs
             print(f"# bench error {name}: {exc}")
 
-    total = round(sum(t for t in timings.values() if t >= 0), 4)
-
-    # The driver captures only the LAST 2,000 characters of stdout.
-    # Round 11 emitted per-rep lists inline and the floor-critical
-    # queries fell off the truncated head (BENCH_r11 showed 21 of 76
-    # queries; d6 invisible).  So: (a) reps + data fingerprint go to a
-    # sidecar file whose path rides in the JSON line; (b) the queries
-    # dict — the bulk of the line — serializes LAST, with the
-    # floor-critical queries at its very end, inside any tail window.
-    floor_critical = [
-        "s2_ivf_topk",
-        "c10_lsh_decontamination",
-        "c12_token_window_decontamination",
-        "d5_embedding_neardup",
-        "s4_ivf_recall",
-        "s1_cosine_topk",
-        "c8_bloom_decontamination",
-        "d7_edit_distance_verify",
-        "d2_minhash_lsh_pairs",
-        "d6_dup_groups",
-    ]
-    ordered = {n: t for n, t in timings.items() if n not in floor_critical}
-    ordered.update(
-        {n: timings[n] for n in floor_critical if n in timings}
-    )
-
     sidecar = {
         "query_reps": rep_lists,
         "data_fingerprint": _data_fingerprint(sf_dir),
@@ -165,30 +177,18 @@ def main() -> None:
     except OSError:
         reps_file = ""
 
-    # The driver keeps only the LAST 2,000 characters of stdout, so keys
-    # BEFORE the (long) queries dict vanish from the captured artifact on
-    # a full-catalog run.  A compact summary AFTER the queries dict makes
-    # the tail self-sufficient: total, gate verdict, and the bulk-IO
-    # reading (the host-attribution VERDICT r11 asked for — 10.6 MB/s
-    # windows must be visible in the artifact, not just the sidecar).
     from ploverdb_spark.session import io_bulk_probe
 
     print(
-        json.dumps(
-            {
-                "metric": "total_query_wall_sec",
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "host_load_avg_start": load0,
-                "reps": reps,
-                "reps_file": reps_file,
-                "queries": ordered,
-                "host_load_avg_end": _host_load(),
-                "gate_passed": gate.get("gate_passed"),
-                "io_bulk_mb_s_end": io_bulk_probe(),
-                "total_sec": total,
-            }
+        bench_line(
+            timings,
+            sf=sf,
+            load_start=load0,
+            reps=reps,
+            reps_file=reps_file,
+            load_end=_host_load(),
+            gate_passed=gate.get("gate_passed"),
+            io_bulk_mb_s=io_bulk_probe(),
         )
     )
 

@@ -88,222 +88,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# The correctness driver emits at most this many rows per round
-# (observed empirically since r02: exactly-50 rows for any larger
-# catalog).  tests/test_relational_queries.py asserts the pinned tail
-# below is EXACTLY the overflow, so growing the catalog without growing
-# _EMIT_LAST is a test failure, not a silent drop.
-DRIVER_EMIT_CAP = 50
-
-# Emitted first in queries()/oracle_sql() iteration order.  The driver
-# emits at most 50 correctness rows while the catalog is 79 — so
-# front-load the entries that most need a fresh row.  Round 12 rotation:
-# the three NEW entries (c13/c14 in queries/curation.py, m8 in
-# queries/media.py — never measured) lead or sit with their family,
-# then the 26 entries whose last driver row is r10 (the r11 tail —
-# graph/relational/semantics/windows; r11∪r12 must cover the catalog),
-# then the media family (operators/multimodal.py gains real JPEG pixel
-# decode + the GIF walk this round, so every media entry's chain
-# changes and must re-measure), then the dedup/decontamination family
-# and floor-critical pipeline entries (operators/dedup.py changed this
-# round).  To make room for c13/c14/m8 inside the 50-row window,
-# s2_ivf_topk and c5_domain_cap moved to the tail (r11-green, operator
-# modules unchanged); t8_quality_quantile initially moved with them but
-# rotated back IN mid-r12 when its quality_quantile_filter gained the
-# scored-frame localCheckpoint (d1/d3 moved out instead — see
-# _EMIT_LAST).  NOTE to driver maintainers: the emitter
-# should assert emitted-row count == len(all_oracles()) instead of
-# relying on this ordering.
-_EMIT_FIRST = (
-    # round-12 additions: first-ever driver rows
-    "c13_canonical_selection",
-    "c14_span_redaction",
-    # 26 rotated in: last driver row r10 (r11∪r12 covers the catalog)
-    "a1_meta_kg",
-    "g2_subclass_closure",
-    "j11_batch_neighbors",
-    "j2_one_hop_lookup",
-    "j5_subclass_expanded_lookup",
-    "a1_pricing_summary",
-    "a6_conditional_grouping",
-    "f1_event_type_stats",
-    "f5_top_orders",
-    "j11_order_parts",
-    "j1_customers_without_orders",
-    "j2_region_revenue",
-    "j3_doubly_pinned",
-    "a2_test_triples",
-    "a3_meta_nodes",
-    "a6_result_groups",
-    "f3_constrained_lookup",
-    "f4_symmetric_lookup",
-    "j3_trapi_doubly_pinned",
-    "j4_alias_lookup",
-    "j8_qualified_lookup",
-    "r5_single_node_lookup",
-    "j12_asof_last_order",
-    "w1_sessionize",
-    "w2_rollup_orders",
-    # s6's implementation changed this round (r12 optimization: the 16
-    # interpreted zip_with/aggregate folds became one Arrow matmul), so
-    # it takes a window slot for a fresh driver row; w3_value_deltas
-    # moved to the tail to make room (queries/windows.py untouched this
-    # round, r10-green, chain content-pinned).
-    "s6_signed_projection",
-    # media family: operators/multimodal.py chain changes this round
-    # (JPEG pixel decode for the m1/m3 consumers)
-    "m1_media_features",
-    "m2_frame_samples",
-    "m3_resize_dims",
-    "m4_audio_metadata",
-    "m5_flac_metadata",
-    "m6_mp3_metadata",
-    "m7_jpeg_metadata",
-    "m8_gif_metadata",
-    # dedup/decontamination + floor-critical pipeline entries
-    # (operators/dedup.py changed this round).  c2/t8 rotated IN mid-r12:
-    # their executed code changed in this optimization round (c2's gram
-    # path became exploded_word_grams; t8's quality_quantile_filter
-    # gained the scored-frame localCheckpoint), so each needs a fresh
-    # r12 driver row; d1_exact_dedup and d3_simhash moved to the tail to
-    # make room — both r11-green, and the functions they execute
-    # (exact_dedup, simhash) are byte-unchanged this round.
-    "c2_decontamination",
-    "t8_quality_quantile",
-    # a2_first_order_per_customer rotated IN mid-r12: its executed code
-    # changed in this optimization round (row_number window -> min_by
-    # hash aggregation), so it needs a fresh r12 driver row;
-    # d4_ngram_jaccard moved to the tail to make room (r11-green, and
-    # the function it executes — ngram_jaccard — is byte-unchanged this
-    # round; its dedup.py chain is consciously re-pinned like the
-    # s2/s3/s5 tail callers).
-    "a2_first_order_per_customer",
-    "d2_minhash_lsh_pairs",
-    "d5_embedding_neardup",
-    "d6_dup_groups",
-    "d7_edit_distance_verify",
-    "c8_bloom_decontamination",
-    "c10_lsh_decontamination",
-    "c12_token_window_decontamination",
-    "s1_cosine_topk",
-    "s4_ivf_recall",
-    "c7_training_mix",
-    # c1 rotated IN mid-r12: its implementation changed in this
-    # optimization round (single-pass min_by rewrite — one corpus scan
-    # instead of two), so it needs a fresh r12 driver row;
-    # j10_edges_between_pairs moved to the tail to make room (r11-green
-    # `j10_edges_between_pairs` row, query/response.py untouched this
-    # round).
-    "c1_clean_corpus",
-)
-
-
-# Emitted LAST: when the driver's 50-row cap truncates the catalog,
-# these are the safest rows to lose (their last green row still
-# describes the current code).  Entries exercising this round's changed
-# modules must stay inside the emitted window.
-_EMIT_LAST = (
-    # exactly (catalog - 50) entries: 79-entry catalog minus the driver's
-    # 50-row cap, so the drop set is EXPLICIT, not whatever registration
-    # order leaves last.  Every entry here has a green DRIVER row in
-    # CORRECTNESS_r11 — including s2_ivf_topk / c5_domain_cap (demoted
-    # this round to make window room for c13/c14/m8) and d1_exact_dedup /
-    # d3_simhash (demoted mid-r12 so the optimization-changed c2/t8 get
-    # fresh rows); the functions these four execute (ivf/kmeans in
-    # similarity.py, cap_per_domain in packing.py, exact_dedup and
-    # simhash in dedup.py) are unchanged in round 12.  text.py's
-    # quality_quantile_filter and tfidf_topk DID change or were A/B'd
-    # mid-r12: quality_quantile_filter gained the scored-frame
-    # localCheckpoint (its executor t8 sits in _EMIT_FIRST); tfidf_topk
-    # is byte-unchanged (the tf-checkpoint variant was measured a wash
-    # and reverted), so t9's pinned chain still describes measured
-    # code.  Executed-code provenance for the round-12
-    # changes (api.py 503-shedding queue-lock read — not in any catalog
-    # chain; scalebench.py / bench.py — harness scripts outside the
-    # package; operators/multimodal.py JPEG pixel decode — media entries
-    # all rotated into _EMIT_FIRST, and no tail chain imports it): the
-    # relational entries register in queries/relational.py and the
-    # p4/p6/p7/a4 entries in queries/semantics.py, both unchanged; the
-    # t/s/c entries register in queries/pipeline.py, whose chain
-    # includes operators/dedup.py and operators/similarity.py — both DID
-    # change this round (r12 optimization: lsh_candidate_pairs gained
-    # the star form + double-Generate pair explode;
-    # signed_random_projection became one Arrow matmul) and are
-    # consciously re-pinned: every entry EXECUTING a changed function
-    # (d2/d6/d7/c10/c12, s6, and mid-r12 c2/c8/t8/c1) sits in
-    # _EMIT_FIRST for a fresh r12 row; the tail callers into these
-    # modules (s2/s3/s5's ivf/kmeans/cosine fns, t9's tfidf_topk, and
-    # the t1-t10 text entries — text.py's text_features gained an
-    # extra_cols passthrough for c1, but token_counts/quality_scores/
-    # language_id and every other tail-executed text function are
-    # byte-unchanged) execute only unchanged functions.
-    # tests/test_emission_rotation.py pins each entry's full transitive
-    # module chain by content hash; any unpinned change to a chain module
-    # fails that test loudly instead of silently staling a tail row.
-    "set_ops_customers",
-    # d4 demoted mid-r12 (swap with a2_first_order_per_customer, whose
-    # executed code changed to the min_by form): r11-green driver row;
-    # ngram_jaccard and d4's registration are byte-unchanged this round
-    # (the pruned-tokset variant was measured SLOWER and rejected), so
-    # its last green row still describes the executed code.  Its chain
-    # includes the r12-changed dedup.py/relational.py/windows.py —
-    # consciously re-pinned: the tail's executed functions there
-    # (ngram_jaccard; set_ops/a3_segment's relational registrations;
-    # w3_value_deltas) are all byte-unchanged, while the entries whose
-    # executed code DID change (a2 min_by, j12 max_by) sit in
-    # _EMIT_FIRST for fresh r12 rows.
-    "d4_ngram_jaccard",
-    "a3_segment_nations",
-    "d1_exact_dedup",
-    "d3_simhash",
-    "t1_token_counts",
-    "t2_quality_scores",
-    "t3_language_id",
-    "t4_fingerprints",
-    "t5_pii_scan",
-    "t6_repetition_scores",
-    "t7_vocab_topk",
-    "t9_tfidf_topk",
-    "t10_pii_redaction",
-    "s3_kmeans_cells",
-    "s5_ivf_multiprobe",
-    "w3_value_deltas",
-    # j10 demoted mid-r12 (swap with c1_clean_corpus, whose executed
-    # code changed): r11-green driver row, and its chain
-    # (query/response.py get_edges) is untouched this round.
-    "j10_edges_between_pairs",
-    "c3_sequence_packing",
-    "c4_stratified_sample",
-    "c6_embedding_quantization",
-    "c9_temperature_mixture",
-    "c11_doc_chunking",
-    "p4_zip_roundtrip",
-    "p6_most_specific_categories",
-    "p7_canonical_flip",
-    "a4_normalize_merge",
-    "s2_ivf_topk",
-    "c5_domain_cap",
-)
-
-
-def _ordered() -> list[str]:
-    head = [n for n in _EMIT_FIRST if n in _REGISTRY]
-    tail = [n for n in _EMIT_LAST if n in _REGISTRY]
-    pinned = set(head) | set(tail)
-    return head + [n for n in _REGISTRY if n not in pinned] + tail
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query, in registration order."""
     _ensure_loaded()
-    return {name: _REGISTRY[name].fn for name in _ordered()}
+    return {name: spec.fn for name, spec in _REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
+    """Every oracle SQL string, keyed like ``all_queries()``."""
     _ensure_loaded()
     return {
-        name: _REGISTRY[name].oracle
-        for name in _ordered()
-        if _REGISTRY[name].oracle is not None
+        name: spec.oracle
+        for name, spec in _REGISTRY.items()
+        if spec.oracle is not None
     }
 
 

@@ -2,10 +2,6 @@
 canonical selection over duplicate clusters, and surgical span redaction
 over token-window decontamination output.
 
-Split into its own registration module (like queries/media.py) so the
-emission-window rotation's transitive provenance stays precise: these are
-the only catalog entries importing operators/curation.py.
-
 Oracle determinism follows the pipeline.py rules: md5 is the shared
 deterministic hash; the c13 quality ordering uses the RAW composite
 score, which is bit-identical between Spark and DuckDB (same

@@ -26,6 +26,7 @@ from ploverdb_spark.build.ingest import build_knowledge_graph
 from ploverdb_spark.functions.localdf import tiny_df
 from ploverdb_spark.catalog import load, register
 from ploverdb_spark.query.compiler import TrapiEngine
+from ploverdb_spark.query.response import edges_between
 from ploverdb_spark.sources.kgx import KgxConfig
 
 # ---------------------------------------------------------------------------
@@ -299,7 +300,8 @@ def j5_subclass_expanded_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="/edges pairwise lookup, vectorized (SURVEY §2.3 J10; replaces the "
     "reference's per-pair loop, plover.py:1934-1980): one join over all "
-    "pairs, both orientations.",
+    "pairs, both orientations, through the same edges_between join as "
+    "/edges.",
 )
 def j10_edges_between_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng = graft_engine(spark, sf_dir)
@@ -308,16 +310,7 @@ def j10_edges_between_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("C:"), F.col("c_custkey").cast("string")).alias("node_a"),
         F.concat(F.lit("N:"), F.col("c_nationkey").cast("string")).alias("node_b"),
     )
-    e = eng.kg.edges
-    fwd = e.join(
-        F.broadcast(pairs),
-        (e.subject == pairs.node_a) & (e.object == pairs.node_b),
-    )
-    rev = e.join(
-        F.broadcast(pairs),
-        (e.subject == pairs.node_b) & (e.object == pairs.node_a),
-    )
-    return fwd.unionByName(rev).select(
+    return edges_between(eng, pairs, []).select(
         "node_a", "node_b", F.col("id").alias("edge_id")
     )
 

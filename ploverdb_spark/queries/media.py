@@ -1,13 +1,6 @@
 """Multimodal (image/audio/video) catalog entries: media payloads as
 opaque binary columns decoded through Arrow-batched ``mapInPandas``.
 
-Split out of queries/pipeline.py in round 8 so that the emission-window
-rotation's *transitive module provenance* stays precise: these four
-wrappers are the only catalog entries importing operators/multimodal.py
-and operators/audio.py, so a change to either codec module taints exactly
-this registration module — not the 34 text/dedup/similarity/packing
-entries that share pipeline.py.
-
 The fake decode derives every feature from md5/sha256 of the utf-8
 payload, which DuckDB recomputes exactly (strings are utf-8, so
 md5(text) == md5(bytes)); real PNG/BMP/WAV walks run where the container

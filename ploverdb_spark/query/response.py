@@ -674,18 +674,13 @@ def _run_single_node_query(engine: TrapiEngine, qg: dict) -> dict:
     return _envelope(qg, nodes, {}, results)
 
 
-def get_edges(engine: TrapiEngine, pairs: list[list[str]]) -> dict:
-    """POST /edges (J10, plover.py:1934-1980) — vectorized: one join for
-    all pairs instead of the reference's per-pair loop.  No subclass
-    reasoning, by design (plover.py:1936-1938)."""
-    flat_ids = sorted({i for p in pairs for i in p})
-    canon = engine.canonicalize_ids(flat_ids)
-    pairs_df = tiny_df(
-        engine.spark,
-        [(canon.get(a, a), canon.get(b, b), a, b) for a, b in pairs],
-        "node_a string, node_b string, orig_a string, orig_b string",
-    )
-    canon_ids = sorted({canon.get(i, i) for i in flat_ids})
+def edges_between(
+    engine: TrapiEngine, pairs_df: DataFrame, canon_ids: list[str]
+) -> DataFrame:
+    """Edges joining a ``(node_a, node_b)`` pair of ``pairs_df`` in either
+    orientation, with ``pairs_df``'s columns alongside the edge columns.
+    ``canon_ids`` is the sorted set of pair node ids, pushed into the edge
+    scan when the KG supports it (empty: no pushdown)."""
     e = engine.kg.edges
     if (
         engine.kg.pruned_id_scans
@@ -714,7 +709,24 @@ def get_edges(engine: TrapiEngine, pairs: list[list[str]]) -> dict:
         F.broadcast(pairs_df),
         (e.subject == pairs_df.node_b) & (e.object == pairs_df.node_a),
     )
-    hits = fwd.unionByName(rev).select("orig_a", "orig_b", *e.columns)
+    return fwd.unionByName(rev)
+
+
+def get_edges(engine: TrapiEngine, pairs: list[list[str]]) -> dict:
+    """POST /edges (J10, plover.py:1934-1980) — vectorized: one join for
+    all pairs instead of the reference's per-pair loop.  No subclass
+    reasoning, by design (plover.py:1936-1938)."""
+    flat_ids = sorted({i for p in pairs for i in p})
+    canon = engine.canonicalize_ids(flat_ids)
+    pairs_df = tiny_df(
+        engine.spark,
+        [(canon.get(a, a), canon.get(b, b), a, b) for a, b in pairs],
+        "node_a string, node_b string, orig_a string, orig_b string",
+    )
+    canon_ids = sorted({canon.get(i, i) for i in flat_ids})
+    hits = edges_between(engine, pairs_df, canon_ids).select(
+        "orig_a", "orig_b", *engine.kg.edges.columns
+    )
     shells = attribute_shells_for(engine.kg.config)
     pairs_to_edge_ids: dict[str, list[str]] = {f"{a}--{b}": [] for a, b in pairs}
     kg_edges: dict[str, dict] = {}

@@ -49,30 +49,73 @@ def test_multiprobe_recall_monotone(spark):
     assert any(r.recall_p3 > r.recall_p1 for r in rows)
 
 
-def test_emission_drop_set_is_exactly_the_pinned_tail():
-    """The driver emits at most DRIVER_EMIT_CAP correctness rows; the
-    entries that fall off MUST be exactly the deliberately-pinned
-    _EMIT_LAST tail — growing the catalog without growing the tail would
-    otherwise silently push an unpinned entry out of the correctness
-    window."""
-    from ploverdb_spark.catalog import (
-        DRIVER_EMIT_CAP,
-        _EMIT_FIRST,
-        _EMIT_LAST,
-        all_oracles,
-        all_queries,
+# The correctness driver records at most this many rows per round.
+DRIVER_ROWS = 50
+
+
+def _committed_correctness():
+    import glob
+    import os
+
+    import __spark_entry__ as e
+
+    return sorted(glob.glob(os.path.join(e._HERE, "CORRECTNESS_r*.json")))
+
+
+def test_queries_and_oracles_share_one_order():
+    import __spark_entry__ as e
+
+    names = list(e.queries())
+    assert list(e.oracle_sql()) == names
+    assert len(set(names)) == len(names)
+    assert set(names) == set(all_queries())
+
+
+def test_two_rounds_cover_the_catalog(tmp_path):
+    """Each round the driver measures the first DRIVER_ROWS entries and
+    writes CORRECTNESS_r{N}.json; the next round's order must put the
+    entries it skipped first, so two consecutive rounds cover everything."""
+    import json
+    import re
+    import shutil
+
+    import __spark_entry__ as e
+
+    seeds = _committed_correctness()
+    for path in seeds:
+        shutil.copy(path, tmp_path)
+    rnd = max(
+        (int(re.search(r"CORRECTNESS_r(\d+)\.json$", p).group(1)) for p in seeds),
+        default=0,
     )
+    names = list(all_queries())
+    emitted = set()
+    for _ in range(2):
+        rnd += 1
+        window = e.least_recently_measured_first(names, str(tmp_path))[:DRIVER_ROWS]
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({n: {} for n in window})
+        )
+        emitted |= set(window)
+    assert emitted == set(names), sorted(set(names) - emitted)
+
+
+def test_measured_entries_stay_registered():
+    """The catalog cannot shrink: every entry the driver ever measured is
+    still registered with an oracle."""
+    import json
+
+    measured = set()
+    for path in _committed_correctness():
+        with open(path, encoding="utf-8") as f:
+            measured |= set(json.load(f))
+    assert measured, "no committed CORRECTNESS_r*.json found"
+    missing = measured - set(all_oracles())
+    assert not missing, sorted(missing)
+
+
+def test_fresh_checkout_keeps_registration_order(tmp_path):
+    import __spark_entry__ as e
 
     names = list(all_queries())
-    assert list(all_oracles()) == names  # same order, fully oracle-backed
-    assert len(set(names)) == len(names)
-    assert set(_EMIT_FIRST).isdisjoint(_EMIT_LAST)
-    overflow = names[DRIVER_EMIT_CAP:]
-    assert set(overflow) == set(_EMIT_LAST), (
-        f"catalog has {len(names)} entries but the pinned tail has "
-        f"{len(_EMIT_LAST)} — the drop set would include unpinned "
-        f"entries: {sorted(set(overflow) - set(_EMIT_LAST))}"
-    )
-    # every head pin must exist (a typo here silently unpins an entry)
-    registered = set(names)
-    assert set(_EMIT_FIRST) <= registered and set(_EMIT_LAST) <= registered
+    assert e.least_recently_measured_first(names, str(tmp_path)) == names

@@ -75,6 +75,28 @@ def engine(spark):
     return TrapiEngine(kg, kp_infores_curie="infores:test-kp")
 
 
+@pytest.fixture(scope="module")
+def int_prop_engine(spark):
+    """Fixture KG whose edges carry a nullable int property, set on e1 and
+    null on e2.  One partition keeps both in one Arrow batch, where pandas
+    widens the column to float64."""
+    nodes = spark.createDataFrame(
+        NODES,
+        "id string, name string, all_categories array<string>, "
+        "equivalent_curies array<string>, publications array<string>",
+    )
+    edges = (
+        spark.createDataFrame(EDGES, EDGE_SCHEMA)
+        .withColumn(
+            "max_research_phase",
+            F.when(F.col("id") == "e1", F.lit(4)).cast("int"),
+        )
+        .coalesce(1)
+    )
+    kg = build_knowledge_graph(nodes, edges, KgxConfig()).persist()
+    return TrapiEngine(kg, kp_infores_curie="infores:test-kp")
+
+
 def one_hop(subj_spec, obj_spec, pred=None, qualifier_constraints=None, attribute_constraints=None):
     qedge = {"subject": "n00", "object": "n01"}
     if pred is not None:
@@ -256,7 +278,8 @@ def test_hydrate_distributed_serializer_parity(request):
     """The executor-side (mapInPandas JSON) serializer and the driver-side
     one must produce byte-identical TRAPI nodes and edges from the same
     answers: big and small answers differ only in where they serialize.
-    numeric_id_engine covers long-typed edge ids, keyed as strings."""
+    numeric_id_engine covers long-typed edge ids, keyed as strings;
+    int_prop_engine an integral property that is null on some edges."""
     import json
 
     import ploverdb_spark.query.response as R
@@ -264,7 +287,7 @@ def test_hydrate_distributed_serializer_parity(request):
     def as_json(kg):
         return {k: json.dumps(v) for k, v in kg.items()}
 
-    for name in ("engine", "numeric_id_engine"):
+    for name in ("engine", "numeric_id_engine", "int_prop_engine"):
         eng = request.getfixturevalue(name)
         _, answers = eng.lookup(one_hop({"ids": ["CHEM:1"]}, {}))
         try:
