@@ -49,6 +49,27 @@ DEFAULT_BACKLOG = 512  # parity with uwsgi.ini:33 (nginx listen backlog)
 _query_seq = itertools.count()
 
 
+# FAIR scheduler pool names, recycled.  Spark creates a pool for every
+# new name and never removes one, so a fresh name per request grew the
+# scheduler's pool list without bound (8002 pools after 8000 queries; a
+# 4-task job's p50 rose from 28 ms at 3k pools to 44 ms at 8k).  A name is
+# freed when its request's thread ends, so a timed-out query's pool is not
+# shared while its jobs are cancelled; pools then number the peak
+# concurrency.
+_free_pools: list[str] = []
+_pools_lock = threading.Lock()
+
+
+def _take_pool() -> str:
+    with _pools_lock:
+        return _free_pools.pop() if _free_pools else f"trapi-pool-{next(_query_seq)}"
+
+
+def _give_pool(name: str) -> None:
+    with _pools_lock:
+        _free_pools.append(name)
+
+
 def run_query_with_timeout(
     engine: TrapiEngine, query: dict, timeout_sec: float = DEFAULT_QUERY_TIMEOUT_SEC
 ) -> dict:
@@ -64,14 +85,15 @@ def run_query_with_timeout(
 
     def target() -> None:
         sc.setJobGroup(group, "TRAPI query", interruptOnCancel=True)
-        # One FAIR pool per query: with spark.scheduler.mode=FAIR, jobs
-        # inside a single pool still run FIFO — a burst's jobs all land in
-        # the default pool and serialize behind each other (measured: the
-        # burst wall tracked the FIFO queue, mass-504ing the tail).
-        # Distinct (ad-hoc) pools share the cluster fairly, so every
+        # One FAIR pool per in-flight query: with spark.scheduler.mode=FAIR,
+        # jobs inside a single pool still run FIFO — a burst's jobs all
+        # land in the default pool and serialize behind each other
+        # (measured: the burst wall tracked the FIFO queue, mass-504ing
+        # the tail).  Distinct pools share the cluster fairly, so every
         # in-flight query makes progress and the harakiri clock measures
         # its own work.
-        sc.setLocalProperty("spark.scheduler.pool", group)
+        pool = _take_pool()
+        sc.setLocalProperty("spark.scheduler.pool", pool)
         try:
             out["body"] = run_query(engine, query)
         except BaseException as e:  # noqa: BLE001 — relayed to caller
@@ -82,6 +104,7 @@ def run_query_with_timeout(
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.interruptOnCancel", None)
             sc.setLocalProperty("spark.scheduler.pool", None)
+            _give_pool(pool)
 
     t = threading.Thread(target=target, daemon=True)
     t.start()
@@ -100,11 +123,13 @@ def _request_pool(engine: TrapiEngine):
     """Per-request FAIR scheduler pool (see run_query_with_timeout's pool
     note) for Spark-heavy endpoints served on the request thread."""
     sc = engine.spark.sparkContext
-    sc.setLocalProperty("spark.scheduler.pool", f"req-{next(_query_seq)}")
+    pool = _take_pool()
+    sc.setLocalProperty("spark.scheduler.pool", pool)
     try:
         yield
     finally:
         sc.setLocalProperty("spark.scheduler.pool", None)
+        _give_pool(pool)
 
 
 LOG_TAIL_MAX = 2000  # parity with main.py:635 (num_lines clamp 1..2000)
@@ -487,7 +512,7 @@ include:
 
 def _proc_memory(include_pss: bool = False) -> dict:
     """Driver-process memory from /proc (reference /debug,
-    main.py:285-567: RSS always, PSS opt-in because smaps_rollup walks
+    main.py:285-567: RSS and its peak always, PSS opt-in because smaps_rollup walks
     every VMA).  Returns {} on non-Linux."""
     out: dict[str, Any] = {}
     try:
@@ -495,6 +520,8 @@ def _proc_memory(include_pss: bool = False) -> dict:
             for line in f:
                 if line.startswith("VmRSS:"):
                     out["rss_kb"] = int(line.split()[1])
+                elif line.startswith("VmHWM:"):  # peak RSS
+                    out["hwm_kb"] = int(line.split()[1])
                 elif line.startswith("VmSize:"):
                     out["vms_kb"] = int(line.split()[1])
     except OSError:
@@ -549,6 +576,13 @@ def _debug_payload(registry: KpRegistry, payload: dict) -> dict:
             "cached_tables": cached,
         },
         "endpoints": sorted(registry._engines),
+        # per endpoint whose graph index is built: its resident bytes and
+        # edge and node counts (absent when the KG is over the guard)
+        "driver_index": {
+            name: stats
+            for name, eng in sorted(registry._engines.items())
+            if (stats := eng.index_stats()) is not None
+        },
     }
 
 
@@ -596,7 +630,7 @@ def _rebuild(registry: KpRegistry, payload: dict, endpoint: str | None) -> dict:
             kg,
             kp_infores_curie=old.kp_infores_curie,
             answer_cutoff=config.num_edges_per_answer_cutoff,
-        )
+        ).warmup(parallel=True)
         if payload.get("artifacts_dir"):
             write_artifacts(kg, payload["artifacts_dir"])
     except Exception as e:  # noqa: BLE001 — reference 500s on any rebuild
@@ -706,10 +740,16 @@ def handle(
         if path == "query":
             eng = registry.engine(endpoint)
             t0 = _time.time()
-            with registry.admission():
-                body = run_query_with_timeout(
-                    eng, payload, timeout_sec=registry.query_timeout_sec
-                )
+            # A query the driver index answers runs no Spark job: it is
+            # served here, with no query thread, job group, pool or
+            # admission slot, and stays out of the latency estimate that
+            # describes Spark-heavy requests.
+            body = run_query(eng, payload, spark=False)
+            if body is None:
+                with registry.admission():
+                    body = run_query_with_timeout(
+                        eng, payload, timeout_sec=registry.query_timeout_sec
+                    )
             # /debug/last per-query stats (reference main.py:554-568 keeps
             # the most recent snapshot; here the most useful "last" signal
             # is what the last query did and cost)

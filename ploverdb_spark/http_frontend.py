@@ -8,9 +8,10 @@ default-endpoint fallback) and delegates every route to ``api.handle`` —
 the dispatcher stays the single source of endpoint semantics, so anything
 tested against ``handle`` behaves identically over HTTP.
 
-Threading matches the engine's serving stance: each request thread drives
-its own Spark job group under the FAIR scheduler (api.py), so a burst of
-requests shares the session without FIFO starvation.  Production
+Threading matches the engine's serving stance: each connection gets a
+thread, and a request that needs Spark drives its own job group under the
+FAIR scheduler (api.py), so a burst of requests shares the session
+without FIFO starvation.  Production
 deployments that want uvicorn/gunicorn semantics can mount ``handle``
 behind any framework in a few lines; nothing here is load-bearing beyond
 routing.
@@ -64,6 +65,10 @@ def _route(registry: KpRegistry, raw_path: str) -> tuple[str | None, str]:
 
 class _Handler(BaseHTTPRequestHandler):
     registry: KpRegistry  # set by serve()
+    # persistent connections: a client's requests share one handler
+    # thread instead of a TCP connect and a thread each
+    protocol_version = "HTTP/1.1"
+    disable_nagle_algorithm = True
 
     def log_message(self, fmt: str, *args: Any) -> None:  # quiet by default
         pass

@@ -35,6 +35,7 @@ from ploverdb_spark.build.ingest import DIR_FORWARD, DIR_REVERSE, KnowledgeGraph
 from ploverdb_spark.functions.localdf import tiny_df
 from ploverdb_spark.functions.predicates import in_predicate
 from ploverdb_spark.query.constraints import apply_attribute_constraints
+from ploverdb_spark.query.index import DriverIndex, GraphIndex
 
 SUPPORTED_QUALIFIERS = {
     "biolink:qualified_predicate",
@@ -64,6 +65,17 @@ class CompiledQEdge:
     output_categories: list[str] = dc_field(default_factory=list)
     output_ids: list[str] | None = None
     attribute_constraints: list[dict] = dc_field(default_factory=list)
+    # the compile step's driver-side plan: canonical pinned ids, their
+    # (query_id, node_id) subclass pairs (None when the closure is over
+    # the driver-map guard), vocab-pruned filters and their skip flags
+    input_ids: list[str] = dc_field(default_factory=list)
+    input_pairs: list[tuple[str, str]] | None = None
+    output_canonical_ids: list[str] | None = None
+    output_pairs: list[tuple[str, str]] | None = None
+    required_direction: int = DIR_FORWARD
+    skip_predicate_filter: bool = False
+    categories: list[str] = dc_field(default_factory=list)
+    skip_category_filter: bool = False
 
 
 def _as_list(v) -> list:
@@ -113,13 +125,14 @@ def pushdown_id_filter(df: DataFrame, col_name: str, ids) -> DataFrame:
 class TrapiEngine:
     """Serves TRAPI one-hop / edgeless queries over a KnowledgeGraph."""
 
-    # Size guard for driver-resident closure/synonym maps (SURVEY §7:
+    # Size guard for the driver index (query/index.py; SURVEY §7:
     # "closures/synonyms are the only broadcast-sized artifacts, and each
-    # needs a size guard + shuffle-join fallback").  Below the guard the
-    # engine keeps them as plain dicts — id canonicalization and subclass
-    # expansion then cost zero Spark actions per query, which is what makes
-    # one-hop latency interactive (the reference holds the same maps in
-    # process memory, plover.py:692-695).  Above it, distributed joins.
+    # needs a size guard + shuffle-join fallback").  Below the guard id
+    # canonicalization and subclass expansion cost zero Spark actions per
+    # query, and a KG whose nodes and edges fit too answers pinned one-hop
+    # and node lookups with no Spark job at all (the reference holds the
+    # same maps in process memory, plover.py:692-695).  Above it,
+    # distributed joins.
     DRIVER_MAP_MAX_ROWS = 2_000_000
 
     _UNSET = object()  # sentinel: answer_cutoff=None means "no cutoff"
@@ -146,70 +159,25 @@ class TrapiEngine:
             if driver_map_max_rows is not None
             else self.DRIVER_MAP_MAX_ROWS
         )
-        # False = not yet decided; None = too big, use join fallback
-        self._synonym_map: dict[str, str] | None | bool = False
-        self._closure_map: dict[str, list[str]] | None | bool = False
+        # synonym and closure lookups plus the graph index, each built
+        # once under the index's lock and only below the size guard
+        self._index = DriverIndex(kg, self._driver_map_max_rows)
         self._kg_vocab: dict | None = None
-        # Builds are serialized PER STRUCTURE: without a lock, the first
-        # burst of concurrent queries each re-collects the (up to
-        # 2M-row) maps — measured as minutes of redundant driver work at
-        # reference scale.  One lock per structure (not one shared) so a
-        # parallel warmup can build all four concurrently; the
-        # no-redundant-build guarantee is per-map, which is all it ever
-        # protected.
-        self._syn_lock = threading.Lock()
-        self._clo_lock = threading.Lock()
+        # One lock per remaining structure, so a parallel warmup builds
+        # the index, the vocab and the conglomerate index concurrently;
+        # without locks the first burst of concurrent queries would each
+        # rebuild them (minutes of redundant driver work at scale).
         self._vocab_lock = threading.Lock()
         self._congl_lock = threading.Lock()
 
-    @staticmethod
-    def _collect_two_columns(df: DataFrame, c1: str, c2: str):
-        """Arrow-batched two-column collect: orders of magnitude faster
-        than row-wise py4j collect() for the million-row driver maps."""
-        tbl = df.select(c1, c2).toArrow()
-        return zip(tbl.column(c1).to_pylist(), tbl.column(c2).to_pylist())
-
-    def _get_synonym_map(self) -> dict[str, str] | None:
-        with self._syn_lock:
-            if self._synonym_map is False:
-                syn = self.kg.id_synonyms
-                if (
-                    syn.limit(self._driver_map_max_rows + 1).count()
-                    <= self._driver_map_max_rows
-                ):
-                    self._synonym_map = dict(
-                        self._collect_two_columns(syn, "alias_id", "preferred_id")
-                    )
-                else:
-                    self._synonym_map = None
-        return self._synonym_map
-
-    def _get_closure_map(self) -> dict[str, list[str]] | None:
-        with self._clo_lock:
-            if self._closure_map is False:
-                clo = self.kg.subclass_closure
-                if (
-                    clo.limit(self._driver_map_max_rows + 1).count()
-                    <= self._driver_map_max_rows
-                ):
-                    m: dict[str, list[str]] = {}
-                    for anc, desc in self._collect_two_columns(
-                        clo, "ancestor", "descendant"
-                    ):
-                        m.setdefault(anc, []).append(desc)
-                    self._closure_map = m
-                else:
-                    self._closure_map = None
-        return self._closure_map
-
     def warmup(self, parallel: bool = False) -> "TrapiEngine":
-        """Eagerly build every driver-resident structure (synonym map,
-        closure map, conglomerate index, KG vocab) — the Spark analog of
+        """Eagerly build every driver-resident structure (the driver
+        index, conglomerate index, KG vocab) — the Spark analog of
         the reference's startup ``load_indexes`` (plover.py:1384-1422).
         Serving deployments call this before taking traffic so the first
         concurrent burst doesn't pay the builds inline.
 
-        ``parallel=True`` builds the four structures concurrently, each
+        ``parallel=True`` builds the three structures concurrently, each
         in its own FAIR scheduler pool (round-11 warm-up profiling: the
         four sequential builds cost ~25-40 s at 7M/30M scale, dominated
         by the vocab scan and the closure collect — independent
@@ -217,8 +185,7 @@ class TrapiEngine:
         free wall-clock).  Sequential by default: unit tests and
         ad-hoc callers keep deterministic job ordering."""
         builders = (
-            self._get_synonym_map,
-            self._get_closure_map,
+            self._index.build,
             self._conglomerate_descendant_index,
             self._get_kg_vocab,
         )
@@ -243,6 +210,23 @@ class TrapiEngine:
             # list() propagates the first builder exception, if any
             list(pool.map(run, builders))
         return self
+
+    def graph_index(self, build: bool = True) -> GraphIndex | None:
+        """The driver-resident graph index when it, the synonym and
+        closure lookups, the vocab and the conglomerate index are all
+        built and under the guard: then a query compiles and answers on
+        the driver alone.  Else None.  ``build=True`` first builds what
+        is missing; ``build=False`` never runs a Spark job."""
+        if build:
+            self.warmup()
+        if self._kg_vocab is None or self._conglomerate_index is None:
+            return None
+        return self._index.ready()
+
+    def index_stats(self) -> dict | None:
+        """Resident bytes, edge and node counts of the built graph index;
+        None when it is not built or the KG is over the guard."""
+        return self._index.stats()
 
     # ------------------------------------------------------------------
     # driver-side query compilation (R1-R6)
@@ -276,9 +260,9 @@ class TrapiEngine:
         stream the synonym table once."""
         if not ids:
             return {}
-        syn_map = self._get_synonym_map()
-        if syn_map is not None:
-            return {i: syn_map.get(i, i) for i in ids}
+        synonyms = self._index.synonyms()
+        if synonyms is not None:
+            return {i: next(iter(synonyms.get(i)), i) for i in ids}
         syn = self.kg.id_synonyms
         if len(ids) <= MAX_ISIN_PUSHDOWN:
             syn = pushdown_id_filter(syn, "alias_id", ids)
@@ -584,12 +568,12 @@ class TrapiEngine:
         explicit list also feeds the scan-pruning id pushdown in
         :meth:`lookup` — only possible when the ids are enumerable on the
         driver."""
-        closure_map = self._get_closure_map()
-        if closure_map is None:
+        closure = self._index.closure()
+        if closure is None:
             return None
         pairs: dict[str, str] = {}
         for qid in sorted(ids):
-            for desc in closure_map.get(qid, []):
+            for desc in closure.get(qid):
                 if desc not in pairs:
                     pairs[desc] = qid
         for qid in ids:
@@ -640,24 +624,11 @@ class TrapiEngine:
             .select("query_id", "node_id")
         )
 
-    def lookup(
-        self,
-        qg: dict,
-        persist_answers: bool = True,
-        enforce_cutoff: bool = True,
-    ) -> tuple[CompiledQEdge, DataFrame]:
-        """Compile + execute the one-hop lookup; returns the compiled edge
-        metadata and the answer-edge DataFrame with columns:
-        edge id + payload, input_id, output_id, input_query_id,
-        output_query_id.
-
-        ``persist_answers=True`` caches the answer set for the multi-pass
-        response assembly (run_query unpersists it).  Single-pass callers
-        should pass False to avoid leaking cache entries.
-        ``enforce_cutoff=False`` skips the F5 answer-size action — for
-        callers whose own first action bounds the answer volume anyway
-        (run_query's fast path) and enforces the cutoff themselves.
-        """
+    def compile(self, qg: dict) -> CompiledQEdge:
+        """The driver-only half of a one-hop lookup: canonical flip (R2),
+        input side (R4), predicate and category expansion pruned to the
+        KG vocab (R3/J6/J8/J7), id canonicalization (R1) and the subclass
+        pairs (J5).  Runs no Spark job while the driver maps fit."""
         qg = self._canonical_qg_flip(qg)
         qedge_key = next(iter(qg["edges"]))
         qedge = qg["edges"][qedge_key]
@@ -703,15 +674,54 @@ class TrapiEngine:
             output_categories=self._expanded_output_categories(qnodes[output_key]),
             output_ids=ids_by_key[output_key] or None,
             attribute_constraints=qedge.get("attribute_constraints", []),
+            required_direction=DIR_FORWARD if input_is_subject else DIR_REVERSE,
+            skip_predicate_filter=skip_pred_filter,
         )
-
         # R1: canonicalize + J5: subclass-expand the pinned side(s)
-        input_ids = list(
-            dict.fromkeys(
-                self.canonicalize_ids(ids_by_key[input_key]).values()
-            )
+        compiled.input_ids = list(
+            dict.fromkeys(self.canonicalize_ids(ids_by_key[input_key]).values())
         )
-        input_pairs = self._expansion_pairs_local(input_ids)
+        compiled.input_pairs = self._expansion_pairs_local(compiled.input_ids)
+        if compiled.output_ids:
+            compiled.output_canonical_ids = list(
+                dict.fromkeys(
+                    self.canonicalize_ids(compiled.output_ids).values()
+                )
+            )
+            compiled.output_pairs = self._expansion_pairs_local(
+                compiled.output_canonical_ids
+            )
+        else:
+            # F1: category filter only when output is unpinned; pruned to
+            # the KG's category vocab (and skipped when it covers it)
+            compiled.categories, compiled.skip_category_filter = (
+                self.prune_category_list(compiled.output_categories)
+            )
+        return compiled
+
+    def lookup(
+        self,
+        qg: dict,
+        persist_answers: bool = True,
+        enforce_cutoff: bool = True,
+        compiled: CompiledQEdge | None = None,
+    ) -> tuple[CompiledQEdge, DataFrame]:
+        """Compile + build the one-hop lookup; returns the compiled edge
+        metadata and the answer-edge DataFrame with columns:
+        edge id + payload, input_id, output_id, input_query_id,
+        output_query_id.
+
+        ``compiled`` is ``compile(qg)`` when the caller already has it.
+        ``persist_answers=True`` caches the answer set for the multi-pass
+        response assembly (run_query unpersists it).  Single-pass callers
+        should pass False to avoid leaking cache entries.
+        ``enforce_cutoff=False`` skips the F5 answer-size action — for
+        callers whose own first action bounds the answer volume anyway
+        (run_query's fast path) and enforces the cutoff themselves.
+        """
+        if compiled is None:
+            compiled = self.compile(qg)
+        input_pairs = compiled.input_pairs
         if input_pairs is not None:
             # the single-pair case never materializes a tiny DF (see below)
             input_df = (
@@ -722,7 +732,9 @@ class TrapiEngine:
                 )
             )
         else:
-            input_df = self.expand_with_subclasses(input_key, input_ids)
+            input_df = self.expand_with_subclasses(
+                compiled.input_qnode_key, compiled.input_ids
+            )
 
         bidir = self.kg.edges_bidir
         single_input = input_pairs is not None and len(input_pairs) == 1
@@ -739,8 +751,12 @@ class TrapiEngine:
             bidir = pushdown_id_filter(
                 bidir, "node_id", [n for _, n in input_pairs]
             )
-        match_col = "conglomerate_predicate" if use_congl else "predicate"
-        required_dir = DIR_FORWARD if input_is_subject else DIR_REVERSE
+        match_col = (
+            "conglomerate_predicate" if compiled.use_conglomerate else "predicate"
+        )
+        directed = compiled.directed_predicates
+        bidirectional = compiled.bidirectional_predicates
+        skip_pred_filter = compiled.skip_predicate_filter
 
         if not directed and not bidirectional:
             # e.g. qualifier combo with no matching conglomerate predicate
@@ -767,7 +783,7 @@ class TrapiEngine:
         if directed and not skip_pred_filter:
             pred_filter = pred_filter | (
                 in_predicate(match_col, sorted(directed))
-                & (F.col("direction") == required_dir)
+                & (F.col("direction") == compiled.required_direction)
             )
 
         if single_input:
@@ -794,12 +810,7 @@ class TrapiEngine:
             ).where(pred_filter)
 
         if compiled.output_ids:
-            out_ids = list(
-                dict.fromkeys(
-                    self.canonicalize_ids(compiled.output_ids).values()
-                )
-            )
-            out_pairs = self._expansion_pairs_local(out_ids)
+            out_pairs = compiled.output_pairs
             if out_pairs is not None and len(out_pairs) == 1:
                 # mirror of the single-input fast shape
                 oqid, onid = out_pairs[0]
@@ -817,7 +828,7 @@ class TrapiEngine:
                         )
                 else:
                     output_df = self.expand_with_subclasses(
-                        output_key, out_ids
+                        compiled.output_qnode_key, compiled.output_canonical_ids
                     )
                 matched = matched.join(
                     F.broadcast(
@@ -829,16 +840,11 @@ class TrapiEngine:
                     on="neighbor_id",
                 )
         else:
-            # F1: category filter only when output is unpinned; pruned to
-            # the KG's category vocab (and skipped when it covers it)
-            cats, skip_cat_filter = self.prune_category_list(
-                compiled.output_categories
-            )
-            if not skip_cat_filter:
+            if not compiled.skip_category_filter:
                 matched = matched.where(
                     F.arrays_overlap(
                         F.col("neighbor_categories"),
-                        F.lit(cats).cast("array<string>"),
+                        F.lit(compiled.categories).cast("array<string>"),
                     )
                 )
             matched = matched.withColumn(
@@ -895,10 +901,12 @@ class TrapiEngine:
     def enforce_answer_cutoff(self, answers: DataFrame) -> None:
         """F5 (plover.py:2051-2058): 403 when the answer exceeds the
         cutoff; limit(cutoff+1) bounds the check's work."""
-        if self.answer_cutoff is None:
-            return
-        over = answers.limit(self.answer_cutoff + 1).count()
-        if over > self.answer_cutoff:
+        if self.answer_cutoff is not None:
+            self.check_answer_size(answers.limit(self.answer_cutoff + 1).count())
+
+    def check_answer_size(self, n_edges: int) -> None:
+        """F5 for an answer of ``n_edges`` edges."""
+        if self.answer_cutoff is not None and n_edges > self.answer_cutoff:
             raise QueryError(
                 403,
                 f"Answer is too large: more than {self.answer_cutoff} edges "
@@ -936,8 +944,12 @@ class TrapiEngine:
                             f"Unsupported qualifier: {q['qualifier_type_id']}.",
                         )
 
-    def single_node_lookup(self, qg: dict) -> tuple[str, DataFrame]:
-        """R5 (plover.py:2778-2817): edgeless query -> id(+subclass) lookup."""
+    def compile_single_node(
+        self, qg: dict
+    ) -> tuple[str, list[str], list[tuple[str, str]] | None]:
+        """The driver-only half of an edgeless query: (qnode key,
+        canonical ids, their (query_id, node_id) subclass pairs or None
+        when the closure is over the driver-map guard)."""
         qnodes = qg["nodes"]
         if len(qnodes) != 1:
             raise QueryError(
@@ -954,7 +966,11 @@ class TrapiEngine:
                 "'ids' specified.",
             )
         canon = list(dict.fromkeys(self.canonicalize_ids(ids).values()))
-        pairs = self._expansion_pairs_local(canon)
+        return qnode_key, canon, self._expansion_pairs_local(canon)
+
+    def single_node_lookup(self, qg: dict) -> tuple[str, DataFrame]:
+        """R5 (plover.py:2778-2817): edgeless query -> id(+subclass) lookup."""
+        qnode_key, canon, pairs = self.compile_single_node(qg)
         if pairs is not None and len(pairs) == 1:
             # single pinned id, no descendants: one equality-pruned scan
             qid, nid = pairs[0]

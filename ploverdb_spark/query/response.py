@@ -572,34 +572,37 @@ def _slim_tuple_response(
     }
 
 
-def run_query(engine: TrapiEngine, query: dict) -> dict:
+def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | None:
     """POST /query (plover.py:1788-1932 lifecycle): full TRAPI response,
     or the R6 legacy slim formats when the QG carries include_metadata.
 
-    Every one-hop response takes one path: collect the answer key rows,
-    group them into results (_assemble_results_local), serialize the
-    edges and nodes, wrap one envelope.  Only where serialization runs
-    depends on the answer size, which the bounded probe collect that
-    opens the query measures:
+    Every one-hop response takes one path: answer rows -> results grouped
+    driver-side (_assemble_results_local) -> serialized edges and nodes ->
+    one envelope.  When the driver index (query/index.py) holds the KG
+    and the query has no attribute constraints, the index finds the rows
+    and counts them: over the cutoff is a 403, up to
+    DISTRIBUTED_SERIALIZE_MIN_EDGES rows are serialized from the index
+    with no Spark job, and bigger answers by hydrate_knowledge_graph's
+    two executor-side actions.  Without the index a bounded probe collect
+    measures the answer: small ones cost it plus one node fetch (2
+    actions), big ones are persisted, cutoff-checked and key-collected
+    first (5 actions, 4 without a cutoff).  Under concurrent load job
+    count IS the latency (measured at reference scale: 100-burst wall
+    time tracks total job count, not scan cost).
 
-    - at most DISTRIBUTED_SERIALIZE_MIN_EDGES answers: the probe holds
-      every answer row, the driver serializes them, and one pruned node
-      fetch follows — 2 Spark actions;
-    - larger answers are persisted, checked against the cutoff, their key
-      columns collected, and hydrate_knowledge_graph serializes edges and
-      nodes executor-side — 5 Spark actions (4 without a cutoff).
-
-    Under concurrent load the driver's job-scheduling throughput is the
-    serving bottleneck (measured at reference scale: 100-burst wall time
-    tracks total job count, not scan cost), so action count IS the
-    latency."""
+    With ``spark=False`` a query that needs Spark returns None before
+    running a job, so api.handle can answer the others on the request
+    thread."""
     logs = [_log_entry("INFO", "Received query")]
     qg = TrapiEngine.normalize_envelope(query)
     engine.validate(qg)
+    index = engine.graph_index(build=spark)
     if not qg.get("edges"):
-        return _run_single_node_query(engine, qg)
+        return _run_single_node_query(engine, qg, index, spark)
     include_metadata = qg.get("include_metadata")
     if include_metadata is not None:
+        if not spark:
+            return None
         # R6 slim modes: collected-answer volume is caller-controlled;
         # keep the persisted multi-pass path
         compiled, answers = engine.lookup(qg)  # returned persisted
@@ -618,54 +621,105 @@ def run_query(engine: TrapiEngine, query: dict) -> dict:
         finally:
             answers.unpersist()
 
-    compiled, matched = engine.lookup(
-        qg, persist_answers=False, enforce_cutoff=False
-    )
-    probe_n = DISTRIBUTED_SERIALIZE_MIN_EDGES
-    if engine.answer_cutoff is not None:
-        probe_n = min(probe_n, engine.answer_cutoff)
-    rows = _collect_dicts(matched.limit(probe_n + 1))
     shells = attribute_shells_for(engine.kg.config)
-    if len(rows) <= probe_n:
-        # every answer row is in hand (and under the cutoff)
-        edges = {
-            str(d["id"]): _answer_edge_to_trapi(d, engine.kp_infores_curie, shells)
-            for d in rows
-        }
-        nodes = _fetch_nodes(engine, _endpoint_ids(rows), shells)
-    else:
-        answers = matched.persist()
-        try:
-            engine.enforce_answer_cutoff(answers)
-            # the columns that result grouping reads
-            rows = _collect_dicts(
-                answers.select(
-                    "id", "input_id", "output_id", "input_query_id", "output_query_id"
-                )
+    kp = engine.kp_infores_curie
+    compiled = engine.compile(qg) if index is not None else None
+    if compiled is not None and not compiled.attribute_constraints:
+        match = index.match(compiled)
+        engine.check_answer_size(len(match))
+        if len(match) <= DISTRIBUTED_SERIALIZE_MIN_EDGES:
+            rows = index.key_rows(match)
+            edges = _index_edges(index, match, kp, shells)
+            nodes = _index_nodes(index, _endpoint_ids(rows), kp, shells)
+        elif not spark:
+            return None
+        else:
+            rows = index.key_rows(match)
+            _, answers = engine.lookup(
+                qg, persist_answers=False, enforce_cutoff=False, compiled=compiled
             )
             nodes, edges = hydrate_knowledge_graph(
                 engine, answers, _endpoint_ids(rows)
             )
-        finally:
-            answers.unpersist()
-    results = _assemble_results_local(rows, compiled, qg, engine.kp_infores_curie)
+    elif not spark:
+        return None
+    else:
+        compiled, matched = engine.lookup(
+            qg, persist_answers=False, enforce_cutoff=False, compiled=compiled
+        )
+        probe_n = DISTRIBUTED_SERIALIZE_MIN_EDGES
+        if engine.answer_cutoff is not None:
+            probe_n = min(probe_n, engine.answer_cutoff)
+        rows = _collect_dicts(matched.limit(probe_n + 1))
+        if len(rows) <= probe_n:
+            # every answer row is in hand (and under the cutoff)
+            edges = {
+                str(d["id"]): _answer_edge_to_trapi(d, kp, shells) for d in rows
+            }
+            nodes = _fetch_nodes(engine, _endpoint_ids(rows), shells)
+        else:
+            answers = matched.persist()
+            try:
+                engine.enforce_answer_cutoff(answers)
+                # the columns that result grouping reads
+                rows = _collect_dicts(
+                    answers.select(
+                        "id", "input_id", "output_id", "input_query_id", "output_query_id"
+                    )
+                )
+                nodes, edges = hydrate_knowledge_graph(
+                    engine, answers, _endpoint_ids(rows)
+                )
+            finally:
+                answers.unpersist()
+    results = _assemble_results_local(rows, compiled, qg, kp)
     logs.append(
         _log_entry("INFO", f"Done with query, returning {len(results)} results")
     )
     return {**_envelope(qg, nodes, edges, results), "logs": logs}
 
 
-def _run_single_node_query(engine: TrapiEngine, qg: dict) -> dict:
-    qnode_key, found = engine.single_node_lookup(qg)
-    rows = found.collect()
+def _index_edges(index, match, kp_infores_curie: str, shells) -> dict[str, dict]:
+    """TRAPI edges of an indexed answer.  Its rows are filled into one
+    reused dict, column by column, so an answer costs no dict per row."""
+    cols = index.columns(match)
+    edges: dict[str, dict] = {}
+    row: dict = {}
+    for i in range(len(match)):
+        for c, values in cols.items():
+            row[c] = values[i]
+        edges[str(row["id"])] = _answer_edge_to_trapi(row, kp_infores_curie, shells)
+    return edges
+
+
+def _index_nodes(index, node_ids, kp_infores_curie: str, shells) -> dict[str, dict]:
+    """TRAPI nodes of ``node_ids`` from the driver index's node table."""
+    return {
+        d["id"]: node_to_trapi(d, kp_infores_curie, shells)
+        for d in index.node_rows(node_ids)
+    }
+
+
+def _run_single_node_query(
+    engine: TrapiEngine, qg: dict, index, spark: bool = True
+) -> dict | None:
     shells = attribute_shells_for(engine.kg.config)
-    nodes = _fetch_nodes(engine, {r.node_id for r in rows}, shells)
+    if index is not None:
+        qnode_key, _, pairs = engine.compile_single_node(qg)
+        rows = [(q, n) for q, n in pairs if index.has_node(n)]
+        nodes = _index_nodes(
+            index, {n for _, n in rows}, engine.kp_infores_curie, shells
+        )
+    elif not spark:
+        return None
+    else:
+        qnode_key, found = engine.single_node_lookup(qg)
+        rows = [(r.query_id, r.node_id) for r in found.collect()]
+        nodes = _fetch_nodes(engine, {n for _, n in rows}, shells)
     results = [
         {
             "node_bindings": {
-                qnode_key: [
-                    _result_node_binding(r.node_id, r.query_id) for r in rows
-                ]
+                qnode_key: [_result_node_binding(n, q) for q, n in rows]
             },
             "analyses": [{"edge_bindings": {}, "attributes": []}],
             "resource_id": engine.kp_infores_curie,

@@ -319,6 +319,12 @@ def test_rebuild_endpoint_swaps_engine(spark, tmp_path):
     )
     assert status == 200 and "Rebuild" in body["message"]
 
+    # the new engine was warmed before the swap: its driver index is
+    # built before it serves a query, so even its first query is answered
+    # without Spark
+    new = reg.engine("kp")
+    assert new.graph_index(build=False) is not None
+    assert new.index_stats()["edges"] == 1
     # the swapped engine serves the NEW graph under the same endpoint
     qg = {
         "nodes": {"n00": {"ids": ["NEW:2"]}, "n01": {"categories": ["biolink:Disease"]}},
@@ -334,12 +340,95 @@ def test_rebuild_endpoint_swaps_engine(spark, tmp_path):
 
 
 def test_debug_endpoint(registry):
+    assert handle(registry, "query", QG)[0] == 200  # index built
     status, body = handle(registry, "debug", {})
     assert status == 200
     assert body["driver_memory"].get("rss_kb", 0) > 0
+    # VmHWM: the peak RSS, never below the current RSS
+    assert body["driver_memory"]["hwm_kb"] >= body["driver_memory"]["rss_kb"]
     assert "active_jobs" in body["spark"]
     assert isinstance(body["spark"]["cached_tables"], list)
     assert "graft" in body["endpoints"]
+    index = body["driver_index"]["graft"]
+    assert index["resident_bytes"] > 0 and index["edges"] > 0 and index["nodes"] > 0
+
+    # a KG over the driver-map guard has no index to report
+    from ploverdb_spark.query.compiler import TrapiEngine
+
+    eng = registry.engine("graft")
+    reg = KpRegistry(query_timeout_sec=300)
+    reg.register(
+        "big",
+        TrapiEngine(eng.kg, kp_infores_curie="infores:big", driver_map_max_rows=0),
+    )
+    assert handle(reg, "query", QG)[0] == 200
+    status, body = handle(reg, "debug", {})
+    assert status == 200 and body["endpoints"] == ["big"]
+    assert body["driver_index"] == {}
+
+
+def test_indexed_queries_skip_admission(registry, monkeypatch):
+    """A query the driver index answers is served on the request thread:
+    no query thread, no admission slot, and no sample in the latency
+    estimate that sheds doomed Spark-heavy requests.  A query routed to
+    Spark (here the slim tuple format) still feeds the estimate."""
+    from ploverdb_spark import api
+
+    threaded = []
+    orig = api.run_query_with_timeout
+
+    def counting(*a, **kw):
+        threaded.append(1)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(api, "run_query_with_timeout", counting)
+    reg = KpRegistry(
+        max_workers=2, backlog=4, query_timeout_sec=300, client_window_sec=30.0
+    )
+    reg.register("graft", registry.engine("graft").warmup())
+    for i in range(5):
+        qg = {**QG, "nodes": {**QG["nodes"], "n01": {"ids": [f"N:{i}"]}}}
+        status, body = handle(reg, "query", qg)
+        assert status == 200 and body["message"]["results"]
+    status, body = handle(reg, "query", {"nodes": {"n00": {"ids": ["N:0"]}}, "edges": {}})
+    assert status == 200 and body["message"]["knowledge_graph"]["nodes"]
+    assert threaded == []
+    assert reg._lat_ewma is None and reg._n_inflight == 0
+
+    status, _ = handle(reg, "query", {**QG, "include_metadata": True})
+    assert status == 200
+    assert threaded == [1]
+    assert reg._lat_ewma is not None and reg._n_inflight == 0
+
+
+def test_fair_pool_names_recycled(registry, spark):
+    """Spark creates a FAIR pool for every new pool name and never drops
+    one, so pool names are recycled: 50 sequential Spark-path queries add
+    at most one pool, and N concurrent ones at most N."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ploverdb_spark.api import run_query_with_timeout
+    from ploverdb_spark.query.compiler import TrapiEngine
+
+    eng = registry.engine("graft")
+    unindexed = TrapiEngine(
+        eng.kg, kp_infores_curie=eng.kp_infores_curie, driver_map_max_rows=0
+    )
+    jsc = spark.sparkContext._jsc.sc()
+
+    def query(_=None) -> dict:
+        return run_query_with_timeout(unindexed, QG, timeout_sec=300)
+
+    before = jsc.getAllPools().size()
+    for _ in range(50):
+        assert query()["message"]["results"]
+    assert jsc.getAllPools().size() - before <= 1
+
+    n = 4
+    before = jsc.getAllPools().size()
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        assert all(r["message"]["results"] for r in pool.map(query, range(3 * n)))
+    assert jsc.getAllPools().size() - before <= n
 
 
 def test_admission_control_backpressure(registry):

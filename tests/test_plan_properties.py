@@ -532,14 +532,23 @@ def test_single_id_lookup_is_joinless_scan(spark):
 
 def test_run_query_fast_path_action_count(spark):
     """Serving latency = driver job count under load: a small-answer
-    one-hop must complete in at most 3 Spark jobs (bounded answer collect
-    + node fetch (+ at most one auxiliary) — the 6-action shape mass-504s
+    one-hop runs no Spark job when the driver index answers it, and at
+    most 3 Spark jobs on the Spark path (bounded answer collect + node
+    fetch (+ at most one auxiliary) — the 6-action shape mass-504s
     concurrent bursts at reference scale)."""
     from ploverdb_spark.queries.graph import graft_engine
+    from ploverdb_spark.query.compiler import TrapiEngine
     from ploverdb_spark.query.response import run_query
 
-    eng = graft_engine(spark, SF_ORACLE)
-    eng.warmup()
+    indexed = graft_engine(spark, SF_ORACLE)
+    kg = indexed.kg
+    # a guard the synonym and closure maps fit but the nodes and edges do
+    # not: the Spark path as served at reference scale
+    unindexed = TrapiEngine(
+        kg,
+        kp_infores_curie=indexed.kp_infores_curie,
+        driver_map_max_rows=max(kg.id_synonyms.count(), kg.subclass_closure.count()),
+    )
     qg = {
         "nodes": {
             "n00": {"categories": ["graft:Customer"]},
@@ -553,21 +562,26 @@ def test_run_query_fast_path_action_count(spark):
             }
         },
     }
-    run_query(eng, {"message": {"query_graph": qg}})  # prime lazy state
     tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or ())
-    resp = run_query(eng, {"message": {"query_graph": qg}})
-    after = len(tracker.getJobIdsForGroup(None) or ())
-    assert resp["message"]["results"]
-    assert after - before <= 3, f"fast path ran {after - before} jobs"
+    for eng, max_jobs in ((indexed, 0), (unindexed, 3)):
+        eng.warmup()
+        run_query(eng, {"message": {"query_graph": qg}})  # prime lazy state
+        before = len(tracker.getJobIdsForGroup(None) or ())
+        resp = run_query(eng, {"message": {"query_graph": qg}})
+        after = len(tracker.getJobIdsForGroup(None) or ())
+        assert resp["message"]["results"]
+        assert after - before <= max_jobs, f"fast path ran {after - before} jobs"
+    assert indexed.graph_index() is not None
+    assert unindexed.graph_index() is None
 
 
 def test_run_query_big_path_action_count(spark, monkeypatch):
     """The big-answer path (forced with DISTRIBUTED_SERIALIZE_MIN_EDGES=0)
-    runs 5 Spark actions: the bounded probe, the cutoff check, the
-    answer-key collect, and the executor-side edge and node serializers.
-    Result grouping runs driver-side on the collected keys, with no Spark
-    action of its own."""
+    runs the executor-side edge and node serializers.  Without the driver
+    index it first runs the bounded probe, the cutoff check and the
+    answer-key collect: 5 Spark actions.  The index counts the answer and
+    holds its keys, so it runs the 2 serializers only.  Result grouping
+    runs driver-side on the keys, with no Spark action of its own."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from ploverdb_spark.build.ingest import build_knowledge_graph
@@ -583,14 +597,12 @@ def test_run_query_big_path_action_count(spark, monkeypatch):
     )
     edges = spark.createDataFrame(EDGES, EDGE_SCHEMA)
     kg = build_knowledge_graph(nodes, edges, KgxConfig()).persist()
-    eng = TrapiEngine(kg, kp_infores_curie="infores:test-kp")
     qg = one_hop(
         {"ids": ["CHEM:1", "CHEM:2"]},
         {"categories": ["biolink:Disease"]},
         "biolink:treats",
     )
     monkeypatch.setattr(response, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 0)
-    response.run_query(eng, qg)  # prime lazy state
 
     actions: list[str] = []
     depth = [0]
@@ -610,12 +622,22 @@ def test_run_query_big_path_action_count(spark, monkeypatch):
     for name in ("collect", "toArrow", "count", "isEmpty", "toPandas"):
         monkeypatch.setattr(DataFrame, name, counted(name, getattr(DataFrame, name)))
     tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or ())
-    resp = response.run_query(eng, qg)
-    jobs = len(tracker.getJobIdsForGroup(None) or ()) - before
-    assert resp["message"]["results"]
-    assert len(actions) == 5, f"big path ran actions {actions}"
-    assert jobs <= 9, f"big path ran {jobs} jobs"
+    # unindexed: the synonym and closure maps fit the guard, nodes and
+    # edges do not (the Spark path as served at reference scale)
+    maps_only = max(kg.id_synonyms.count(), kg.subclass_closure.count())
+    for max_rows, n_actions in ((None, 2), (maps_only, 5)):
+        eng = TrapiEngine(
+            kg, kp_infores_curie="infores:test-kp", driver_map_max_rows=max_rows
+        )
+        response.run_query(eng, qg)  # prime lazy state
+        assert (eng.graph_index() is None) == (max_rows is not None)
+        actions.clear()
+        before = len(tracker.getJobIdsForGroup(None) or ())
+        resp = response.run_query(eng, qg)
+        jobs = len(tracker.getJobIdsForGroup(None) or ()) - before
+        assert resp["message"]["results"]
+        assert len(actions) == n_actions, f"big path ran actions {actions}"
+        assert jobs <= 9, f"big path ran {jobs} jobs"
 
 
 def test_t7_vocab_topk_is_take_ordered(spark):

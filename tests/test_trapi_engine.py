@@ -7,9 +7,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import json
+from collections import Counter
+
 from ploverdb_spark.build.ingest import build_knowledge_graph
+from ploverdb_spark.query import response
 from ploverdb_spark.query.compiler import QueryError, TrapiEngine
-from ploverdb_spark.query.response import get_edges, get_neighbors, run_query
+from ploverdb_spark.query.response import get_edges, get_neighbors
 from ploverdb_spark.sources.kgx import KgxConfig
 
 NODES = [
@@ -95,6 +99,65 @@ def int_prop_engine(spark):
     )
     kg = build_knowledge_graph(nodes, edges, KgxConfig()).persist()
     return TrapiEngine(kg, kp_infores_curie="infores:test-kp")
+
+
+_SPARK_TWINS: dict[int, TrapiEngine] = {}
+
+
+def spark_twin(engine: TrapiEngine) -> TrapiEngine:
+    """``engine``'s KG served with the driver index disabled
+    (``driver_map_max_rows=0``): every query takes the Spark path."""
+    if id(engine) not in _SPARK_TWINS:
+        _SPARK_TWINS[id(engine)] = TrapiEngine(
+            engine.kg,
+            kp_infores_curie=engine.kp_infores_curie,
+            answer_cutoff=engine.answer_cutoff,
+            driver_map_max_rows=0,
+        )
+    return _SPARK_TWINS[id(engine)]
+
+
+def _canonical_result(result: dict) -> str:
+    """One result with its binding lists in a fixed order (the two paths
+    group the same rows, but a binding list comes from a set)."""
+    r = json.loads(json.dumps(result))
+    for binds in r["node_bindings"].values():
+        binds.sort(key=json.dumps)
+    for a in r["analyses"]:
+        for eb in a["edge_bindings"].values():
+            eb.sort(key=json.dumps)
+    return json.dumps(r, sort_keys=True)
+
+
+def run_query(engine: TrapiEngine, query: dict) -> dict:
+    """``response.run_query`` on both answer paths: the driver index
+    (``engine``) and Spark (``spark_twin(engine)``).  Both must raise the
+    same error, or return the same nodes and edges (each entity's JSON
+    compared exactly, unsorted) and the same results as a multiset.
+    Returns the indexed response."""
+    outcomes = []
+    for eng in (engine, spark_twin(engine)):
+        try:
+            outcomes.append(response.run_query(eng, query))
+        except QueryError as e:
+            outcomes.append(e)
+    indexed, spark = outcomes
+    if isinstance(indexed, QueryError) or isinstance(spark, QueryError):
+        assert [
+            (type(o), getattr(o, "status", None), getattr(o, "message", None))
+            for o in (indexed, spark)
+        ] == [(QueryError, spark.status, spark.message)] * 2, (indexed, spark)
+        raise indexed
+    for part in ("nodes", "edges"):
+        got, want = (
+            {k: json.dumps(v) for k, v in r["message"]["knowledge_graph"][part].items()}
+            for r in (indexed, spark)
+        )
+        assert got == want, f"{part} differ between the index and Spark"
+    assert Counter(map(_canonical_result, indexed["message"]["results"])) == Counter(
+        map(_canonical_result, spark["message"]["results"])
+    ), "results differ between the index and Spark"
+    return indexed
 
 
 def one_hop(subj_spec, obj_spec, pred=None, qualifier_constraints=None, attribute_constraints=None):
@@ -1048,3 +1111,100 @@ def test_get_neighbors_empty_ids(engine):
     assert get_neighbors(
         engine, [], predicates=["biolink:treats"], categories=["biolink:Disease"]
     ) == {}
+
+
+# -- driver index vs Spark: fixtures and shapes beyond the tests above -----
+
+@pytest.fixture(scope="module")
+def odd_engine(spark):
+    """The fixture KG plus two self-loops (symmetric interacts_with on
+    GENE:1, directed affects on CHEM:2), served with GENE:2 missing from
+    the node table: edges_bidir then carries NULL neighbor categories for
+    it, as a KG assembled outside build_knowledge_graph can."""
+    from ploverdb_spark.build.ingest import KnowledgeGraph, build_edges_bidir
+
+    nodes = spark.createDataFrame(
+        NODES,
+        "id string, name string, all_categories array<string>, "
+        "equivalent_curies array<string>, publications array<string>",
+    )
+    loops = [
+        ("loop1", "GENE:1", "GENE:1", "biolink:interacts_with", None, None, None, "infores:src1", "knowledge_assertion", "manual_agent", [], None),
+        ("loop2", "CHEM:2", "CHEM:2", "biolink:affects", None, None, None, "infores:src2", "prediction", "automated_agent", ["PMID:7"], None),
+    ]
+    edges = spark.createDataFrame(EDGES + loops, EDGE_SCHEMA)
+    kg = build_knowledge_graph(nodes, edges, KgxConfig()).persist()
+    served_nodes = kg.nodes.where(F.col("id") != "GENE:2").persist()
+    odd = KnowledgeGraph(
+        nodes=served_nodes,
+        edges=kg.edges,
+        edges_bidir=build_edges_bidir(kg.edges, served_nodes).persist(),
+        subclass_closure=kg.subclass_closure,
+        id_synonyms=kg.id_synonyms,
+        model=kg.model,
+        config=kg.config,
+    )
+    return TrapiEngine(odd, kp_infores_curie="infores:test-kp")
+
+
+PARITY_QUERIES = [
+    one_hop({"ids": ["CHEM:1"]}, {}),
+    one_hop({"ids": ["CHEM:1", "CHEM:2"]}, {"categories": ["biolink:Disease"]}, "biolink:treats"),
+    one_hop({"ids": ["GENE:1"]}, {}),
+    one_hop({"ids": ["GENE:1"]}, {"ids": ["GENE:2"]}),
+    one_hop({"ids": ["GENE:1"]}, {"ids": ["GENE:1"]}, "biolink:interacts_with"),
+    one_hop({"ids": ["GENE:1", "GENE:2"]}, {"ids": ["GENE:1", "GENE:2"]}, "biolink:interacts_with"),
+    one_hop({"ids": ["GENE:1"]}, {"categories": ["biolink:Gene"]}, "biolink:interacts_with"),
+    one_hop({"ids": ["CHEM:2"]}, {"ids": ["CHEM:2"]}, "biolink:affects"),
+    one_hop({"ids": ["CHEM:2"]}, {}, "biolink:affects"),
+    one_hop({}, {"ids": ["GENE:1"]}, "biolink:affects"),
+    one_hop({"categories": ["biolink:ChemicalEntity"]}, {"ids": ["DIS:parent"]}, "biolink:treats"),
+    one_hop({"ids": ["CHEM:alias1"]}, {"ids": ["DIS:parent", "MIXED:1"]}),
+    one_hop({"ids": ["CHEM:1"]}, {}, qualifier_constraints=_qual_constraint("biolink:causes", "increased")),
+    one_hop({"ids": ["NOPE:1"]}, {}),
+    {"nodes": {"n00": {"ids": ["DIS:parent", "GENE:2", "NOPE:1", "CHEM:alias1"]}}, "edges": {}},
+]
+
+
+@pytest.mark.parametrize(
+    "fixture", ["engine", "numeric_id_engine", "int_prop_engine", "odd_engine"]
+)
+def test_index_matches_spark(request, fixture):
+    """Every query shape above, on every fixture KG — numeric edge ids, a
+    nullable int property, self-loops and an endpoint missing from the
+    node table included — gives the same response from the driver index
+    as from the Spark path (run_query compares them)."""
+    eng = request.getfixturevalue(fixture)
+    answered = 0
+    for qg in PARITY_QUERIES:
+        answered += bool(run_query(eng, qg)["message"]["results"])
+    assert answered >= 3  # not vacuously: several shapes have answers
+
+
+def test_indexed_query_runs_no_spark_job(engine):
+    """A pinned one-hop and a node lookup on a warmed engine are answered
+    from the driver index with zero Spark jobs (by the status tracker)."""
+    engine.warmup()
+    assert engine.graph_index(build=False) is not None
+    tracker = engine.spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or ())
+    resp = response.run_query(
+        engine,
+        one_hop({"ids": ["CHEM:1"]}, {"categories": ["biolink:Disease"]}, "biolink:treats"),
+        spark=False,
+    )
+    node = response.run_query(
+        engine, {"nodes": {"n00": {"ids": ["DIS:parent"]}}, "edges": {}}, spark=False
+    )
+    assert len(tracker.getJobIdsForGroup(None) or ()) == before
+    assert set(resp["message"]["knowledge_graph"]["edges"]) == {"e1", "e2", "e8"}
+    assert set(node["message"]["knowledge_graph"]["nodes"]) == {
+        "DIS:parent", "DIS:child", "DIS:grandchild"
+    }
+    # attribute constraints need Spark: no answer without it
+    constrained = one_hop(
+        {"ids": ["CHEM:1"]},
+        {},
+        attribute_constraints=[{"id": "knowledge_level", "operator": "==", "value": "prediction"}],
+    )
+    assert response.run_query(engine, constrained, spark=False) is None
