@@ -49,6 +49,30 @@ POST_PATHS = {
 KNOWN_PATHS = GET_PATHS | POST_PATHS
 
 
+def _json_pieces(obj: Any, out: list[str], depth: int) -> None:
+    """Append ``json.dumps(obj)`` to ``out`` in pieces: dicts and lists
+    down to ``depth`` levels are split per member, so a large response
+    (a TRAPI knowledge graph of thousands of edges) never exists as one
+    string, and again as bytes, beside the objects it encodes.  The
+    pieces are ASCII (``ensure_ascii``), one byte per character."""
+    if depth and isinstance(obj, dict) and obj and all(isinstance(k, str) for k in obj):
+        sep = "{"
+        for k, v in obj.items():
+            out.append(f"{sep}{json.dumps(k)}: ")
+            _json_pieces(v, out, depth - 1)
+            sep = ", "
+        out.append("}")
+    elif depth and isinstance(obj, list) and obj:
+        sep = "["
+        for v in obj:
+            out.append(sep)
+            _json_pieces(v, out, depth - 1)
+            sep = ", "
+        out.append("]")
+    else:
+        out.append(json.dumps(obj))
+
+
 def _route(registry: KpRegistry, raw_path: str) -> tuple[str | None, str]:
     """'/endpoint/path' or '/path' -> (endpoint or None, path).
 
@@ -75,14 +99,27 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _respond(self, status: int, body: Any) -> None:
         is_html = isinstance(body, str) and body.lstrip().startswith("<")
-        data = json.dumps(body).encode() if not isinstance(body, str) else body.encode()
+        pieces: list[str] = []
+        if isinstance(body, str):
+            data = body.encode()
+        else:
+            _json_pieces(body, pieces, depth=4)
+            data = b""
         self.send_response(status)
         self.send_header(
             "Content-Type", "text/html" if is_html else "application/json"
         )
-        self.send_header("Content-Length", str(len(data)))
+        self.send_header("Content-Length", str(len(data) + sum(map(len, pieces))))
         self.end_headers()
-        self.wfile.write(data)
+        batch: list[str] = []
+        size = 0
+        for p in pieces:
+            batch.append(p)
+            size += len(p)
+            if size >= 65536:
+                self.wfile.write("".join(batch).encode())
+                batch, size = [], 0
+        self.wfile.write(data or "".join(batch).encode())
 
     def _dispatch(self, payload: dict | None, allowed: set[str]) -> None:
         endpoint, path = _route(self.registry, self.path)
