@@ -146,7 +146,8 @@ class KpRegistry:
     Admission control mirrors the reference's serving stack (nginx
     connection buffering in front of a bounded uWSGI worker pool,
     README.md:505-511 + uwsgi.ini:33): at most ``max_workers`` Spark-heavy
-    requests (query/edges/neighbors) execute concurrently, up to
+    requests (query/edges/neighbors the driver index cannot answer)
+    execute concurrently, up to
     ``backlog`` more wait in queue, anything beyond that — or a queue wait
     exceeding ``queue_wait_sec`` — gets 503 backpressure (the burst SLO
     allows 503s, never 504s).  Crucially the harakiri clock starts when a
@@ -712,6 +713,19 @@ def _code_info(code_version: str) -> str:
     return info
 
 
+def _indexed_else_admitted(registry: KpRegistry, indexed, on_spark):
+    """``indexed()``, and ``on_spark()`` under admission when that returns
+    None.  A request the driver index answers runs no Spark job: it is
+    served on the request thread, with no query thread, job group, FAIR
+    pool or admission slot, and stays out of the latency estimate that
+    describes Spark-heavy requests."""
+    body = indexed()
+    if body is None:
+        with registry.admission():
+            body = on_spark()
+    return body
+
+
 def handle(
     registry: KpRegistry,
     path: str,
@@ -740,16 +754,13 @@ def handle(
         if path == "query":
             eng = registry.engine(endpoint)
             t0 = _time.time()
-            # A query the driver index answers runs no Spark job: it is
-            # served here, with no query thread, job group, pool or
-            # admission slot, and stays out of the latency estimate that
-            # describes Spark-heavy requests.
-            body = run_query(eng, payload, spark=False)
-            if body is None:
-                with registry.admission():
-                    body = run_query_with_timeout(
-                        eng, payload, timeout_sec=registry.query_timeout_sec
-                    )
+            body = _indexed_else_admitted(
+                registry,
+                lambda: run_query(eng, payload, spark=False),
+                lambda: run_query_with_timeout(
+                    eng, payload, timeout_sec=registry.query_timeout_sec
+                ),
+            )
             # /debug/last per-query stats (reference main.py:554-568 keeps
             # the most recent snapshot; here the most useful "last" signal
             # is what the last query did and cost)
@@ -771,13 +782,20 @@ def handle(
                 return 200, get_edges(eng, payload.get("pairs", []))
         if path == "neighbors":
             eng = registry.engine(endpoint)
-            with registry.admission(), _request_pool(eng):
-                return 200, get_neighbors(
-                    eng,
-                    payload.get("node_ids", []),
-                    categories=payload.get("categories"),
-                    predicates=payload.get("predicates"),
-                )
+            args = (
+                eng,
+                payload.get("node_ids", []),
+                payload.get("categories"),
+                payload.get("predicates"),
+            )
+
+            def on_spark() -> dict:
+                with _request_pool(eng):
+                    return get_neighbors(*args)
+
+            return 200, _indexed_else_admitted(
+                registry, lambda: get_neighbors(*args, spark=False), on_spark
+            )
         if path == "meta_knowledge_graph":
             return 200, registry.meta_kg(endpoint)
         if path == "sri_test_triples":

@@ -28,7 +28,7 @@ import itertools
 import threading
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ploverdb_spark.build.ingest import DIR_FORWARD, DIR_REVERSE, KnowledgeGraph
@@ -122,6 +122,34 @@ def pushdown_id_filter(df: DataFrame, col_name: str, ids) -> DataFrame:
     return df
 
 
+def predicate_filter(compiled: CompiledQEdge) -> Column:
+    """F2/F4 over ``edges_bidir``: the bidirectional predicates in either
+    direction, the directed ones in the required direction; TRUE when the
+    compile proved the filter matches every row.  Expanded sets can reach
+    hundreds of descendants — in_predicate keeps construction at one py4j
+    call per set."""
+    if compiled.skip_predicate_filter:
+        return F.lit(True)
+    col = "conglomerate_predicate" if compiled.use_conglomerate else "predicate"
+    pred = in_predicate(col, sorted(compiled.bidirectional_predicates))
+    if compiled.directed_predicates:
+        pred = pred | (
+            in_predicate(col, sorted(compiled.directed_predicates))
+            & (F.col("direction") == compiled.required_direction)
+        )
+    return pred
+
+
+def category_filter(compiled: CompiledQEdge) -> Column:
+    """F1: the neighbour carries one of the compiled categories; TRUE when
+    the compile proved the filter matches every row."""
+    if compiled.skip_category_filter:
+        return F.lit(True)
+    return F.arrays_overlap(
+        F.col("neighbor_categories"), F.lit(compiled.categories).cast("array<string>")
+    )
+
+
 class TrapiEngine:
     """Serves TRAPI one-hop / edgeless queries over a KnowledgeGraph."""
 
@@ -183,14 +211,17 @@ class TrapiEngine:
         by the vocab scan and the closure collect — independent
         structures guarded by independent locks, so overlapping them is
         free wall-clock).  Sequential by default: unit tests and
-        ad-hoc callers keep deterministic job ordering."""
+        ad-hoc callers keep deterministic job ordering.
+
+        The graph index is built first: when the KG fits the guard, the
+        vocab and the conglomerate index derive from it with no scan."""
         builders = (
             self._index.build,
             self._conglomerate_descendant_index,
             self._get_kg_vocab,
         )
         if not parallel:
-            for b in builders:
+            for b in (self._index.graph, *builders):
                 b()
             return self
         from concurrent.futures import ThreadPoolExecutor
@@ -207,6 +238,9 @@ class TrapiEngine:
                 sc.setLocalProperty("spark.scheduler.pool", None)
 
         with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+            # on a pool thread too: the same build on the main thread left
+            # the driver's peak RSS 24 MB higher (benchmark graph, glibc)
+            pool.submit(run, self._index.graph).result()
             # list() propagates the first builder exception, if any
             list(pool.map(run, builders))
         return self
@@ -290,8 +324,8 @@ class TrapiEngine:
         """Driver-resident KG vocabulary: the DISTINCT predicate,
         conglomerate-predicate, and category values actually present in
         the serving index (ontology-sized — tens of entries — no matter
-        how many edges).  One map-side-combined scan, built at warmup
-        alongside the other driver maps.
+        how many edges).  Read off the graph index when it is built
+        (``GraphIndex.kg_vocab``), else one map-side-combined scan.
 
         Why it exists: biolink expansion turns a qedge's predicates into
         hundreds of descendants, nearly all absent from any given KG, and
@@ -311,6 +345,9 @@ class TrapiEngine:
         if self._kg_vocab is not None:
             return self._kg_vocab
         with self._vocab_lock:
+            graph = self._index.graph(build=False)
+            if self._kg_vocab is None and graph is not None:
+                self._kg_vocab = graph.kg_vocab()
             if self._kg_vocab is None:
                 row = self.kg.edges_bidir.agg(
                     F.collect_set("predicate").alias("preds"),
@@ -381,9 +418,10 @@ class TrapiEngine:
     def _conglomerate_descendant_index(self) -> dict[str, set[str]]:
         """G4 (plover.py:1486-1519): ancestor qualifier-combo string ->
         conglomerate predicates present in the KG.  Built once from the
-        *distinct* qualifier combos (ontology-sized, safe to collect).
-        Lock-guarded like the driver maps: the distinct() is one full scan
-        of edges_bidir — concurrent first queries must not each run it."""
+        *distinct* qualifier combos (ontology-sized, safe to collect),
+        read off the graph index when it is built.  Lock-guarded like the
+        driver maps: else the distinct() is one full scan of edges_bidir —
+        concurrent first queries must not each run it."""
         if self._conglomerate_index is not None:
             return self._conglomerate_index
         with self._congl_lock:
@@ -392,7 +430,8 @@ class TrapiEngine:
     def _build_conglomerate_index(self) -> dict[str, set[str]]:
         if self._conglomerate_index is not None:
             return self._conglomerate_index
-        combos = (
+        graph = self._index.graph(build=False)
+        combos = graph.qualifier_combos() if graph is not None else (
             self.kg.edges_bidir.where(
                 F.col("qualified_predicate").isNotNull()
                 | F.col("object_direction_qualifier").isNotNull()
@@ -410,25 +449,21 @@ class TrapiEngine:
         )
         index: dict[str, set[str]] = {}
         m = self.model
-        for row in combos:
-            for pred in {row.qualified_predicate, row.predicate}:
+        for predicate, qualified, direction, aspect, conglomerate in combos:
+            for pred in {qualified, predicate}:
                 pred_anc: set[str | None] = (
                     set(m.predicate_ancestors(pred)) if pred else set()
                 )
                 pred_anc.add(None)
-                dir_anc: set[str | None] = set(
-                    self._qualifier_ancestors(row.object_direction_qualifier)
-                )
+                dir_anc: set[str | None] = set(self._qualifier_ancestors(direction))
                 dir_anc.add(None)
-                asp_anc: set[str | None] = set(
-                    self._qualifier_ancestors(row.object_aspect_qualifier)
-                )
+                asp_anc: set[str | None] = set(self._qualifier_ancestors(aspect))
                 asp_anc.add(None)
                 for p, d, a in itertools.product(pred_anc, dir_anc, asp_anc):
                     key = f"{p}--{d}--{a}"
                     if key == "None--None--None":
                         continue
-                    index.setdefault(key, set()).add(row.conglomerate_predicate)
+                    index.setdefault(key, set()).add(conglomerate)
         self._conglomerate_index = index
         return index
 
@@ -653,29 +688,16 @@ class TrapiEngine:
             input_key, output_key = output_key, input_key
         input_is_subject = input_key == subj_key
 
-        use_congl, pred_map = self._expanded_predicates(qedge)
-        directed = {p for p, bidir in pred_map.items() if not bidir}
-        bidirectional = {p for p, bidir in pred_map.items() if bidir}
-        # prune to the KG's actual vocabulary (and skip a provably-TRUE
-        # filter): expansion routinely yields hundreds of descendants for
-        # a ~10-predicate KG, and serving keeps In-lists in linear form
-        directed, bidirectional, skip_pred_filter = self.prune_predicate_sets(
-            directed, bidirectional, use_congl
-        )
-
         compiled = CompiledQEdge(
             qedge_key=qedge_key,
             input_qnode_key=input_key,
             output_qnode_key=output_key,
             input_is_subject=input_is_subject,
-            use_conglomerate=use_congl,
-            directed_predicates=directed,
-            bidirectional_predicates=bidirectional,
+            **self._predicate_sets(qedge),
             output_categories=self._expanded_output_categories(qnodes[output_key]),
             output_ids=ids_by_key[output_key] or None,
             attribute_constraints=qedge.get("attribute_constraints", []),
             required_direction=DIR_FORWARD if input_is_subject else DIR_REVERSE,
-            skip_predicate_filter=skip_pred_filter,
         )
         # R1: canonicalize + J5: subclass-expand the pinned side(s)
         compiled.input_ids = list(
@@ -697,6 +719,52 @@ class TrapiEngine:
             compiled.categories, compiled.skip_category_filter = (
                 self.prune_category_list(compiled.output_categories)
             )
+        return compiled
+
+    def _predicate_sets(self, qedge: dict) -> dict:
+        """The qedge's predicates expanded (R3/J6/J8), split by F4 and
+        pruned to the KG's actual vocabulary, with the skip of a
+        provably-TRUE filter: expansion routinely yields hundreds of
+        descendants for a ~10-predicate KG, and serving keeps In-lists in
+        linear form.  Keyword arguments of ``CompiledQEdge``."""
+        use_congl, pred_map = self._expanded_predicates(qedge)
+        directed, bidirectional, skip = self.prune_predicate_sets(
+            {p for p, bidir in pred_map.items() if not bidir},
+            {p for p, bidir in pred_map.items() if bidir},
+            use_congl,
+        )
+        return {
+            "use_conglomerate": use_congl,
+            "directed_predicates": directed,
+            "bidirectional_predicates": bidirectional,
+            "skip_predicate_filter": skip,
+        }
+
+    def compile_neighbors(
+        self, node_ids: list[str], categories=None, predicates=None
+    ) -> CompiledQEdge:
+        """The driver-only half of /neighbors (J11): each id is the
+        subject of a qedge with ``predicates`` to an unpinned node of
+        ``categories`` (the reference routes /neighbors through
+        _lookup_answers that way), so expansion, vocab pruning and
+        canonicalization are the one-hop compile's.  No subclass
+        expansion, by design: each canonical id is bound to itself in
+        ``input_pairs``, and ``input_ids`` holds the canonical id of each
+        of ``node_ids``, in order.  Runs no Spark job while the driver
+        maps fit."""
+        canon = self.canonicalize_ids(node_ids)
+        compiled = CompiledQEdge(
+            qedge_key="",
+            input_qnode_key="",
+            output_qnode_key="",
+            input_is_subject=True,
+            **self._predicate_sets({"predicates": predicates}),
+            input_ids=[canon[i] for i in node_ids],
+            input_pairs=[(c, c) for c in sorted(set(canon.values()))],
+        )
+        compiled.categories, compiled.skip_category_filter = self.prune_category_list(
+            self._expanded_output_categories({"categories": categories})
+        )
         return compiled
 
     def lookup(
@@ -751,14 +819,8 @@ class TrapiEngine:
             bidir = pushdown_id_filter(
                 bidir, "node_id", [n for _, n in input_pairs]
             )
-        match_col = (
-            "conglomerate_predicate" if compiled.use_conglomerate else "predicate"
-        )
-        directed = compiled.directed_predicates
         bidirectional = compiled.bidirectional_predicates
-        skip_pred_filter = compiled.skip_predicate_filter
-
-        if not directed and not bidirectional:
+        if not compiled.directed_predicates and not bidirectional:
             # e.g. qualifier combo with no matching conglomerate predicate
             # in the KG -> provably empty answer
             return compiled, bidir.limit(0).join(
@@ -772,20 +834,7 @@ class TrapiEngine:
                 "node_id", "input_id"
             ).withColumnRenamed("neighbor_id", "output_id")
 
-        # expanded predicate sets can reach hundreds of descendants —
-        # in_predicate keeps construction at one py4j call per set; a
-        # vocab-covering set skips the filter outright (always true)
-        pred_filter = (
-            F.lit(True)
-            if skip_pred_filter
-            else in_predicate(match_col, sorted(bidirectional))
-        )
-        if directed and not skip_pred_filter:
-            pred_filter = pred_filter | (
-                in_predicate(match_col, sorted(directed))
-                & (F.col("direction") == compiled.required_direction)
-            )
-
+        pred_filter = predicate_filter(compiled)
         if single_input:
             # Dominant serving shape (one pinned id, no subclass
             # descendants): the join contributes nothing but the
@@ -840,14 +889,7 @@ class TrapiEngine:
                     on="neighbor_id",
                 )
         else:
-            if not compiled.skip_category_filter:
-                matched = matched.where(
-                    F.arrays_overlap(
-                        F.col("neighbor_categories"),
-                        F.lit(compiled.categories).cast("array<string>"),
-                    )
-                )
-            matched = matched.withColumn(
+            matched = matched.where(category_filter(compiled)).withColumn(
                 "output_query_id", F.lit(None).cast("string")
             )
 

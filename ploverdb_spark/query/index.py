@@ -19,6 +19,7 @@ dictionary codes, and keeps no collected batch.
 from __future__ import annotations
 
 import ctypes
+import functools
 import threading
 from bisect import bisect_left, bisect_right
 from dataclasses import dataclass
@@ -189,6 +190,41 @@ class GraphIndex:
         except (AttributeError, OSError):
             pass
 
+    def kg_vocab(self) -> dict:
+        """The KG vocabulary ``TrapiEngine._get_kg_vocab`` otherwise scans
+        ``edges_bidir`` for: the predicate and conglomerate-predicate
+        dictionaries with their null flags, and the categories of every
+        edge endpoint with the smallest category count (-1 when an
+        endpoint has no node, or a null list)."""
+        vocab: dict = {}
+        for c in ("predicate", "conglomerate_predicate"):
+            vocab[c] = frozenset(self.vocab[c])
+            vocab[f"{c}_has_null"] = bool((self.codes[c] == len(self.vocab[c])).any())
+        ends = np.unique(self.nbr)
+        present = ends[ends < self.n_table_nodes]
+        codes = self.cat_codes[_ranges(self.cat_offsets[present], self.cat_offsets[present + 1])]
+        vocab["categories"] = frozenset((self.cat_vocab + [None])[c] for c in np.unique(codes))
+        sizes = pc.list_value_length(self.nodes["categories"].combine_chunks())
+        sizes = pc.fill_null(sizes, -1).to_numpy()[present]
+        if len(present) < len(ends):
+            sizes = np.append(sizes, -1)
+        vocab["min_cat_size"] = int(sizes.min()) if len(sizes) else -1
+        return vocab
+
+    def qualifier_combos(self) -> list[tuple]:
+        """The distinct (predicate, qualified_predicate, direction,
+        aspect, conglomerate_predicate) of the edges with a qualifier,
+        found on dictionary codes (Arrow's group_by would load its query
+        engine into the driver: +5 MB RSS)."""
+        quals = ["qualified_predicate", "object_direction_qualifier", "object_aspect_qualifier"]
+        t = self.edges.select(["predicate", *quals, "conglomerate_predicate"])
+        t = t.filter(functools.reduce(pc.or_, [pc.is_valid(t[c]) for c in quals]))
+        cols = [col.combine_chunks() for col in t.columns]
+        cols = [c if pa.types.is_dictionary(c.type) else pc.dictionary_encode(c) for c in cols]
+        codes = np.stack([_codes(c, len(c.dictionary)) for c in cols], axis=1)
+        values = [c.dictionary.to_pylist() + [None] for c in cols]
+        return [tuple(v[c] for v, c in zip(values, row)) for row in np.unique(codes, axis=0)]
+
     def code(self, node_id: str) -> int | None:
         i = bisect_left(self.sorted_ids, node_id, key=_py)
         if i < len(self.sorted_ids) and self.sorted_ids[i].as_py() == node_id:
@@ -268,10 +304,7 @@ class GraphIndex:
         rows: traversal columns, the edge payload in table order (or just
         ``payload``), neighbour categories and the bound query ids."""
         full = payload is None
-        cols: dict[str, list] = {
-            "output_id": self.node_ids.take(pa.array(m.out)).to_pylist(),
-            "input_id": self.node_ids.take(pa.array(m.inp)).to_pylist(),
-        }
+        cols: dict[str, list] = {"output_id": self.ids(m.out), "input_id": self.ids(m.inp)}
         if full:
             cols["direction"] = m.dirs.tolist()
         for c in self.edges.column_names if full else payload:
@@ -283,6 +316,9 @@ class GraphIndex:
             )
         cols["input_query_id"], cols["output_query_id"] = m.in_qids, m.out_qids
         return cols
+
+    def ids(self, codes: np.ndarray) -> list:
+        return self.node_ids.take(pa.array(codes)).to_pylist()
 
     def key_rows(self, m: Match) -> list[dict]:
         """The columns result grouping reads, one dict per answer row."""
@@ -345,7 +381,9 @@ class DriverIndex:
     def closure(self) -> SortedLookup | None:
         return self._part("closure", self._kg.subclass_closure)
 
-    def graph(self) -> GraphIndex | None:
+    def graph(self, build: bool = True) -> GraphIndex | None:
+        if not build:
+            return self._parts.get("graph")
         return self._part("graph", self._kg.nodes, self._kg.edges)
 
     def build(self) -> None:

@@ -27,6 +27,8 @@ from ploverdb_spark.query.compiler import (
     MAX_ISIN_PUSHDOWN,
     CompiledQEdge,
     TrapiEngine,
+    category_filter,
+    predicate_filter,
     pushdown_id_filter,
 )
 
@@ -803,85 +805,55 @@ def get_neighbors(
     node_ids: list[str],
     categories: list[str] | None = None,
     predicates: list[str] | None = None,
-) -> dict[str, list[str]]:
-    """POST /neighbors (J11, plover.py:1982-2009) — one join +
-    collect_set replaces the reference's per-id loop.  Ids only, no
-    subclass reasoning."""
-    categories = categories or ["biolink:NamedThing"]
-    predicates = predicates or ["biolink:related_to"]
-    m = engine.model
-    cat_exp = sorted(
-        {d for c in m.replace_category_mixins(categories) for d in m.category_descendants(c)}
-    )
-    # same expansion + direction semantics as the one-hop path (the
-    # reference routes /neighbors through _lookup_answers with the input
-    # node as qedge subject)
-    preds_raw = set(predicates)
-    preds = preds_raw | set(m.replace_predicate_mixins(sorted(preds_raw)))
-    pred_exp = {d for p in preds for d in m.predicate_descendants(p)}
-    directed_set = {
-        p for p in pred_exp if not engine._consider_bidirectional(p, preds)
-    }
-    bidir_set = pred_exp - directed_set
-    # prune expansions to the KG vocab / skip provably-TRUE filters —
-    # the Pathfinder default sweep (related_to + NamedThing) otherwise
-    # pays a per-row walk of a hundreds-long In-list for every batch
-    # (see TrapiEngine._get_kg_vocab)
-    directed_set, bidir_set, skip_pred_filter = engine.prune_predicate_sets(
-        directed_set, bidir_set, use_congl=False
-    )
-    directed, bidirectional = sorted(directed_set), sorted(bidir_set)
-    cat_exp, skip_cat_filter = engine.prune_category_list(cat_exp)
-    pred_filter = (
-        F.lit(True) if skip_pred_filter else in_predicate("predicate", bidirectional)
-    )
-    if directed and not skip_pred_filter:
-        pred_filter = pred_filter | (
-            in_predicate("predicate", directed)
-            & (F.col("direction") == DIR_FORWARD)
-        )
+    spark: bool = True,
+) -> dict[str, list[str]] | None:
+    """POST /neighbors (J11, plover.py:1982-2009): each id's sorted
+    neighbour ids, by the one-hop semantics of ``compile_neighbors``.  Ids
+    only, no subclass reasoning.
 
-    canon = engine.canonicalize_ids(node_ids)
-    canon_ids = sorted({canon.get(i, i) for i in node_ids})
-    if not canon_ids:
-        # empty/missing node_ids (api.py passes payload.get('node_ids',
-        # [])): the BETWEEN+IN rewrite below would index canon_ids[0]
-        return {i: [] for i in node_ids}
-    bidir = engine.kg.edges_bidir
-    if len(canon_ids) <= MAX_ISIN_PUSHDOWN:
-        # ONE Spark job per batch (the Pathfinder repeat-batch shape,
-        # test_get_neighbors_batch_is_single_job): membership is the same
-        # BETWEEN+IN filter that prunes the bucketed/cached scan — no
-        # tiny-DF build, no broadcast-exchange job — and the original ids
-        # are recovered DRIVER-side through the canon map after grouping
-        # by canonical id (two aliases of one node share a neighbor set
-        # by definition).
-        filtered = bidir.where(
-            F.col("node_id").between(canon_ids[0], canon_ids[-1])
-            & in_predicate("node_id", canon_ids)
-        )
+    When the driver index (query/index.py) holds the KG, ``match`` finds
+    the rows with no Spark job.  Else one Spark job per batch (the
+    Pathfinder repeat-batch shape, test_get_neighbors_batch_is_single_job):
+    the pinned ids reach the scan as the BETWEEN+IN filter that prunes the
+    bucketed/cached table — no tiny-DF build, no broadcast-exchange job —
+    and one groupBy + collect_set.  Either way neighbours are grouped by
+    canonical id, and each requested id reads its canonical id's set (two
+    aliases of one node share a neighbour set by definition).
+
+    With ``spark=False`` a batch that needs Spark returns None before
+    running a job, so api.handle can answer the others on the request
+    thread."""
+    if not node_ids:
+        return {}
+    index = engine.graph_index(build=spark)
+    if index is None and not spark:
+        return None
+    compiled = engine.compile_neighbors(node_ids, categories, predicates)
+    neighbors: dict[str, set] = {}
+    if index is not None:
+        match = index.match(compiled)
+        for q, n in zip(match.in_qids, index.ids(match.out)):
+            neighbors.setdefault(q, set()).add(n)
     else:
-        # batches past the pushdown guard: one broadcast semi join does
-        # stream the index once, amortized over the huge id list
-        ids_df = tiny_df(
-            engine.spark,
-            [(c,) for c in canon_ids],
-            "node_id string",
-        )
-        filtered = bidir.join(F.broadcast(ids_df), on="node_id", how="left_semi")
-    if not skip_pred_filter:
-        filtered = filtered.where(pred_filter)
-    if not skip_cat_filter:
-        filtered = filtered.where(
-            F.arrays_overlap(
-                F.col("neighbor_categories"),
-                F.lit(cat_exp).cast("array<string>"),
+        canon_ids = [n for _, n in compiled.input_pairs]  # sorted
+        bidir = engine.kg.edges_bidir
+        if len(canon_ids) <= MAX_ISIN_PUSHDOWN:
+            filtered = bidir.where(
+                F.col("node_id").between(canon_ids[0], canon_ids[-1])
+                & in_predicate("node_id", canon_ids)
             )
+        else:
+            # batches past the pushdown guard: one broadcast semi join does
+            # stream the index once, amortized over the huge id list
+            ids_df = tiny_df(engine.spark, [(c,) for c in canon_ids], "node_id string")
+            filtered = bidir.join(F.broadcast(ids_df), on="node_id", how="left_semi")
+        rows = (
+            filtered.where(predicate_filter(compiled) & category_filter(compiled))
+            .groupBy("node_id")
+            .agg(F.collect_set("neighbor_id").alias("neighbors"))
+            .collect()
         )
-    matched = (
-        filtered.groupBy("node_id")
-        .agg(F.collect_set("neighbor_id").alias("neighbors"))
-        .collect()
-    )
-    by_canon = {r.node_id: sorted(r.neighbors) for r in matched}
-    return {i: by_canon.get(canon.get(i, i), []) for i in node_ids}
+        neighbors = {r.node_id: set(r.neighbors) for r in rows}
+    return {
+        i: sorted(neighbors.get(c, ())) for i, c in zip(node_ids, compiled.input_ids)
+    }

@@ -34,6 +34,17 @@ def registry(spark):
     return reg
 
 
+@pytest.fixture(scope="module")
+def spark_bound(registry):
+    """The registry's KG with the driver index disabled
+    (``driver_map_max_rows=0``): its /neighbors batches run on Spark and
+    take admission, the path the failure-path tests below exercise."""
+    from ploverdb_spark.query.compiler import TrapiEngine
+
+    eng = registry.engine("graft")
+    return TrapiEngine(eng.kg, kp_infores_curie=eng.kp_infores_curie, driver_map_max_rows=0)
+
+
 def test_query_endpoint(registry):
     status, body = handle(registry, "query", {"message": {"query_graph": QG}})
     assert status == 200
@@ -401,6 +412,26 @@ def test_indexed_queries_skip_admission(registry, monkeypatch):
     assert reg._lat_ewma is not None and reg._n_inflight == 0
 
 
+def test_indexed_neighbors_skip_admission(registry, spark_bound):
+    """A /neighbors batch the driver index answers takes no admission
+    slot and leaves no sample in the latency estimate: it is answered
+    even while the only slot is held and no backlog is allowed, where the
+    same batch on Spark is refused."""
+    reg = KpRegistry(max_workers=1, backlog=0, query_timeout_sec=300, client_window_sec=30.0)
+    reg.register("graft", registry.engine("graft").warmup())
+    reg.register("spark", spark_bound)
+    for i in range(5):
+        status, body = handle(reg, "neighbors", {"node_ids": [f"N:{i}", "C:7"]}, "graft")
+        assert status == 200 and body[f"N:{i}"]
+    assert reg._lat_ewma is None and reg._n_inflight == 0
+
+    with reg.admission():  # the only slot held
+        status, body = handle(reg, "neighbors", {"node_ids": ["N:0"]}, "graft")
+        assert status == 200 and body["N:0"]
+        status, body = handle(reg, "neighbors", {"node_ids": ["N:0"]}, "spark")
+        assert status == 503 and "busy" in body["error"]
+
+
 def test_fair_pool_names_recycled(registry, spark):
     """Spark creates a FAIR pool for every new pool name and never drops
     one, so pool names are recycled: 50 sequential Spark-path queries add
@@ -431,7 +462,7 @@ def test_fair_pool_names_recycled(registry, spark):
     assert jsc.getAllPools().size() - before <= n
 
 
-def test_admission_control_backpressure(registry):
+def test_admission_control_backpressure(spark_bound):
     """Bounded-worker admission (reference nginx backlog + uWSGI pool,
     uwsgi.ini:33): beyond-backlog requests get 503 immediately; a queue
     wait past queue_wait_sec also 503s.  Neither ever 504s."""
@@ -441,7 +472,7 @@ def test_admission_control_backpressure(registry):
     from ploverdb_spark.query.compiler import QueryError
 
     reg = KpRegistry(max_workers=1, backlog=0, queue_wait_sec=0.05)
-    reg.register("graft", registry.engine("graft"))
+    reg.register("graft", spark_bound)
     # hold the only worker slot; with backlog 0 the next request 503s
     with reg.admission():
         status, body = handle(reg, "neighbors", {"node_ids": ["N:0"]})
@@ -453,14 +484,14 @@ def test_admission_control_backpressure(registry):
     # queue-wait timeout: one slot held, backlog allows queueing, but no
     # worker frees within queue_wait_sec
     reg2 = KpRegistry(max_workers=1, backlog=8, queue_wait_sec=0.05)
-    reg2.register("graft", registry.engine("graft"))
+    reg2.register("graft", spark_bound)
     with reg2.admission():
         status, body = handle(reg2, "neighbors", {"node_ids": ["N:0"]})
         assert status == 503 and "worker" in body["error"]
 
     # queued request proceeds once the worker frees (no 503)
     reg3 = KpRegistry(max_workers=1, backlog=8, queue_wait_sec=30)
-    reg3.register("graft", registry.engine("graft"))
+    reg3.register("graft", spark_bound)
     release = threading.Event()
     statuses = []
 
@@ -477,7 +508,7 @@ def test_admission_control_backpressure(registry):
     assert statuses == [200]
 
 
-def test_admission_sheds_doomed_requests_503_not_504(registry):
+def test_admission_sheds_doomed_requests_503_not_504(spark_bound):
     """Latency-aware shedding (reference SLO: 503 backpressure allowed,
     504 never): when the moving per-request latency estimate says a new
     arrival cannot finish inside the client window — a synthetic stall:
@@ -496,7 +527,7 @@ def test_admission_sheds_doomed_requests_503_not_504(registry):
         query_timeout_sec=45,
         client_window_sec=10.0,
     )
-    reg.register("graft", registry.engine("graft"))
+    reg.register("graft", spark_bound)
 
     # cold process: no latency evidence yet -> admit normally
     status, _ = handle(reg, "neighbors", {"node_ids": ["N:0"]})
@@ -544,7 +575,7 @@ def test_admission_sheds_doomed_requests_503_not_504(registry):
     assert status == 200
 
 
-def test_shed_recovery_admits_on_stale_ewma(registry):
+def test_shed_recovery_admits_on_stale_ewma(spark_bound):
     """Recovery path of the shedding estimate (observed live in round 11:
     a recovered host's 100-request burst shed 89 on a stale-high EWMA
     while the 11 admitted finished in milliseconds).  The EWMA learns
@@ -570,7 +601,7 @@ def test_shed_recovery_admits_on_stale_ewma(registry):
         query_timeout_sec=45,
         client_window_sec=30.0,
     )
-    reg.register("graft", registry.engine("graft"))
+    reg.register("graft", spark_bound)
 
     # Stale-high evidence: the estimate alone would 503 anything
     # (est >= 60s >> 30s window) — but the pool is idle, so ahead stays
@@ -603,7 +634,7 @@ def test_shed_recovery_admits_on_stale_ewma(registry):
         assert reg._lat_ewma < 30.0
 
 
-def test_doom_park_rescued_by_live_completions(registry):
+def test_doom_park_rescued_by_live_completions(spark_bound):
     """A doom verdict must survive one round of live evidence before
     firing: an arrival judged doomed on a fresh-but-wrong EWMA (host
     recovered between bursts — observed live as 79-82/100 false sheds)
@@ -621,7 +652,7 @@ def test_doom_park_rescued_by_live_completions(registry):
         query_timeout_sec=45,
         client_window_sec=10.0,  # park budget = 10/30 ~ 0.33s
     )
-    reg.register("graft", registry.engine("graft"))
+    reg.register("graft", spark_bound)
     for _ in range(6):
         reg._note_latency(60.0)  # doom-grade, fresh
 
@@ -663,7 +694,7 @@ def test_doom_park_rescued_by_live_completions(registry):
     assert time.monotonic() - t0 < 30
 
 
-def test_shed_requires_fresh_evidence(registry):
+def test_shed_requires_fresh_evidence(spark_bound):
     """A saturated pool plus a stale-high EWMA must still admit: any
     100-wave saturates the pool within milliseconds, so the saturation
     guard alone cannot stop a mass-shed on evidence describing a window
@@ -682,7 +713,7 @@ def test_shed_requires_fresh_evidence(registry):
         query_timeout_sec=45,
         client_window_sec=10.0,
     )
-    reg.register("graft", registry.engine("graft"))
+    reg.register("graft", spark_bound)
     for _ in range(6):
         reg._note_latency(60.0)  # doom-grade estimate, currently fresh
 
@@ -727,7 +758,7 @@ def test_shed_requires_fresh_evidence(registry):
     assert ok == [200]
 
 
-def test_dequeue_shed_past_client_window(registry):
+def test_dequeue_shed_past_client_window(spark_bound):
     """Dequeue-time window re-check: a request admitted on healthy
     evidence but left queueing past the client window must 503 the
     moment it gets a slot (its wait is ground truth — the caller is
@@ -766,7 +797,7 @@ def test_dequeue_shed_past_client_window(registry):
         query_timeout_sec=45,
         client_window_sec=0.3,
     )
-    reg.register("graft", registry.engine("graft"))
+    reg.register("graft", spark_bound)
     status, body = run_queued(reg, hold_sec=0.6)  # waited 0.6s > 0.3s window
     assert status == 503, body
     assert "client window" in body["error"]
@@ -779,7 +810,7 @@ def test_dequeue_shed_past_client_window(registry):
         query_timeout_sec=45,
         client_window_sec=60.0,
     )
-    reg2.register("graft", registry.engine("graft"))
+    reg2.register("graft", spark_bound)
     status, _ = run_queued(reg2, hold_sec=0.1)
     assert status == 200
 

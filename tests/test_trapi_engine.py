@@ -13,7 +13,7 @@ from collections import Counter
 from ploverdb_spark.build.ingest import build_knowledge_graph
 from ploverdb_spark.query import response
 from ploverdb_spark.query.compiler import QueryError, TrapiEngine
-from ploverdb_spark.query.response import get_edges, get_neighbors
+from ploverdb_spark.query.response import get_edges
 from ploverdb_spark.sources.kgx import KgxConfig
 
 NODES = [
@@ -157,6 +157,20 @@ def run_query(engine: TrapiEngine, query: dict) -> dict:
     assert Counter(map(_canonical_result, indexed["message"]["results"])) == Counter(
         map(_canonical_result, spark["message"]["results"])
     ), "results differ between the index and Spark"
+    return indexed
+
+
+def get_neighbors(
+    engine: TrapiEngine, node_ids: list, categories=None, predicates=None
+) -> dict:
+    """``response.get_neighbors`` on both paths: the warmed driver index
+    (``engine``, with Spark disallowed) and Spark (``spark_twin(engine)``).
+    Both must return the same neighbour lists; returns the indexed ones."""
+    engine.warmup()
+    indexed = response.get_neighbors(engine, node_ids, categories, predicates, spark=False)
+    assert indexed is not None, "the driver index did not answer"
+    spark = response.get_neighbors(spark_twin(engine), node_ids, categories, predicates)
+    assert indexed == spark, "neighbours differ between the index and Spark"
     return indexed
 
 
@@ -1208,3 +1222,83 @@ def test_indexed_query_runs_no_spark_job(engine):
         attribute_constraints=[{"id": "knowledge_level", "operator": "==", "value": "prediction"}],
     )
     assert response.run_query(engine, constrained, spark=False) is None
+
+
+NEIGHBOR_CASES = [
+    (["GENE:1"], None, None),  # self-loop; GENE:2 missing from odd_engine's nodes
+    (["GENE:1"], ["biolink:Gene"], None),
+    (["GENE:1", "GENE:2", "CHEM:2"], None, ["biolink:interacts_with", "biolink:affects"]),
+    (["CHEM:2"], ["biolink:Gene", "biolink:Drug"], ["biolink:affects"]),
+    (["CHEM:1", "CHEM:alias1"], None, None),  # two aliases of one node
+    (["CHEM:1", "DIS:parent", "GENE:1"], None, ["biolink:treats"]),  # directed, either end
+    (["DIS:parent"], None, ["biolink:treated_by"]),
+    (["DIS:parent", "DIS:child"], ["biolink:ChemicalEntity"], None),
+    (["NOPE:1", "CHEM:1", "NOPE:1"], ["biolink:Disease"], None),  # unknown ids
+    ([], ["biolink:Disease"], ["biolink:treats"]),
+]
+
+
+@pytest.mark.parametrize(
+    "fixture", ["engine", "numeric_id_engine", "int_prop_engine", "odd_engine"]
+)
+def test_neighbors_index_matches_spark(request, fixture):
+    """/neighbors gives the same lists from the driver index as from
+    Spark on every fixture KG, for self-loops, a neighbour missing from
+    the node table, aliases, directed predicates pinned from either end,
+    unknown ids and an empty batch (get_neighbors compares them)."""
+    eng = request.getfixturevalue(fixture)
+    answered = 0
+    for node_ids, categories, predicates in NEIGHBOR_CASES:
+        out = get_neighbors(eng, node_ids, categories, predicates)
+        assert sorted(out) == sorted(set(node_ids))
+        answered += sum(map(bool, out.values()))
+    assert answered >= 5  # not vacuously: many lists are non-empty
+
+
+def test_neighbors_aliases_and_direction(odd_engine):
+    """Two aliases of one node read its neighbour set; a directed
+    predicate counts from the subject only; a self-loop is its own
+    neighbour; a neighbour missing from the node table matches no
+    category."""
+    out = get_neighbors(odd_engine, ["CHEM:1", "CHEM:alias1", "DIS:parent"], None, ["biolink:treats"])
+    assert out["CHEM:1"] == out["CHEM:alias1"] == ["DIS:grandchild", "DIS:parent", "MIXED:1"]
+    assert out["DIS:parent"] == []
+    assert get_neighbors(odd_engine, ["GENE:1"]) == {"GENE:1": ["CHEM:1", "CHEM:2", "GENE:1"]}
+    assert get_neighbors(odd_engine, ["GENE:1"], ["biolink:Gene"]) == {"GENE:1": ["GENE:1"]}
+
+
+def test_indexed_neighbors_runs_no_spark_job(engine):
+    """A /neighbors batch on a warmed engine is answered from the driver
+    index with zero Spark jobs (by the status tracker)."""
+    engine.warmup()
+    tracker = engine.spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or ())
+    out = response.get_neighbors(
+        engine, ["CHEM:1", "CHEM:alias1", "GENE:1", "NOPE:1"], spark=False
+    )
+    assert len(tracker.getJobIdsForGroup(None) or ()) == before
+    assert "DIS:parent" in out["CHEM:alias1"] and out["NOPE:1"] == []
+    # over the guard the batch needs Spark: no answer without it
+    assert response.get_neighbors(spark_twin(engine), ["CHEM:1"], spark=False) is None
+
+
+@pytest.mark.parametrize(
+    "fixture", ["engine", "numeric_id_engine", "int_prop_engine", "odd_engine"]
+)
+def test_index_vocab_matches_spark(request, fixture):
+    """With the graph index built, the KG vocab and the conglomerate index
+    are read off it with no Spark job, and equal the structures the
+    edges_bidir scans build."""
+    kg = request.getfixturevalue(fixture).kg
+    eng = TrapiEngine(kg, kp_infores_curie="infores:test-kp")
+    assert eng._index.graph() is not None
+    tracker = eng.spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or ())
+    vocab, congl = eng._get_kg_vocab(), eng._conglomerate_descendant_index()
+    assert len(tracker.getJobIdsForGroup(None) or ()) == before
+    scanned = TrapiEngine(kg, kp_infores_curie="infores:test-kp", driver_map_max_rows=0)
+    assert vocab == scanned._get_kg_vocab()
+    assert congl == scanned._conglomerate_descendant_index()
+    # not vacuously: a qualified edge (e5) exists except among
+    # numeric_id_engine's gene-free edges
+    assert bool(congl) == (fixture != "numeric_id_engine")
