@@ -147,11 +147,10 @@ class KpRegistry:
     connection buffering in front of a bounded uWSGI worker pool,
     README.md:505-511 + uwsgi.ini:33): at most ``max_workers`` Spark-heavy
     requests (query/edges/neighbors the driver index cannot answer)
-    execute concurrently, up to
-    ``backlog`` more wait in queue, anything beyond that — or a queue wait
-    exceeding ``queue_wait_sec`` — gets 503 backpressure (the burst SLO
-    allows 503s, never 504s).  Crucially the harakiri clock starts when a
-    worker PICKS UP the request, exactly like uWSGI's — without the pool,
+    execute concurrently, up to ``backlog`` more wait in queue, anything
+    beyond that — or a queue wait exceeding ``queue_wait_sec`` — gets
+    503 backpressure (the burst SLO allows 503s, never 504s).  Crucially
+    the harakiri clock starts when a worker PICKS UP the request, exactly like uWSGI's — without the pool,
     a 100-request burst puts queueing time inside every request's 45 s
     window and the tail mass-504s.  ``max_workers=None`` disables the
     pool (unit-test mode)."""
@@ -782,20 +781,15 @@ def handle(
                 return 200, get_edges(eng, payload.get("pairs", []))
         if path == "neighbors":
             eng = registry.engine(endpoint)
-            args = (
-                eng,
-                payload.get("node_ids", []),
-                payload.get("categories"),
-                payload.get("predicates"),
-            )
+            args = (eng, payload.get("node_ids", []), payload.get("categories"),
+                    payload.get("predicates"))
 
             def on_spark() -> dict:
                 with _request_pool(eng):
                     return get_neighbors(*args)
 
             return 200, _indexed_else_admitted(
-                registry, lambda: get_neighbors(*args, spark=False), on_spark
-            )
+                registry, lambda: get_neighbors(*args, spark=False), on_spark)
         if path == "meta_knowledge_graph":
             return 200, registry.meta_kg(endpoint)
         if path == "sri_test_triples":

@@ -123,11 +123,9 @@ def pushdown_id_filter(df: DataFrame, col_name: str, ids) -> DataFrame:
 
 
 def predicate_filter(compiled: CompiledQEdge) -> Column:
-    """F2/F4 over ``edges_bidir``: the bidirectional predicates in either
-    direction, the directed ones in the required direction; TRUE when the
-    compile proved the filter matches every row.  Expanded sets can reach
-    hundreds of descendants — in_predicate keeps construction at one py4j
-    call per set."""
+    """F2/F4 over ``edges_bidir`` (TRUE when the compile proved it
+    matches every row).  Expanded sets can reach hundreds of descendants —
+    in_predicate keeps construction at one py4j call per set."""
     if compiled.skip_predicate_filter:
         return F.lit(True)
     col = "conglomerate_predicate" if compiled.use_conglomerate else "predicate"
@@ -141,8 +139,8 @@ def predicate_filter(compiled: CompiledQEdge) -> Column:
 
 
 def category_filter(compiled: CompiledQEdge) -> Column:
-    """F1: the neighbour carries one of the compiled categories; TRUE when
-    the compile proved the filter matches every row."""
+    """F1 over ``edges_bidir`` (TRUE when the compile proved it matches
+    every row)."""
     if compiled.skip_category_filter:
         return F.lit(True)
     return F.arrays_overlap(
@@ -744,14 +742,11 @@ class TrapiEngine:
         self, node_ids: list[str], categories=None, predicates=None
     ) -> CompiledQEdge:
         """The driver-only half of /neighbors (J11): each id is the
-        subject of a qedge with ``predicates`` to an unpinned node of
-        ``categories`` (the reference routes /neighbors through
-        _lookup_answers that way), so expansion, vocab pruning and
-        canonicalization are the one-hop compile's.  No subclass
-        expansion, by design: each canonical id is bound to itself in
-        ``input_pairs``, and ``input_ids`` holds the canonical id of each
-        of ``node_ids``, in order.  Runs no Spark job while the driver
-        maps fit."""
+        subject of a qedge to an unpinned node (the reference routes
+        /neighbors through _lookup_answers so), compiled like a one-hop
+        but with no subclass expansion, by design: ``input_pairs`` binds
+        each canonical id to itself, and ``input_ids`` holds the canonical
+        id of each of ``node_ids``, in order."""
         canon = self.canonicalize_ids(node_ids)
         compiled = CompiledQEdge(
             qedge_key="",

@@ -808,21 +808,16 @@ def get_neighbors(
     spark: bool = True,
 ) -> dict[str, list[str]] | None:
     """POST /neighbors (J11, plover.py:1982-2009): each id's sorted
-    neighbour ids, by the one-hop semantics of ``compile_neighbors``.  Ids
-    only, no subclass reasoning.
+    neighbour ids, by the semantics of ``compile_neighbors``.
 
-    When the driver index (query/index.py) holds the KG, ``match`` finds
-    the rows with no Spark job.  Else one Spark job per batch (the
-    Pathfinder repeat-batch shape, test_get_neighbors_batch_is_single_job):
-    the pinned ids reach the scan as the BETWEEN+IN filter that prunes the
-    bucketed/cached table — no tiny-DF build, no broadcast-exchange job —
-    and one groupBy + collect_set.  Either way neighbours are grouped by
-    canonical id, and each requested id reads its canonical id's set (two
-    aliases of one node share a neighbour set by definition).
-
+    The driver index (query/index.py), when it holds the KG, answers with
+    no Spark job.  Else one Spark job per batch (the Pathfinder
+    repeat-batch shape): the ids reach the scan as the BETWEEN+IN filter
+    that prunes the bucketed/cached table — no tiny-DF build, no
+    broadcast-exchange job — then one groupBy + collect_set.  Neighbours
+    are grouped by canonical id; two aliases of one node share its set.
     With ``spark=False`` a batch that needs Spark returns None before
-    running a job, so api.handle can answer the others on the request
-    thread."""
+    running a job."""
     if not node_ids:
         return {}
     index = engine.graph_index(build=spark)
