@@ -180,6 +180,7 @@ class TrapiEngine:
             else answer_cutoff
         )
         self._conglomerate_index: dict[str, set[str]] | None = None
+        self._warm = False
         self._driver_map_max_rows = (
             driver_map_max_rows
             if driver_map_max_rows is not None
@@ -212,35 +213,31 @@ class TrapiEngine:
         ad-hoc callers keep deterministic job ordering.
 
         The graph index is built first: when the KG fits the guard, the
-        vocab and the conglomerate index derive from it with no scan."""
+        vocab and the conglomerate index derive from it with no scan.
+        Every build runs on a pool thread, in both modes: the graph
+        build on the main thread left the driver's peak RSS ~24 MB
+        higher (benchmark graph, glibc)."""
+        if self._warm:
+            return self
+        from concurrent.futures import ThreadPoolExecutor
+
         builders = (
             self._index.build,
             self._conglomerate_descendant_index,
             self._get_kg_vocab,
         )
-        if not parallel:
-            for b in (self._index.graph, *builders):
-                b()
-            return self
-        from concurrent.futures import ThreadPoolExecutor
-
         sc = self.spark.sparkContext
 
         def run(b) -> None:
-            sc.setLocalProperty(
-                "spark.scheduler.pool", f"warmup-{b.__name__}"
-            )
-            try:
-                b()
-            finally:
-                sc.setLocalProperty("spark.scheduler.pool", None)
+            pool = f"warmup-{b.__name__}" if parallel else None
+            sc.setLocalProperty("spark.scheduler.pool", pool)
+            b()
 
-        with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-            # on a pool thread too: the same build on the main thread left
-            # the driver's peak RSS 24 MB higher (benchmark graph, glibc)
+        with ThreadPoolExecutor(max_workers=len(builders) if parallel else 1) as pool:
             pool.submit(run, self._index.graph).result()
             # list() propagates the first builder exception, if any
             list(pool.map(run, builders))
+        self._warm = True
         return self
 
     def graph_index(self, build: bool = True) -> GraphIndex | None:

@@ -22,7 +22,7 @@ import ctypes
 import functools
 import threading
 from bisect import bisect_left, bisect_right
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 
 import numpy as np
 import pyarrow as pa
@@ -90,6 +90,9 @@ class Match:
     def __len__(self) -> int:
         return len(self.rows)
 
+    def __getitem__(self, s: slice) -> "Match":
+        return Match(*(getattr(self, f.name)[s] for f in fields(self)))
+
 
 class GraphIndex:
     """Node table, CSR adjacency, codes and edge payload of a KG (see the
@@ -148,6 +151,11 @@ class GraphIndex:
                     )
         del edges, table_ids
         self.edges = pa.table(columns)
+        # a dictionary column's values, None last, indexed by its codes:
+        # take() + to_pylist() on a DictionaryArray costs ~4 us a row
+        self._decoded = {
+            c: np.array([*vocab[c], None], dtype=object) for c in vocab
+        }
         # code -> id, and the ids sorted for bisection
         self.node_ids = pa.chunked_array(self.nodes["id"].chunks + [missing])
         order = pc.sort_indices(self.node_ids)
@@ -299,36 +307,41 @@ class GraphIndex:
                 best[eid] = ((d != DIR_FORWARD, i), k)
         return np.array(sorted(k for _, k in best.values()), dtype=np.int64)
 
-    def columns(self, m: Match, payload=None) -> dict[str, list]:
+    def columns(self, m: Match) -> dict[str, list]:
         """The answer rows column by column, keyed like the Spark probe's
-        rows: traversal columns, the edge payload in table order (or just
-        ``payload``), neighbour categories and the bound query ids."""
-        full = payload is None
-        cols: dict[str, list] = {"output_id": self.ids(m.out), "input_id": self.ids(m.inp)}
-        if full:
-            cols["direction"] = m.dirs.tolist()
-        for c in self.edges.column_names if full else payload:
-            cols[c] = self.edges[c].take(pa.array(m.rows)).to_pylist()
-        if full:
-            missing = m.out >= self.n_table_nodes
-            cols["neighbor_categories"] = (
-                self.nodes["categories"].take(pa.array(m.out, mask=missing)).to_pylist()
+        rows: traversal columns, the edge payload in table order,
+        neighbour categories and the bound query ids."""
+        cols = {"output_id": self.ids(m.out), "input_id": self.ids(m.inp)}
+        cols["direction"] = m.dirs.tolist()
+        rows = pa.array(m.rows)
+        for c in self.edges.column_names:
+            col, values = self.edges[c].chunk(0).take(rows), self._decoded.get(c)
+            cols[c] = (
+                col.to_pylist() if values is None else values[_codes(col, len(values) - 1)].tolist()
             )
+        missing = m.out >= self.n_table_nodes
+        cols["neighbor_categories"] = (
+            self.nodes["categories"].take(pa.array(m.out, mask=missing)).to_pylist()
+        )
         cols["input_query_id"], cols["output_query_id"] = m.in_qids, m.out_qids
         return cols
 
     def ids(self, codes: np.ndarray) -> list:
         return self.node_ids.take(pa.array(codes)).to_pylist()
 
-    def key_rows(self, m: Match) -> list[dict]:
-        """The columns result grouping reads, one dict per answer row."""
-        cols = self.columns(m, payload=["id"])
-        return [dict(zip(cols, values)) for values in zip(*cols.values())]
+    def endpoints(self, m: Match) -> np.ndarray:
+        """The node codes of an answer's endpoints that have a node row."""
+        codes = np.unique(np.concatenate([m.inp, m.out]))
+        return codes[codes < self.n_table_nodes]
+
+    def rows_at(self, codes) -> list[dict]:
+        """The node-table rows of node codes."""
+        return self.nodes.take(pa.array(codes, pa.int64())).to_pylist()
 
     def node_rows(self, node_ids) -> list[dict]:
         """Node-table rows of ``node_ids``; ids without a node are skipped."""
         rows = [c for c in map(self.code, node_ids) if c is not None and c < self.n_table_nodes]
-        return self.nodes.take(pa.array(rows, pa.int64())).to_pylist()
+        return self.rows_at(rows)
 
     def stats(self) -> dict:
         arrays = (

@@ -3,9 +3,9 @@
 Reference behavior reimplemented (NOT ported): plover.py:2121-2416.
 Every one-hop response is built in one pass, as in the reference: answer
 edges -> results grouped driver-side by (input, output) -> serialized
-nodes and edges -> one TRAPI envelope.  Only the serialization step
-depends on the answer size: big answers are serialized executor-side by a
-mapInPandas JSON stage, small ones by the driver.
+nodes and edges -> one TRAPI envelope.  On the Spark path only the
+serialization step depends on the answer size: big answers are serialized
+executor-side by a mapInPandas JSON stage, small ones by the driver.
 
 Core vs attribute properties follow the reference's split
 (plover.py:699-704): core node/edge properties become TRAPI structure;
@@ -14,7 +14,9 @@ everything else becomes an entry in ``attributes``.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import threading
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -306,54 +308,104 @@ def _endpoint_ids(rows) -> set:
     return {r["input_id"] for r in rows} | {r["output_id"] for r in rows}
 
 
+# While a big answer is built from the driver index, holding the GIL, a
+# small request waits up to the switch interval (5 ms) to get the GIL
+# back after every Arrow or numpy call (benchmark graph: small-query p50
+# 2.8 -> 131-184 ms).  So an indexed request whose answer fits one slice
+# holds a small turn from compile to envelope, and a bigger answer is
+# built SLICE_ROWS rows at a time, waiting before each slice while a
+# small turn is open, at most SLICE_WAIT_S, so it is never starved.
+SLICE_ROWS = 256
+SLICE_WAIT_S = 0.03
+
+
+class YieldGate:
+    """The process-wide count of open small turns."""
+
+    def __init__(self) -> None:
+        self._cond = threading.Condition()
+        self._open = 0
+
+    @contextlib.contextmanager
+    def small_turn(self):
+        with self._cond:
+            self._open += 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._open -= 1
+                self._cond.notify_all()
+
+    def wait(self) -> None:
+        """Wait until no small turn is open, at most SLICE_WAIT_S."""
+        with self._cond:
+            self._cond.wait_for(lambda: not self._open, SLICE_WAIT_S)
+
+
+GATE = YieldGate()
+
+
+def _slices(n: int, yielding: bool):
+    """``range(n)`` in SLICE_ROWS slices; a ``yielding`` build waits at the gate before each."""
+    for lo in range(0, n, SLICE_ROWS):
+        if yielding:
+            GATE.wait()
+        yield slice(lo, lo + SLICE_ROWS)
+
+
 def _assemble_results_local(
-    rows, compiled: CompiledQEdge, qg: dict, kp_infores_curie: str
+    rows, compiled: CompiledQEdge, qg: dict, kp_infores_curie: str, yielding: bool = False
 ) -> list[dict]:
     """A6 + O3 (plover.py:2330-2406): group answer key rows into results
     keyed by (input-or-*, output-or-*) depending on is_set.  Edge ids are
     bound as strings: knowledge_graph edge keys are JSON object keys, so a
-    numeric edge-id column must bind by the same string key."""
+    numeric edge-id column must bind by the same string key (``yielding``:
+    see _slices)."""
     qnodes = qg["nodes"]
     in_set = bool(qnodes[compiled.input_qnode_key].get("is_set"))
     out_set = bool(qnodes[compiled.output_qnode_key].get("is_set"))
     groups: dict[tuple, dict] = {}
-    for r in rows:
-        key = (
-            "*" if in_set else r["input_id"],
-            "*" if out_set else r["output_id"],
-        )
-        g = groups.setdefault(
-            key, {"edge_ids": set(), "inputs": set(), "outputs": set()}
-        )
-        g["edge_ids"].add(str(r["id"]))
-        g["inputs"].add((r["input_id"], r["input_query_id"]))
-        g["outputs"].add((r["output_id"], r["output_query_id"]))
+    for s in _slices(len(rows), yielding):
+        for r in rows[s]:
+            key = (
+                "*" if in_set else r["input_id"],
+                "*" if out_set else r["output_id"],
+            )
+            g = groups.setdefault(
+                key, {"edge_ids": set(), "inputs": set(), "outputs": set()}
+            )
+            g["edge_ids"].add(str(r["id"]))
+            g["inputs"].add((r["input_id"], r["input_query_id"]))
+            g["outputs"].add((r["output_id"], r["output_query_id"]))
+    grouped = list(groups.values())
     results = []
-    for g in groups.values():
-        results.append(
-            {
-                "node_bindings": {
-                    compiled.input_qnode_key: [
-                        _result_node_binding(i, q) for i, q in g["inputs"]
+    for s in _slices(len(grouped), yielding):
+        for g in grouped[s]:
+            results.append(
+                {
+                    "node_bindings": {
+                        compiled.input_qnode_key: [
+                            _result_node_binding(i, q) for i, q in g["inputs"]
+                        ],
+                        compiled.output_qnode_key: [
+                            _result_node_binding(o, q) for o, q in g["outputs"]
+                        ],
+                    },
+                    "analyses": [
+                        {
+                            "edge_bindings": {
+                                compiled.qedge_key: [
+                                    {"id": e, "attributes": []}
+                                    for e in g["edge_ids"]
+                                ]
+                            },
+                            "resource_id": kp_infores_curie,
+                        }
                     ],
-                    compiled.output_qnode_key: [
-                        _result_node_binding(o, q) for o, q in g["outputs"]
-                    ],
-                },
-                "analyses": [
-                    {
-                        "edge_bindings": {
-                            compiled.qedge_key: [
-                                {"id": e, "attributes": []}
-                                for e in g["edge_ids"]
-                            ]
-                        },
-                        "resource_id": kp_infores_curie,
-                    }
-                ],
-                "resource_id": kp_infores_curie,
-            }
-        )
+                    "resource_id": kp_infores_curie,
+                }
+            )
     return results
 
 
@@ -478,11 +530,11 @@ def _fetch_nodes(engine: TrapiEngine, node_ids, shells) -> dict[str, dict]:
     }
 
 
-# Below this many answer edges a driver-side loop beats the Python-worker
-# spin-up of the distributed serializer; above it, mapInPandas wins and
-# keeps winning all the way to the 1M-edge cutoff.  (Measured at the 30M-
-# edge burst: routing ~3k-edge answers through the distributed path costs
-# more in extra per-query actions than it saves in driver GIL time.)
+# The Spark path's only (indexed answers of any size are built on the
+# driver): below this many answer edges a driver-side loop beats the
+# Python-worker spin-up of the distributed serializer; above it,
+# mapInPandas wins all the way to the 1M-edge cutoff.  (30M-edge burst:
+# ~3k-edge answers cost more in extra actions than they save in GIL time.)
 DISTRIBUTED_SERIALIZE_MIN_EDGES = 5000
 
 
@@ -581,16 +633,16 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | No
     Every one-hop response takes one path: answer rows -> results grouped
     driver-side (_assemble_results_local) -> serialized edges and nodes ->
     one envelope.  When the driver index (query/index.py) holds the KG
-    and the query has no attribute constraints, the index finds the rows
-    and counts them: over the cutoff is a 403, up to
-    DISTRIBUTED_SERIALIZE_MIN_EDGES rows are serialized from the index
-    with no Spark job, and bigger answers by hydrate_knowledge_graph's
-    two executor-side actions.  Without the index a bounded probe collect
-    measures the answer: small ones cost it plus one node fetch (2
-    actions), big ones are persisted, cutoff-checked and key-collected
-    first (5 actions, 4 without a cutoff).  Under concurrent load job
-    count IS the latency (measured at reference scale: 100-burst wall
-    time tracks total job count, not scan cost).
+    and the query has no attribute constraints, the index finds and
+    counts the rows (over the cutoff is a 403) and builds the answer,
+    whatever its size, with no Spark job; one bigger than a slice yields
+    to small requests between slices (YieldGate).  Otherwise a bounded
+    probe collect measures the answer: small ones cost it plus one node
+    fetch (2 actions); ones over DISTRIBUTED_SERIALIZE_MIN_EDGES are
+    persisted, cutoff-checked, key-collected and serialized by
+    hydrate_knowledge_graph (5 actions, 4 without a cutoff).  Under
+    concurrent load job count IS the latency (measured at reference
+    scale: 100-burst wall time tracks total job count, not scan cost).
 
     With ``spark=False`` a query that needs Spark returns None before
     running a job, so api.handle can answer the others on the request
@@ -625,81 +677,72 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | No
 
     shells = attribute_shells_for(engine.kg.config)
     kp = engine.kp_infores_curie
-    compiled = engine.compile(qg) if index is not None else None
-    if compiled is not None and not compiled.attribute_constraints:
-        match = index.match(compiled)
-        engine.check_answer_size(len(match))
-        if len(match) <= DISTRIBUTED_SERIALIZE_MIN_EDGES:
-            rows = index.key_rows(match)
-            edges = _index_edges(index, match, kp, shells)
-            nodes = _index_nodes(index, _endpoint_ids(rows), kp, shells)
-        elif not spark:
-            return None
-        else:
-            rows = index.key_rows(match)
-            _, answers = engine.lookup(
-                qg, persist_answers=False, enforce_cutoff=False, compiled=compiled
-            )
-            nodes, edges = hydrate_knowledge_graph(
-                engine, answers, _endpoint_ids(rows)
-            )
-    elif not spark:
+    compiled = match = None
+    if index is not None:
+        with GATE.small_turn():
+            compiled = engine.compile(qg)
+            if not compiled.attribute_constraints:
+                match = index.match(compiled)
+                engine.check_answer_size(len(match))
+                if len(match) <= SLICE_ROWS:
+                    return _index_response(engine, index, match, compiled, qg, logs, False)
+    if match is not None:  # a big answer, built outside the small turn
+        return _index_response(engine, index, match, compiled, qg, logs, True)
+    if not spark:
         return None
-    else:
-        compiled, matched = engine.lookup(
-            qg, persist_answers=False, enforce_cutoff=False, compiled=compiled
-        )
-        probe_n = DISTRIBUTED_SERIALIZE_MIN_EDGES
-        if engine.answer_cutoff is not None:
-            probe_n = min(probe_n, engine.answer_cutoff)
-        rows = _collect_dicts(matched.limit(probe_n + 1))
-        if len(rows) <= probe_n:
-            # every answer row is in hand (and under the cutoff)
-            edges = {
-                str(d["id"]): _answer_edge_to_trapi(d, kp, shells) for d in rows
-            }
-            nodes = _fetch_nodes(engine, _endpoint_ids(rows), shells)
-        else:
-            answers = matched.persist()
-            try:
-                engine.enforce_answer_cutoff(answers)
-                # the columns that result grouping reads
-                rows = _collect_dicts(
-                    answers.select(
-                        "id", "input_id", "output_id", "input_query_id", "output_query_id"
-                    )
-                )
-                nodes, edges = hydrate_knowledge_graph(
-                    engine, answers, _endpoint_ids(rows)
-                )
-            finally:
-                answers.unpersist()
-    results = _assemble_results_local(rows, compiled, qg, kp)
-    logs.append(
-        _log_entry("INFO", f"Done with query, returning {len(results)} results")
+    compiled, matched = engine.lookup(
+        qg, persist_answers=False, enforce_cutoff=False, compiled=compiled
     )
+    probe_n = DISTRIBUTED_SERIALIZE_MIN_EDGES
+    if engine.answer_cutoff is not None:
+        probe_n = min(probe_n, engine.answer_cutoff)
+    rows = _collect_dicts(matched.limit(probe_n + 1))
+    if len(rows) <= probe_n:
+        # every answer row is in hand (and under the cutoff)
+        edges = {str(d["id"]): _answer_edge_to_trapi(d, kp, shells) for d in rows}
+        nodes = _fetch_nodes(engine, _endpoint_ids(rows), shells)
+    else:
+        answers = matched.persist()
+        try:
+            engine.enforce_answer_cutoff(answers)
+            # the columns that result grouping reads
+            rows = _collect_dicts(answers.select(*_KEY_COLS))
+            nodes, edges = hydrate_knowledge_graph(engine, answers, _endpoint_ids(rows))
+        finally:
+            answers.unpersist()
+    results = _assemble_results_local(rows, compiled, qg, kp)
+    return _response(qg, nodes, edges, results, logs)
+
+
+def _response(qg: dict, nodes: dict, edges: dict, results: list, logs: list) -> dict:
+    logs.append(_log_entry("INFO", f"Done with query, returning {len(results)} results"))
     return {**_envelope(qg, nodes, edges, results), "logs": logs}
 
 
-def _index_edges(index, match, kp_infores_curie: str, shells) -> dict[str, dict]:
-    """TRAPI edges of an indexed answer.  Its rows are filled into one
-    reused dict, column by column, so an answer costs no dict per row."""
-    cols = index.columns(match)
-    edges: dict[str, dict] = {}
-    row: dict = {}
-    for i in range(len(match)):
-        for c, values in cols.items():
-            row[c] = values[i]
-        edges[str(row["id"])] = _answer_edge_to_trapi(row, kp_infores_curie, shells)
-    return edges
+# the answer columns result grouping reads
+_KEY_COLS = ("id", "input_id", "output_id", "input_query_id", "output_query_id")
 
 
-def _index_nodes(index, node_ids, kp_infores_curie: str, shells) -> dict[str, dict]:
-    """TRAPI nodes of ``node_ids`` from the driver index's node table."""
-    return {
-        d["id"]: node_to_trapi(d, kp_infores_curie, shells)
-        for d in index.node_rows(node_ids)
-    }
+def _index_response(engine, index, match, compiled, qg, logs, yielding: bool) -> dict:
+    """The response of an indexed answer, built in slices (_slices).  A
+    slice's rows are filled into one reused dict, column by column, so an
+    edge costs no dict of its own."""
+    shells = attribute_shells_for(engine.kg.config)
+    kp = engine.kp_infores_curie
+    edges, rows, row, nodes = {}, [], {}, {}
+    for s in _slices(len(match), yielding):
+        cols = index.columns(match[s])
+        for i in range(len(cols["id"])):
+            for c, values in cols.items():
+                row[c] = values[i]
+            edges[str(row["id"])] = _answer_edge_to_trapi(row, kp, shells)
+            rows.append({c: row[c] for c in _KEY_COLS})
+    codes = index.endpoints(match)
+    for s in _slices(len(codes), yielding):
+        for d in index.rows_at(codes[s]):
+            nodes[d["id"]] = node_to_trapi(d, kp, shells)
+    results = _assemble_results_local(rows, compiled, qg, kp, yielding)
+    return _response(qg, nodes, edges, results, logs)
 
 
 def _run_single_node_query(
@@ -707,11 +750,13 @@ def _run_single_node_query(
 ) -> dict | None:
     shells = attribute_shells_for(engine.kg.config)
     if index is not None:
-        qnode_key, _, pairs = engine.compile_single_node(qg)
-        rows = [(q, n) for q, n in pairs if index.has_node(n)]
-        nodes = _index_nodes(
-            index, {n for _, n in rows}, engine.kp_infores_curie, shells
-        )
+        with GATE.small_turn():
+            qnode_key, _, pairs = engine.compile_single_node(qg)
+            rows = [(q, n) for q, n in pairs if index.has_node(n)]
+            nodes = {
+                d["id"]: node_to_trapi(d, engine.kp_infores_curie, shells)
+                for d in index.node_rows({n for _, n in rows})
+            }
     elif not spark:
         return None
     else:
@@ -823,13 +868,15 @@ def get_neighbors(
     index = engine.graph_index(build=spark)
     if index is None and not spark:
         return None
-    compiled = engine.compile_neighbors(node_ids, categories, predicates)
     neighbors: dict[str, set] = {}
     if index is not None:
-        match = index.match(compiled)
-        for q, n in zip(match.in_qids, index.ids(match.out)):
-            neighbors.setdefault(q, set()).add(n)
+        with GATE.small_turn():
+            compiled = engine.compile_neighbors(node_ids, categories, predicates)
+            match = index.match(compiled)
+            for q, n in zip(match.in_qids, index.ids(match.out)):
+                neighbors.setdefault(q, set()).add(n)
     else:
+        compiled = engine.compile_neighbors(node_ids, categories, predicates)
         canon_ids = [n for _, n in compiled.input_pairs]  # sorted
         bidir = engine.kg.edges_bidir
         if len(canon_ids) <= MAX_ISIN_PUSHDOWN:

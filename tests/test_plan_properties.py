@@ -576,12 +576,12 @@ def test_run_query_fast_path_action_count(spark):
 
 
 def test_run_query_big_path_action_count(spark, monkeypatch):
-    """The big-answer path (forced with DISTRIBUTED_SERIALIZE_MIN_EDGES=0)
-    runs the executor-side edge and node serializers.  Without the driver
-    index it first runs the bounded probe, the cutoff check and the
-    answer-key collect: 5 Spark actions.  The index counts the answer and
-    holds its keys, so it runs the 2 serializers only.  Result grouping
-    runs driver-side on the keys, with no Spark action of its own."""
+    """The big-answer path (forced with DISTRIBUTED_SERIALIZE_MIN_EDGES=0).
+    Without the driver index it runs the bounded probe, the cutoff check,
+    the answer-key collect and the executor-side edge and node
+    serializers: 5 Spark actions.  Result grouping runs driver-side on the
+    keys, with no Spark action of its own.  The index builds an answer of
+    any size on the driver: 0 actions and 0 jobs."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from ploverdb_spark.build.ingest import build_knowledge_graph
@@ -625,7 +625,7 @@ def test_run_query_big_path_action_count(spark, monkeypatch):
     # unindexed: the synonym and closure maps fit the guard, nodes and
     # edges do not (the Spark path as served at reference scale)
     maps_only = max(kg.id_synonyms.count(), kg.subclass_closure.count())
-    for max_rows, n_actions in ((None, 2), (maps_only, 5)):
+    for max_rows, n_actions in ((None, 0), (maps_only, 5)):
         eng = TrapiEngine(
             kg, kp_infores_curie="infores:test-kp", driver_map_max_rows=max_rows
         )
@@ -637,7 +637,7 @@ def test_run_query_big_path_action_count(spark, monkeypatch):
         jobs = len(tracker.getJobIdsForGroup(None) or ()) - before
         assert resp["message"]["results"]
         assert len(actions) == n_actions, f"big path ran actions {actions}"
-        assert jobs <= 9, f"big path ran {jobs} jobs"
+        assert jobs <= (9 if n_actions else 0), f"big path ran {jobs} jobs"
 
 
 def test_t7_vocab_topk_is_take_ordered(spark):

@@ -8,7 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 import json
+import threading
+import time
 from collections import Counter
+from unittest import mock
 
 from ploverdb_spark.build.ingest import build_knowledge_graph
 from ploverdb_spark.query import response
@@ -133,12 +136,15 @@ def run_query(engine: TrapiEngine, query: dict) -> dict:
     """``response.run_query`` on both answer paths: the driver index
     (``engine``) and Spark (``spark_twin(engine)``).  Both must raise the
     same error, or return the same nodes and edges (each entity's JSON
-    compared exactly, unsorted) and the same results as a multiset.
+    compared exactly, unsorted) and the same results as a multiset.  The
+    index side runs with slices of one row, so every indexed answer of two
+    or more rows takes the sliced build big answers take.
     Returns the indexed response."""
     outcomes = []
     for eng in (engine, spark_twin(engine)):
         try:
-            outcomes.append(response.run_query(eng, query))
+            with mock.patch.object(response, "SLICE_ROWS", 1):
+                outcomes.append(response.run_query(eng, query))
         except QueryError as e:
             outcomes.append(e)
     indexed, spark = outcomes
@@ -1222,6 +1228,101 @@ def test_indexed_query_runs_no_spark_job(engine):
         attribute_constraints=[{"id": "knowledge_level", "operator": "==", "value": "prediction"}],
     )
     assert response.run_query(engine, constrained, spark=False) is None
+
+
+def test_hub_sized_indexed_query_runs_no_spark_job(engine, monkeypatch):
+    """An indexed answer over DISTRIBUTED_SERIALIZE_MIN_EDGES and bigger
+    than one slice (both patched down to make the fixture's answer
+    hub-sized) is built from the driver index with zero Spark jobs."""
+    monkeypatch.setattr(response, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 0)
+    monkeypatch.setattr(response, "SLICE_ROWS", 1)
+    engine.warmup()
+    tracker = engine.spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or ())
+    resp = response.run_query(engine, one_hop({"ids": ["CHEM:1"]}, {}), spark=False)
+    assert len(tracker.getJobIdsForGroup(None) or ()) == before
+    assert set(resp["message"]["knowledge_graph"]["edges"]) == {"e1", "e2", "e5", "e8"}
+    assert len(resp["message"]["results"]) == 4
+
+
+def _count_calls(monkeypatch, owner, name: str) -> list:
+    """Wrap ``owner.name`` to record each call's first argument after self."""
+    calls: list = []
+    orig = getattr(owner, name)
+
+    def wrapped(self, *a, **kw):
+        calls.append(a[0] if a else None)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(owner, name, wrapped)
+    return calls
+
+
+def test_big_build_waits_for_small_turn(engine, monkeypatch):
+    """While a small turn is open, a big indexed build blocks at its first
+    slice boundary (no slice built), and resumes when the turn closes."""
+    from ploverdb_spark.query.index import GraphIndex
+
+    engine.warmup()
+    monkeypatch.setattr(response, "SLICE_ROWS", 1)
+    monkeypatch.setattr(response, "SLICE_WAIT_S", 60.0)
+    built = _count_calls(monkeypatch, GraphIndex, "columns")
+    out: list = []
+    qg = one_hop({"ids": ["CHEM:1"]}, {})
+    build = threading.Thread(target=lambda: out.append(response.run_query(engine, qg)))
+    with response.GATE.small_turn():
+        build.start()
+        build.join(0.5)
+        assert build.is_alive() and built == []
+    build.join(30)
+    assert not build.is_alive()
+    assert [len(m) for m in built] == [1, 1, 1, 1]
+    assert len(out[0]["message"]["results"]) == 4
+
+
+def test_big_build_wait_is_capped(engine, monkeypatch):
+    """With a small turn open throughout, a big build still finishes: it
+    waits SLICE_WAIT_S before each slice, and no longer."""
+    from ploverdb_spark.query.response import YieldGate
+
+    engine.warmup()
+    cap = 0.02
+    monkeypatch.setattr(response, "SLICE_ROWS", 1)
+    monkeypatch.setattr(response, "SLICE_WAIT_S", cap)
+    waits = _count_calls(monkeypatch, YieldGate, "wait")
+    with response.GATE.small_turn():
+        t0 = time.perf_counter()
+        resp = response.run_query(engine, one_hop({"ids": ["CHEM:1"]}, {}), spark=False)
+        elapsed = time.perf_counter() - t0
+    # 4 edge, 5 node, 4 grouping and 4 result slices
+    assert len(waits) == 17
+    # the build's own work is milliseconds; the rest of the second is
+    # slack for a loaded host
+    assert len(waits) * cap <= elapsed < len(waits) * cap + 1.0
+    assert len(resp["message"]["results"]) == 4
+
+
+@pytest.mark.parametrize("how", ["sequential", "parallel", "first_query"])
+def test_graph_index_built_on_pool_thread(engine, monkeypatch, how):
+    """warmup builds the graph index on a pool thread in both modes, and
+    so does an unwarmed engine's first query: built on the main thread,
+    the driver's peak RSS ends ~24 MB higher."""
+    from ploverdb_spark.query.index import GraphIndex
+
+    threads: list = []
+    init = GraphIndex.__init__
+
+    def recording(self, *a, **kw):
+        threads.append(threading.current_thread())
+        init(self, *a, **kw)
+
+    monkeypatch.setattr(GraphIndex, "__init__", recording)
+    eng = TrapiEngine(engine.kg, kp_infores_curie=engine.kp_infores_curie)
+    if how == "first_query":
+        assert eng.graph_index() is not None
+    else:
+        eng.warmup(parallel=how == "parallel")
+    assert len(threads) == 1 and threads[0] is not threading.main_thread()
 
 
 NEIGHBOR_CASES = [
