@@ -675,8 +675,6 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | No
         finally:
             answers.unpersist()
 
-    shells = attribute_shells_for(engine.kg.config)
-    kp = engine.kp_infores_curie
     compiled = match = None
     if index is not None:
         with GATE.small_turn():
@@ -690,6 +688,8 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | No
         return _index_response(engine, index, match, compiled, qg, logs, True)
     if not spark:
         return None
+    shells = attribute_shells_for(engine.kg.config)
+    kp = engine.kp_infores_curie
     compiled, matched = engine.lookup(
         qg, persist_answers=False, enforce_cutoff=False, compiled=compiled
     )
