@@ -35,12 +35,13 @@ from __future__ import annotations
 import contextlib
 import itertools
 import threading
+import time
 from collections import deque
 from typing import Any
 
 from ploverdb_spark.build.meta_kg import build_meta_kg, test_triples
 from ploverdb_spark.query.compiler import QueryError, TrapiEngine
-from ploverdb_spark.query.response import get_edges, get_neighbors, run_query
+from ploverdb_spark.query.response import REQUEST, get_edges, get_neighbors, run_query
 
 DEFAULT_QUERY_TIMEOUT_SEC = 45  # parity with uwsgi.ini:10 (harakiri)
 DEFAULT_MAX_WORKERS = 16  # parity with UWSGI_PROCESSES (Dockerfile:58)
@@ -82,8 +83,10 @@ def run_query_with_timeout(
     sc = engine.spark.sparkContext
     group = f"trapi-query-{next(_query_seq)}"
     out: dict[str, Any] = {}
+    deadline = time.monotonic() + timeout_sec
 
     def target() -> None:
+        REQUEST.deadline = deadline  # a sliced build stops past it
         sc.setJobGroup(group, "TRAPI query", interruptOnCancel=True)
         # One FAIR pool per in-flight query: with spark.scheduler.mode=FAIR,
         # jobs inside a single pool still run FIFO — a burst's jobs all

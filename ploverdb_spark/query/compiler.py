@@ -227,16 +227,23 @@ class TrapiEngine:
             self._get_kg_vocab,
         )
         sc = self.spark.sparkContext
+        # the caller's job group and pool (a request's, when its first
+        # query warms the engine): its timeout cancels these jobs too
+        group, pool = map(sc.getLocalProperty, ("spark.jobGroup.id", "spark.scheduler.pool"))
 
         def run(b) -> None:
-            pool = f"warmup-{b.__name__}" if parallel else None
-            sc.setLocalProperty("spark.scheduler.pool", pool)
-            b()
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            sc.setLocalProperty("spark.scheduler.pool", f"warmup-{b.__name__}" if parallel else pool)
+            try:
+                b()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.scheduler.pool", None)
 
-        with ThreadPoolExecutor(max_workers=len(builders) if parallel else 1) as pool:
-            pool.submit(run, self._index.graph).result()
+        with ThreadPoolExecutor(max_workers=len(builders) if parallel else 1) as workers:
+            workers.submit(run, self._index.graph).result()
             # list() propagates the first builder exception, if any
-            list(pool.map(run, builders))
+            list(workers.map(run, builders))
         self._warm = True
         return self
 

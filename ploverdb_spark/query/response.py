@@ -17,6 +17,7 @@ from __future__ import annotations
 import contextlib
 import json
 import threading
+import time
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -28,6 +29,7 @@ from ploverdb_spark.functions.predicates import in_predicate
 from ploverdb_spark.query.compiler import (
     MAX_ISIN_PUSHDOWN,
     CompiledQEdge,
+    QueryError,
     TrapiEngine,
     category_filter,
     predicate_filter,
@@ -311,12 +313,18 @@ def _endpoint_ids(rows) -> set:
 # While a big answer is built from the driver index, holding the GIL, a
 # small request waits up to the switch interval (5 ms) to get the GIL
 # back after every Arrow or numpy call (benchmark graph: small-query p50
-# 2.8 -> 131-184 ms).  So an indexed request whose answer fits one slice
-# holds a small turn from compile to envelope, and a bigger answer is
-# built SLICE_ROWS rows at a time, waiting before each slice while a
-# small turn is open, at most SLICE_WAIT_S, so it is never starved.
+# 2.8 -> 131-184 ms).  So every index-answered request holds a small turn
+# from compile on: a one-hop leaves it after its match when the answer is
+# bigger than a slice and builds it SLICE_ROWS rows at a time, waiting
+# before each slice while a turn is open, at most SLICE_WAIT_S, so it is
+# never starved.  Node lookups and /neighbors batches have no sliced
+# build and hold their turn to the end, whatever their size.
 SLICE_ROWS = 256
 SLICE_WAIT_S = 0.03
+
+# api.run_query_with_timeout sets ``deadline`` on a request's thread: a
+# sliced build stops at its next slice once the request has timed out
+REQUEST = threading.local()
 
 
 class YieldGate:
@@ -351,6 +359,8 @@ def _slices(n: int, yielding: bool):
     for lo in range(0, n, SLICE_ROWS):
         if yielding:
             GATE.wait()
+            if time.monotonic() > getattr(REQUEST, "deadline", float("inf")):
+                raise QueryError(504, "The query timed out.")
         yield slice(lo, lo + SLICE_ROWS)
 
 
@@ -530,11 +540,13 @@ def _fetch_nodes(engine: TrapiEngine, node_ids, shells) -> dict[str, dict]:
     }
 
 
-# The Spark path's only (indexed answers of any size are built on the
-# driver): below this many answer edges a driver-side loop beats the
-# Python-worker spin-up of the distributed serializer; above it,
-# mapInPandas wins all the way to the 1M-edge cutoff.  (30M-edge burst:
-# ~3k-edge answers cost more in extra actions than they save in GIL time.)
+# On the Spark path, below this many answer edges a driver-side loop
+# beats the Python-worker spin-up of the distributed serializer; above
+# it, mapInPandas wins all the way to the 1M-edge cutoff.  (30M-edge
+# burst: ~3k-edge answers cost more in extra actions than they save in
+# GIL time.)  An indexed answer this big is built from the index under
+# admission and the request timeout (run_query's ``spark=False``); it
+# beat this path up to the 100k edges measured (README.md).
 DISTRIBUTED_SERIALIZE_MIN_EDGES = 5000
 
 
@@ -634,19 +646,20 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | No
     driver-side (_assemble_results_local) -> serialized edges and nodes ->
     one envelope.  When the driver index (query/index.py) holds the KG
     and the query has no attribute constraints, the index finds and
-    counts the rows (over the cutoff is a 403) and builds the answer,
-    whatever its size, with no Spark job; one bigger than a slice yields
-    to small requests between slices (YieldGate).  Otherwise a bounded
-    probe collect measures the answer: small ones cost it plus one node
+    counts the rows (over the cutoff is a 403) and builds the answer with
+    no Spark job; one bigger than a slice yields to small requests
+    between slices (YieldGate).  Otherwise a bounded probe collect
+    measures the answer: small ones cost it plus one node
     fetch (2 actions); ones over DISTRIBUTED_SERIALIZE_MIN_EDGES are
     persisted, cutoff-checked, key-collected and serialized by
     hydrate_knowledge_graph (5 actions, 4 without a cutoff).  Under
     concurrent load job count IS the latency (measured at reference
     scale: 100-burst wall time tracks total job count, not scan cost).
 
-    With ``spark=False`` a query that needs Spark returns None before
-    running a job, so api.handle can answer the others on the request
-    thread."""
+    With ``spark=False`` a query that needs Spark, or an indexed answer
+    over DISTRIBUTED_SERIALIZE_MIN_EDGES, returns None before running a
+    job or building the answer, so api.handle answers the others on the
+    request thread and the rest under admission and the timeout."""
     logs = [_log_entry("INFO", "Received query")]
     qg = TrapiEngine.normalize_envelope(query)
     engine.validate(qg)
@@ -684,7 +697,7 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | No
                 engine.check_answer_size(len(match))
                 if len(match) <= SLICE_ROWS:
                     return _index_response(engine, index, match, compiled, qg, logs, False)
-    if match is not None:  # a big answer, built outside the small turn
+    if match is not None and (spark or len(match) <= DISTRIBUTED_SERIALIZE_MIN_EDGES):
         return _index_response(engine, index, match, compiled, qg, logs, True)
     if not spark:
         return None

@@ -580,8 +580,8 @@ def test_run_query_big_path_action_count(spark, monkeypatch):
     Without the driver index it runs the bounded probe, the cutoff check,
     the answer-key collect and the executor-side edge and node
     serializers: 5 Spark actions.  Result grouping runs driver-side on the
-    keys, with no Spark action of its own.  The index builds an answer of
-    any size on the driver: 0 actions and 0 jobs."""
+    keys, with no Spark action of its own.  The index builds the answer
+    on the driver: 0 actions and 0 jobs."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from ploverdb_spark.build.ingest import build_knowledge_graph

@@ -1233,13 +1233,16 @@ def test_indexed_query_runs_no_spark_job(engine):
 def test_hub_sized_indexed_query_runs_no_spark_job(engine, monkeypatch):
     """An indexed answer over DISTRIBUTED_SERIALIZE_MIN_EDGES and bigger
     than one slice (both patched down to make the fixture's answer
-    hub-sized) is built from the driver index with zero Spark jobs."""
+    hub-sized) is left to admission by ``spark=False``, and built from the
+    driver index with zero Spark jobs when admitted."""
     monkeypatch.setattr(response, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 0)
     monkeypatch.setattr(response, "SLICE_ROWS", 1)
     engine.warmup()
+    qg = one_hop({"ids": ["CHEM:1"]}, {})
     tracker = engine.spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or ())
-    resp = response.run_query(engine, one_hop({"ids": ["CHEM:1"]}, {}), spark=False)
+    assert response.run_query(engine, qg, spark=False) is None
+    resp = response.run_query(engine, qg)
     assert len(tracker.getJobIdsForGroup(None) or ()) == before
     assert set(resp["message"]["knowledge_graph"]["edges"]) == {"e1", "e2", "e5", "e8"}
     assert len(resp["message"]["results"]) == 4
@@ -1302,27 +1305,58 @@ def test_big_build_wait_is_capped(engine, monkeypatch):
     assert len(resp["message"]["results"]) == 4
 
 
+def test_timed_out_big_build_stops(engine, monkeypatch):
+    """A sliced build whose request timed out stops at its next slice
+    instead of building the rest of an answer nobody will read."""
+    from ploverdb_spark.api import run_query_with_timeout
+    from ploverdb_spark.query.index import GraphIndex
+
+    engine.warmup()
+    monkeypatch.setattr(response, "SLICE_ROWS", 1)
+    monkeypatch.setattr(response, "SLICE_WAIT_S", 1.0)
+    built = _count_calls(monkeypatch, GraphIndex, "columns")
+    stopped = _count_calls(monkeypatch, QueryError, "__init__")
+    with response.GATE.small_turn():  # holds the build at its first slice
+        with pytest.raises(QueryError) as exc:
+            run_query_with_timeout(engine, one_hop({"ids": ["CHEM:1"]}, {}), timeout_sec=0.3)
+        assert exc.value.status == 504
+    deadline = time.monotonic() + 30
+    while stopped == [504] and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert stopped == [504, 504] and built == []
+
+
 @pytest.mark.parametrize("how", ["sequential", "parallel", "first_query"])
 def test_graph_index_built_on_pool_thread(engine, monkeypatch, how):
     """warmup builds the graph index on a pool thread in both modes, and
     so does an unwarmed engine's first query: built on the main thread,
-    the driver's peak RSS ends ~24 MB higher."""
+    the driver's peak RSS ends ~24 MB higher.  The build carries the
+    caller's job group, so a request's timeout cancels a warmup it
+    started."""
     from ploverdb_spark.query.index import GraphIndex
 
-    threads: list = []
+    sc = engine.spark.sparkContext
+    built: list = []
     init = GraphIndex.__init__
 
     def recording(self, *a, **kw):
-        threads.append(threading.current_thread())
+        built.append((threading.current_thread(), sc.getLocalProperty("spark.jobGroup.id")))
         init(self, *a, **kw)
 
     monkeypatch.setattr(GraphIndex, "__init__", recording)
     eng = TrapiEngine(engine.kg, kp_infores_curie=engine.kp_infores_curie)
-    if how == "first_query":
-        assert eng.graph_index() is not None
-    else:
-        eng.warmup(parallel=how == "parallel")
-    assert len(threads) == 1 and threads[0] is not threading.main_thread()
+    sc.setJobGroup("warmup-test", "warmup test")
+    try:
+        if how == "first_query":
+            assert eng.graph_index() is not None
+        else:
+            eng.warmup(parallel=how == "parallel")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    [(thread, group)] = built
+    assert thread is not threading.main_thread() and group == "warmup-test"
 
 
 NEIGHBOR_CASES = [
