@@ -83,10 +83,8 @@ def run_query_with_timeout(
     sc = engine.spark.sparkContext
     group = f"trapi-query-{next(_query_seq)}"
     out: dict[str, Any] = {}
-    deadline = time.monotonic() + timeout_sec
 
     def target() -> None:
-        REQUEST.deadline = deadline  # a sliced build stops past it
         sc.setJobGroup(group, "TRAPI query", interruptOnCancel=True)
         # One FAIR pool per in-flight query: with spark.scheduler.mode=FAIR,
         # jobs inside a single pool still run FIFO — a burst's jobs all
@@ -715,6 +713,20 @@ def _code_info(code_version: str) -> str:
     return info
 
 
+@contextlib.contextmanager
+def _admitted_build(registry: KpRegistry):
+    """Admission for a big answer the driver index builds on the request
+    thread.  It runs no Spark job, so it needs no query thread, job group
+    or pool; the request timeout is the build's deadline, past which it
+    stops at its next slice with a 504 (response._slices)."""
+    with registry.admission():
+        REQUEST.deadline = time.monotonic() + registry.query_timeout_sec
+        try:
+            yield
+        finally:
+            del REQUEST.deadline
+
+
 def _indexed_else_admitted(registry: KpRegistry, indexed, on_spark):
     """``indexed()``, and ``on_spark()`` under admission when that returns
     None.  A request the driver index answers runs no Spark job: it is
@@ -758,7 +770,9 @@ def handle(
             t0 = _time.time()
             body = _indexed_else_admitted(
                 registry,
-                lambda: run_query(eng, payload, spark=False),
+                lambda: run_query(
+                    eng, payload, spark=False, admit=lambda: _admitted_build(registry)
+                ),
                 lambda: run_query_with_timeout(
                     eng, payload, timeout_sec=registry.query_timeout_sec
                 ),

@@ -322,8 +322,8 @@ def _endpoint_ids(rows) -> set:
 SLICE_ROWS = 256
 SLICE_WAIT_S = 0.03
 
-# api.run_query_with_timeout sets ``deadline`` on a request's thread: a
-# sliced build stops at its next slice once the request has timed out
+# api._admitted_build sets ``deadline`` on a request's thread: a sliced
+# build stops at its next slice once the request has timed out
 REQUEST = threading.local()
 
 
@@ -545,8 +545,8 @@ def _fetch_nodes(engine: TrapiEngine, node_ids, shells) -> dict[str, dict]:
 # it, mapInPandas wins all the way to the 1M-edge cutoff.  (30M-edge
 # burst: ~3k-edge answers cost more in extra actions than they save in
 # GIL time.)  An indexed answer this big is built from the index under
-# admission and the request timeout (run_query's ``spark=False``); it
-# beat this path up to the 100k edges measured (README.md).
+# admission and the request timeout (run_query's ``admit``); it beat
+# this path up to the 100k edges measured (README.md).
 DISTRIBUTED_SERIALIZE_MIN_EDGES = 5000
 
 
@@ -638,7 +638,7 @@ def _slim_tuple_response(
     }
 
 
-def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | None:
+def run_query(engine: TrapiEngine, query: dict, spark: bool = True, admit=None) -> dict | None:
     """POST /query (plover.py:1788-1932 lifecycle): full TRAPI response,
     or the R6 legacy slim formats when the QG carries include_metadata.
 
@@ -649,17 +649,18 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | No
     counts the rows (over the cutoff is a 403) and builds the answer with
     no Spark job; one bigger than a slice yields to small requests
     between slices (YieldGate).  Otherwise a bounded probe collect
-    measures the answer: small ones cost it plus one node
-    fetch (2 actions); ones over DISTRIBUTED_SERIALIZE_MIN_EDGES are
-    persisted, cutoff-checked, key-collected and serialized by
+    measures the answer: small ones cost it plus one node fetch (2
+    actions); ones over DISTRIBUTED_SERIALIZE_MIN_EDGES are persisted,
+    cutoff-checked, key-collected and serialized by
     hydrate_knowledge_graph (5 actions, 4 without a cutoff).  Under
     concurrent load job count IS the latency (measured at reference
     scale: 100-burst wall time tracks total job count, not scan cost).
 
-    With ``spark=False`` a query that needs Spark, or an indexed answer
-    over DISTRIBUTED_SERIALIZE_MIN_EDGES, returns None before running a
-    job or building the answer, so api.handle answers the others on the
-    request thread and the rest under admission and the timeout."""
+    With ``spark=False`` a query that needs Spark returns None before
+    running a job, so api.handle can answer the others on the request
+    thread.  ``admit``, when given, is entered around the build of an
+    indexed answer over DISTRIBUTED_SERIALIZE_MIN_EDGES: api.handle
+    passes admission and the request deadline."""
     logs = [_log_entry("INFO", "Received query")]
     qg = TrapiEngine.normalize_envelope(query)
     engine.validate(qg)
@@ -697,8 +698,10 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True) -> dict | No
                 engine.check_answer_size(len(match))
                 if len(match) <= SLICE_ROWS:
                     return _index_response(engine, index, match, compiled, qg, logs, False)
-    if match is not None and (spark or len(match) <= DISTRIBUTED_SERIALIZE_MIN_EDGES):
-        return _index_response(engine, index, match, compiled, qg, logs, True)
+    if match is not None:  # a big answer, built outside the small turn
+        hub = admit is not None and len(match) > DISTRIBUTED_SERIALIZE_MIN_EDGES
+        with admit() if hub else contextlib.nullcontext():
+            return _index_response(engine, index, match, compiled, qg, logs, True)
     if not spark:
         return None
     shells = attribute_shells_for(engine.kg.config)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import contextlib
 import json
 import threading
 import time
@@ -1233,17 +1234,25 @@ def test_indexed_query_runs_no_spark_job(engine):
 def test_hub_sized_indexed_query_runs_no_spark_job(engine, monkeypatch):
     """An indexed answer over DISTRIBUTED_SERIALIZE_MIN_EDGES and bigger
     than one slice (both patched down to make the fixture's answer
-    hub-sized) is left to admission by ``spark=False``, and built from the
-    driver index with zero Spark jobs when admitted."""
+    hub-sized) is built from the driver index with zero Spark jobs, inside
+    the ``admit`` context it is given."""
     monkeypatch.setattr(response, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 0)
     monkeypatch.setattr(response, "SLICE_ROWS", 1)
     engine.warmup()
-    qg = one_hop({"ids": ["CHEM:1"]}, {})
+    admitted = []
+
+    @contextlib.contextmanager
+    def admit():
+        admitted.append("in")
+        yield
+        admitted.append("out")
+
     tracker = engine.spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or ())
-    assert response.run_query(engine, qg, spark=False) is None
-    resp = response.run_query(engine, qg)
+    qg = one_hop({"ids": ["CHEM:1"]}, {})
+    resp = response.run_query(engine, qg, spark=False, admit=admit)
     assert len(tracker.getJobIdsForGroup(None) or ()) == before
+    assert admitted == ["in", "out"]
     assert set(resp["message"]["knowledge_graph"]["edges"]) == {"e1", "e2", "e5", "e8"}
     assert len(resp["message"]["results"]) == 4
 
@@ -1306,24 +1315,22 @@ def test_big_build_wait_is_capped(engine, monkeypatch):
 
 
 def test_timed_out_big_build_stops(engine, monkeypatch):
-    """A sliced build whose request timed out stops at its next slice
-    instead of building the rest of an answer nobody will read."""
-    from ploverdb_spark.api import run_query_with_timeout
+    """A hub answer built under admission stops with a 504 at its first
+    slice past the request timeout, instead of building an answer nobody
+    will read."""
+    from ploverdb_spark.api import KpRegistry, handle
     from ploverdb_spark.query.index import GraphIndex
 
-    engine.warmup()
+    monkeypatch.setattr(response, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 0)
     monkeypatch.setattr(response, "SLICE_ROWS", 1)
     monkeypatch.setattr(response, "SLICE_WAIT_S", 1.0)
+    reg = KpRegistry(query_timeout_sec=0.3)
+    reg.register("kp", engine.warmup())
     built = _count_calls(monkeypatch, GraphIndex, "columns")
-    stopped = _count_calls(monkeypatch, QueryError, "__init__")
-    with response.GATE.small_turn():  # holds the build at its first slice
-        with pytest.raises(QueryError) as exc:
-            run_query_with_timeout(engine, one_hop({"ids": ["CHEM:1"]}, {}), timeout_sec=0.3)
-        assert exc.value.status == 504
-    deadline = time.monotonic() + 30
-    while stopped == [504] and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert stopped == [504, 504] and built == []
+    with response.GATE.small_turn():  # the build waits 1 s at its first slice
+        status, body = handle(reg, "query", one_hop({"ids": ["CHEM:1"]}, {}))
+    assert status == 504 and built == []
+    assert reg._n_inflight == 0
 
 
 @pytest.mark.parametrize("how", ["sequential", "parallel", "first_query"])
