@@ -147,8 +147,8 @@ class KpRegistry:
     Admission control mirrors the reference's serving stack (nginx
     connection buffering in front of a bounded uWSGI worker pool,
     README.md:505-511 + uwsgi.ini:33): at most ``max_workers`` Spark-heavy
-    requests (query/edges/neighbors the driver index cannot answer)
-    execute concurrently, up to ``backlog`` more wait in queue, anything
+    requests (query/edges/neighbors the driver index cannot answer, and
+    the hub answers it builds) execute concurrently, up to ``backlog`` more wait in queue, anything
     beyond that — or a queue wait exceeding ``queue_wait_sec`` — gets
     503 backpressure (the burst SLO allows 503s, never 504s).  Crucially
     the harakiri clock starts when a worker PICKS UP the request, exactly like uWSGI's — without the pool,
@@ -731,8 +731,8 @@ def _indexed_else_admitted(registry: KpRegistry, indexed, on_spark):
     """``indexed()``, and ``on_spark()`` under admission when that returns
     None.  A request the driver index answers runs no Spark job: it is
     served on the request thread, with no query thread, job group, FAIR
-    pool or admission slot, and stays out of the latency estimate that
-    describes Spark-heavy requests."""
+    pool or admission slot (a hub answer excepted: _admitted_build), and
+    stays out of the latency estimate that describes heavy requests."""
     body = indexed()
     if body is None:
         with registry.admission():
