@@ -755,6 +755,8 @@ def handle(
     import datetime
     import time as _time
 
+    if not isinstance(payload, (dict, type(None))):
+        return 400, {"error": "The request body must be a JSON object."}
     payload = payload or {}
     # the reference registers every data route under two names
     # (main.py:222-241, 626-627): /get_edges == /edges,

@@ -24,6 +24,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
 from ploverdb_spark.api import KpRegistry, handle
+from ploverdb_spark.query.response import Encoded
 
 GET_PATHS = {
     "meta_knowledge_graph",
@@ -53,9 +54,16 @@ def _json_pieces(obj: Any, out: list[str], depth: int) -> None:
     """Append ``json.dumps(obj)`` to ``out`` in pieces: dicts and lists
     down to ``depth`` levels are split per member, so a large response
     (a TRAPI knowledge graph of thousands of edges) never exists as one
-    string, and again as bytes, beside the objects it encodes.  The
-    pieces are ASCII (``ensure_ascii``), one byte per character."""
-    if depth and isinstance(obj, dict) and obj and all(isinstance(k, str) for k in obj):
+    string, and again as bytes, beside the objects it encodes.  An
+    Encoded member (an indexed answer's knowledge graph and results) is
+    JSON text already, and its pieces pass through.  The pieces are ASCII
+    (``ensure_ascii``), one byte per character."""
+    if isinstance(obj, Encoded):
+        out.append(obj.brackets[0])
+        for i, piece in enumerate(obj.pieces):
+            out.extend((", ", piece) if i else (piece,))
+        out.append(obj.brackets[1])
+    elif depth and isinstance(obj, dict) and obj and all(isinstance(k, str) for k in obj):
         sep = "{"
         for k, v in obj.items():
             out.append(f"{sep}{json.dumps(k)}: ")
@@ -139,8 +147,13 @@ class _Handler(BaseHTTPRequestHandler):
         self._dispatch(None, GET_PATHS)
 
     def do_POST(self) -> None:  # noqa: N802 — http.server API
-        length = int(self.headers.get("Content-Length") or 0)
-        raw = self.rfile.read(length) if length else b""
+        length = self.headers.get("Content-Length") or "0"
+        if not length.isdecimal():
+            # the body's end is unknown: answer, then close the connection
+            self.close_connection = True
+            self._respond(400, {"error": f"Bad Content-Length: {length!r}"})
+            return
+        raw = self.rfile.read(int(length))
         try:
             payload = json.loads(raw) if raw else {}
         except json.JSONDecodeError:

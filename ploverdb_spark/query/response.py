@@ -3,9 +3,11 @@
 Reference behavior reimplemented (NOT ported): plover.py:2121-2416.
 Every one-hop response is built in one pass, as in the reference: answer
 edges -> results grouped driver-side by (input, output) -> serialized
-nodes and edges -> one TRAPI envelope.  On the Spark path only the
-serialization step depends on the answer size: big answers are serialized
-executor-side by a mapInPandas JSON stage, small ones by the driver.
+nodes and edges -> one TRAPI envelope.  An answer from the driver index
+is encoded to JSON text column by column (Encoded); on the Spark path
+only the serialization step depends on the answer size: big answers are
+serialized executor-side by a mapInPandas JSON stage, small ones by the
+driver.
 
 Core vs attribute properties follow the reference's split
 (plover.py:699-704): core node/edge properties become TRAPI structure;
@@ -15,17 +17,21 @@ everything else becomes an entry in ``attributes``.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import threading
 import time
+from json.encoder import encode_basestring_ascii as _str
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ploverdb_spark.build.ingest import DIR_FORWARD
 from ploverdb_spark.functions.localdf import tiny_df
 from ploverdb_spark.functions.predicates import in_predicate
+from ploverdb_spark.query.index import Coded, pylist
 from ploverdb_spark.query.compiler import (
     MAX_ISIN_PUSHDOWN,
     CompiledQEdge,
@@ -260,29 +266,38 @@ def edge_to_trapi(
         value = _clean(value)
         if value is None:
             continue
-        if isinstance(value, list) and value and isinstance(value[0], dict):
-            # zipped property -> nested attributes with sub-attributes
-            nested = []
-            for struct in value:
-                subs = [
-                    make_attribute(k, _clean(v), kp_infores_curie, shells, row)
-                    for k, v in struct.items()
-                    if _clean(v) is not None
-                ]
-                if subs:
-                    nested.append(subs)
+        if _zipped(value):
             out["attributes"].append(
-                {
-                    "attribute_type_id": _attribute_type_id(prop),
-                    "value": [s[0]["value"] for s in nested if s],
-                    "attributes": [s for sub in nested for s in sub],
-                }
+                _zipped_attribute(prop, value, kp_infores_curie, shells, row)
             )
         else:
             out["attributes"].append(
                 make_attribute(prop, value, kp_infores_curie, shells, row)
             )
     return out
+
+
+def _zipped(value: Any) -> bool:
+    return isinstance(value, list) and bool(value) and isinstance(value[0], dict)
+
+
+def _zipped_attribute(prop: str, value: list, kp_infores_curie: str, shells, row) -> dict:
+    """A zipped property (a list of structs) as one attribute: nested
+    attributes with sub-attributes, each templated through the shells."""
+    nested = []
+    for struct in value:
+        subs = [
+            make_attribute(k, _clean(v), kp_infores_curie, shells, row)
+            for k, v in struct.items()
+            if _clean(v) is not None
+        ]
+        if subs:
+            nested.append(subs)
+    return {
+        "attribute_type_id": _attribute_type_id(prop),
+        "value": [s[0]["value"] for s in nested if s],
+        "attributes": [s for sub in nested for s in sub],
+    }
 
 
 def _oriented(d: dict) -> dict:
@@ -315,9 +330,10 @@ def _endpoint_ids(rows) -> set:
 # back after every Arrow or numpy call (benchmark graph: small-query p50
 # 2.8 -> 131-184 ms).  So every index-answered request holds a small turn
 # from compile on: a one-hop leaves it after its match when the answer is
-# bigger than a slice and builds it SLICE_ROWS rows at a time, waiting
-# before each slice while a turn is open, at most SLICE_WAIT_S, so it is
-# never starved.  Node lookups and /neighbors batches have no sliced
+# bigger than a slice and builds and encodes it to JSON text SLICE_ROWS
+# rows at a time, waiting before each slice while a turn is open, at most
+# SLICE_WAIT_S, so it is never starved; the HTTP frontend then only
+# writes the text.  Node lookups and /neighbors batches have no sliced
 # build and hold their turn to the end, whatever their size.
 SLICE_ROWS = 256
 SLICE_WAIT_S = 0.03
@@ -364,59 +380,51 @@ def _slices(n: int, yielding: bool):
         yield slice(lo, lo + SLICE_ROWS)
 
 
-def _assemble_results_local(
-    rows, compiled: CompiledQEdge, qg: dict, kp_infores_curie: str, yielding: bool = False
-) -> list[dict]:
-    """A6 + O3 (plover.py:2330-2406): group answer key rows into results
-    keyed by (input-or-*, output-or-*) depending on is_set.  Edge ids are
-    bound as strings: knowledge_graph edge keys are JSON object keys, so a
-    numeric edge-id column must bind by the same string key (``yielding``:
-    see _slices)."""
+def _group_results(keys, compiled: CompiledQEdge, qg: dict, yielding: bool = False) -> list:
+    """A6 (plover.py:2330-2406): answer keys (edge id, input id, output
+    id, input query id, output query id) grouped into results keyed by
+    (input-or-*, output-or-*) depending on is_set; per result its edge
+    ids and (id, query id) inputs and outputs (``yielding``: see
+    _slices)."""
     qnodes = qg["nodes"]
     in_set = bool(qnodes[compiled.input_qnode_key].get("is_set"))
     out_set = bool(qnodes[compiled.output_qnode_key].get("is_set"))
-    groups: dict[tuple, dict] = {}
-    for s in _slices(len(rows), yielding):
-        for r in rows[s]:
-            key = (
-                "*" if in_set else r["input_id"],
-                "*" if out_set else r["output_id"],
-            )
-            g = groups.setdefault(
-                key, {"edge_ids": set(), "inputs": set(), "outputs": set()}
-            )
-            g["edge_ids"].add(str(r["id"]))
-            g["inputs"].add((r["input_id"], r["input_query_id"]))
-            g["outputs"].add((r["output_id"], r["output_query_id"]))
-    grouped = list(groups.values())
-    results = []
-    for s in _slices(len(grouped), yielding):
-        for g in grouped[s]:
-            results.append(
+    groups: dict[tuple, tuple] = {}
+    for s in _slices(len(keys), yielding):
+        for eid, i, o, iq, oq in keys[s]:
+            g = groups.setdefault(("*" if in_set else i, "*" if out_set else o), (set(), set(), set()))
+            g[0].add(eid)
+            g[1].add((i, iq))
+            g[2].add((o, oq))
+    return list(groups.values())
+
+
+def _assemble_results_local(rows, compiled: CompiledQEdge, qg: dict, kp_infores_curie: str) -> list[dict]:
+    """O3 (plover.py:2330-2406): the results of answer rows.  Edge ids are
+    bound as strings: knowledge_graph edge keys are JSON object keys, so a
+    numeric edge-id column must bind by the same string key."""
+    keys = [
+        (str(r["id"]), r["input_id"], r["output_id"], r["input_query_id"], r["output_query_id"])
+        for r in rows
+    ]
+    return [
+        {
+            "node_bindings": {
+                compiled.input_qnode_key: [_result_node_binding(i, q) for i, q in inputs],
+                compiled.output_qnode_key: [_result_node_binding(o, q) for o, q in outputs],
+            },
+            "analyses": [
                 {
-                    "node_bindings": {
-                        compiled.input_qnode_key: [
-                            _result_node_binding(i, q) for i, q in g["inputs"]
-                        ],
-                        compiled.output_qnode_key: [
-                            _result_node_binding(o, q) for o, q in g["outputs"]
-                        ],
+                    "edge_bindings": {
+                        compiled.qedge_key: [{"id": e, "attributes": []} for e in edge_ids]
                     },
-                    "analyses": [
-                        {
-                            "edge_bindings": {
-                                compiled.qedge_key: [
-                                    {"id": e, "attributes": []}
-                                    for e in g["edge_ids"]
-                                ]
-                            },
-                            "resource_id": kp_infores_curie,
-                        }
-                    ],
                     "resource_id": kp_infores_curie,
                 }
-            )
-    return results
+            ],
+            "resource_id": kp_infores_curie,
+        }
+        for edge_ids, inputs, outputs in _group_results(keys, compiled, qg)
+    ]
 
 
 def _to_plain(v: Any) -> Any:
@@ -541,12 +549,12 @@ def _fetch_nodes(engine: TrapiEngine, node_ids, shells) -> dict[str, dict]:
 
 
 # On the Spark path, below this many answer edges a driver-side loop
-# beats the Python-worker spin-up of the distributed serializer; above
-# it, mapInPandas wins all the way to the 1M-edge cutoff.  (30M-edge
-# burst: ~3k-edge answers cost more in extra actions than they save in
-# GIL time.)  An indexed answer this big is built from the index under
-# admission and the request timeout (run_query's ``admit``); it beat
-# this path up to the 100k edges measured (README.md).
+# beats the Python-worker spin-up of the distributed serializer, and
+# above it mapInPandas does (30M-edge burst: ~3k-edge answers cost more
+# in extra actions than they save in GIL time; not measured past 100k
+# edges).  An indexed answer this big is encoded from the index under
+# admission and the request timeout (run_query's ``admit``): ~15 us an
+# edge, well under this path's cost at every size measured (README.md).
 DISTRIBUTED_SERIALIZE_MIN_EDGES = 5000
 
 
@@ -643,12 +651,12 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True, admit=None) 
     or the R6 legacy slim formats when the QG carries include_metadata.
 
     Every one-hop response takes one path: answer rows -> results grouped
-    driver-side (_assemble_results_local) -> serialized edges and nodes ->
-    one envelope.  When the driver index (query/index.py) holds the KG
-    and the query has no attribute constraints, the index finds and
-    counts the rows (over the cutoff is a 403) and builds the answer with
-    no Spark job; one bigger than a slice yields to small requests
-    between slices (YieldGate).  Otherwise a bounded probe collect
+    driver-side (_group_results) -> serialized edges and nodes -> one
+    envelope.  When the driver index (query/index.py) holds the KG and
+    the query has no attribute constraints, the index finds and counts
+    the rows (over the cutoff is a 403) and the answer is encoded to JSON
+    text with no Spark job (_index_response); one bigger than a slice
+    yields to small requests between slices (YieldGate).  Otherwise a bounded probe collect
     measures the answer: small ones cost it plus one node fetch (2
     actions); ones over DISTRIBUTED_SERIALIZE_MIN_EDGES are persisted,
     cutoff-checked, key-collected and serialized by
@@ -739,25 +747,206 @@ def _response(qg: dict, nodes: dict, edges: dict, results: list, logs: list) -> 
 _KEY_COLS = ("id", "input_id", "output_id", "input_query_id", "output_query_id")
 
 
+# -- indexed answers as JSON text -------------------------------------------
+# An answer the driver index builds leaves run_query as JSON text, encoded
+# column by column inside the slices (so under the yield gate and the
+# request deadline), not as TRAPI dicts for the HTTP frontend to walk after
+# the build.  Each edge and node is byte for byte the json.dumps of
+# _answer_edge_to_trapi / node_to_trapi of its row.
+
+
+class Encoded:
+    """A JSON object (``"{}"``) or array (``"[]"``) whose members are JSON
+    text already: one piece per slice, its members joined by ", ".  ``len``
+    counts the members.  The HTTP frontend writes the pieces as they are,
+    so the body never exists as one string."""
+
+    def __init__(self, brackets: str) -> None:
+        self.brackets, self.pieces, self.n = brackets, [], 0
+
+    def add(self, members: list[str]) -> None:
+        if members:
+            self.pieces.append(", ".join(members))
+            self.n += len(members)
+
+    def __len__(self) -> int:
+        return self.n
+
+
+def _dumps(v: Any) -> str:
+    """``json.dumps(v)``; a string, and a list of strings, go straight to
+    the escaper json.dumps ends in."""
+    if type(v) is str:
+        return _str(v)
+    if type(v) is list and all(type(x) is str for x in v):
+        return f"[{', '.join(map(_str, v))}]"
+    return json.dumps(v)
+
+
+def _values(col) -> list:
+    """An answer column's values: a list, a Coded or an Arrow column."""
+    if isinstance(col, Coded):
+        return col.values[col.codes].tolist()
+    return col if isinstance(col, list) else pylist(col)
+
+
+def _each(col, fn) -> list:
+    """``fn(value, row number)`` over a column; over a dictionary column
+    (Coded) once per distinct code, with no row number."""
+    if isinstance(col, Coded):
+        u, inv = np.unique(col.codes, return_inverse=True)
+        return np.array([fn(v, None) for v in col.values[u].tolist()], dtype=object)[inv].tolist()
+    return [fn(v, i) for i, v in enumerate(_values(col))]
+
+
+def _rows(cols: dict):
+    """Row number -> that row of ``cols`` as a dict (the ``row`` an
+    attribute source placeholder reads); the columns decode on first use."""
+    decoded = functools.cache(lambda: {c: _values(v) for c, v in cols.items()})
+    return lambda i: {c: v[i] for c, v in decoded().items()}
+
+
+_MARK = "\x00value\x00"
+
+
+def _attribute_column(prop: str, col, kp: str, shells: dict, row, edge: bool) -> list[str]:
+    """Per row ``", "`` + the TRAPI attribute of ``prop`` as JSON, or ""
+    for an empty value.  A shell that reads neither the value
+    (``value_url``) nor the row (an ``{other_prop}`` source) is encoded
+    once and the value spliced into its text; other shells, and an edge's
+    zipped values, take make_attribute per value."""
+    shell = shells.get(prop) or {}
+    src, url = shell.get("attribute_source"), shell.get("value_url")
+    reads_row = (
+        isinstance(src, str) and src.startswith("{") and src.endswith("}")
+        and src != "{kp_infores_curie}"
+    )
+    per_value = reads_row or bool(url and isinstance(url, str))
+    head, _, tail = json.dumps(make_attribute(prop, _MARK, kp, shells)).partition(_str(_MARK))
+
+    def frag(v, i) -> str:
+        v = _clean(v)
+        if v is None:
+            return ""
+        if edge and _zipped(v):
+            return ", " + json.dumps(_zipped_attribute(prop, v, kp, shells, row(i)))
+        if per_value:
+            return ", " + json.dumps(make_attribute(prop, v, kp, shells, row(i) if reads_row else None))
+        return f", {head}{_dumps(v)}{tail}"
+
+    return [frag(v, i) for i, v in enumerate(_values(col))] if reads_row else _each(col, frag)
+
+
+def _qualifier(qp: str):
+    def frag(v, _) -> str:
+        v = _clean(v)
+        if v is None:
+            return ""
+        return f', {{"qualifier_type_id": "biolink:{qp}", "qualifier_value": {_dumps(v)}}}'
+
+    return frag
+
+
+def _edge_texts(cols: dict, kp: str, shells: dict) -> list[str]:
+    """Per answer row of ``cols`` (GraphIndex.columns) its knowledge-graph
+    member ``"<edge id>": <edge>``."""
+    n = len(cols["direction"])
+    get = lambda c: cols[c] if c in cols else [None] * n  # noqa: E731
+    fwd = [d == DIR_FORWARD for d in cols["direction"]]
+    subj = [i if f else o for f, i, o in zip(fwd, cols["input_id"], cols["output_id"])]
+    obj = [o if f else i for f, i, o in zip(fwd, cols["input_id"], cols["output_id"])]
+    row = _rows({**cols, "subject": subj, "object": obj})
+    skip = CORE_EDGE_PROPS | INTERNAL_COLS | {"source_record_urls"}
+    attrs = [_attribute_column(p, c, kp, shells, row, True) for p, c in cols.items() if p not in skip]
+    attrs = map("".join, zip(*attrs)) if attrs else [""] * n
+    quals = map("".join, zip(*[_each(get(qp), _qualifier(qp)) for qp in QUALIFIER_PROPS]))
+    quals = [f', "qualifiers": [{q[2:]}]' if q else "" for q in quals]
+    kpj = _dumps(kp)
+
+    def sources(p, urls) -> str:
+        upstream = _dumps(p) if p else ""
+        agg = (
+            f'{{"resource_id": {kpj}, "resource_role": "aggregator_knowledge_source", '
+            f'"upstream_resource_ids": [{upstream}]}}'
+        )
+        if not p:
+            return f"[{agg}]"
+        urls = _clean(urls)
+        urls = "" if urls is None else f', "source_record_urls": {json.dumps(list(urls))}'
+        return f'[{{"resource_id": {upstream}, "resource_role": "primary_knowledge_source"{urls}}}, {agg}]'
+
+    primary = get("primary_knowledge_source")
+    if "source_record_urls" in cols:
+        srcs = list(map(sources, _values(primary), _values(cols["source_record_urls"])))
+    else:
+        srcs = _each(primary, lambda p, _: sources(p, None))
+    keys = _each(cols["id"], lambda v, _: _str(str(v)))
+    preds = _each(cols["predicate"], lambda v, _: _dumps(v))
+    return [
+        f'{k}: {{"subject": {_dumps(s)}, "object": {_dumps(o)}, "predicate": {p}, '
+        f'"attributes": [{a[2:]}]{q}, "sources": {src}}}'
+        for k, s, o, p, a, q, src in zip(keys, subj, obj, preds, attrs, quals, srcs)
+    ]
+
+
+def _node_texts(cols: dict[str, list], kp: str, shells: dict) -> list[str]:
+    """Per node-table row of ``cols`` its knowledge-graph member
+    ``"<node id>": <node>``."""
+    ids = _values(cols["id"])
+    get = lambda c: _values(cols[c]) if c in cols else [None] * len(ids)  # noqa: E731
+    row = _rows(cols)
+    skip = CORE_NODE_PROPS | INTERNAL_COLS
+    attrs = [_attribute_column(p, c, kp or "", shells, row, False) for p, c in cols.items() if p not in skip]
+    attrs = map("".join, zip(*attrs)) if attrs else [""] * len(ids)
+    return [
+        f'{_dumps(i)}: {{"name": {_dumps(name)}, "categories": {_dumps(sorted(cats or []))}, '
+        f'"attributes": [{a[2:]}]}}'
+        for i, name, cats, a in zip(ids, get("name"), get("categories"), attrs)
+    ]
+
+
+def _binding_text(node_id: str, query_id: str | None) -> str:
+    q = "" if query_id is None or query_id == node_id else f', "query_id": {_dumps(query_id)}'
+    return f'{{"id": {_dumps(node_id)}, "attributes": []{q}}}'
+
+
+def _result_texts(groups: list, compiled: CompiledQEdge, kp: str) -> list[str]:
+    """Results of _group_results as the JSON of _assemble_results_local's."""
+    kpj = _dumps(kp)
+    head = f'{{"node_bindings": {{{_str(compiled.input_qnode_key)}: ['
+    mid = f"], {_str(compiled.output_qnode_key)}: ["
+    analyses = f']}}, "analyses": [{{"edge_bindings": {{{_str(compiled.qedge_key)}: ['
+    tail = f']}}, "resource_id": {kpj}}}], "resource_id": {kpj}}}'
+    return [
+        head + ", ".join([_binding_text(i, q) for i, q in inputs])
+        + mid + ", ".join([_binding_text(o, q) for o, q in outputs])
+        + analyses + ", ".join([f'{{"id": {_str(e)}, "attributes": []}}' for e in edge_ids])
+        + tail
+        for edge_ids, inputs, outputs in groups
+    ]
+
+
 def _index_response(engine, index, match, compiled, qg, logs, yielding: bool) -> dict:
-    """The response of an indexed answer, built in slices (_slices).  A
-    slice's rows are filled into one reused dict, column by column, so an
-    edge costs no dict of its own."""
+    """The response of an indexed answer, its knowledge graph and results
+    encoded to JSON text (Encoded) slice by slice (_slices)."""
     shells = attribute_shells_for(engine.kg.config)
     kp = engine.kp_infores_curie
-    edges, rows, row, nodes = {}, [], {}, {}
+    edges, nodes, results = Encoded("{}"), Encoded("{}"), Encoded("[]")
+    keys: list[tuple] = []
+    seen: set = set()
     for s in _slices(len(match), yielding):
         cols = index.columns(match[s])
-        for i in range(len(cols["id"])):
-            for c, values in cols.items():
-                row[c] = values[i]
-            edges[str(row["id"])] = _answer_edge_to_trapi(row, kp, shells)
-            rows.append({c: row[c] for c in _KEY_COLS})
+        ids = [str(e) for e in _values(cols["id"])]
+        # an edge met in both orientations encodes identically: keep one
+        texts = _edge_texts(cols, kp, shells)
+        edges.add([t for e, t in zip(ids, texts) if not (e in seen or seen.add(e))])
+        keys += zip(ids, cols["input_id"], cols["output_id"], cols["input_query_id"], cols["output_query_id"])
     codes = index.endpoints(match)
     for s in _slices(len(codes), yielding):
-        for d in index.rows_at(codes[s]):
-            nodes[d["id"]] = node_to_trapi(d, kp, shells)
-    results = _assemble_results_local(rows, compiled, qg, kp, yielding)
+        nodes.add(_node_texts(index.node_columns(codes[s]), kp, shells))
+    groups = _group_results(keys, compiled, qg, yielding)
+    for s in _slices(len(groups), yielding):
+        results.add(_result_texts(groups[s], compiled, kp))
     return _response(qg, nodes, edges, results, logs)
 
 
@@ -769,10 +958,9 @@ def _run_single_node_query(
         with GATE.small_turn():
             qnode_key, _, pairs = engine.compile_single_node(qg)
             rows = [(q, n) for q, n in pairs if index.has_node(n)]
-            nodes = {
-                d["id"]: node_to_trapi(d, engine.kp_infores_curie, shells)
-                for d in index.node_rows({n for _, n in rows})
-            }
+            codes = index.node_codes({n for _, n in rows})
+            nodes = Encoded("{}")
+            nodes.add(_node_texts(index.node_columns(codes), engine.kp_infores_curie, shells))
     elif not spark:
         return None
     else:

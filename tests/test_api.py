@@ -6,7 +6,7 @@ import pytest
 
 from ploverdb_spark.api import KpRegistry, handle
 from ploverdb_spark.queries.graph import graft_engine
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, wire
 
 QG = {
     "nodes": {
@@ -48,6 +48,7 @@ def spark_bound(registry):
 def test_query_endpoint(registry):
     status, body = handle(registry, "query", {"message": {"query_graph": QG}})
     assert status == 200
+    body = wire(body)
     assert body["message"]["results"]
     kg = body["message"]["knowledge_graph"]
     assert all(e["predicate"] == "graft:located_in" for e in kg["edges"].values())
@@ -343,15 +344,28 @@ def test_rebuild_endpoint_swaps_engine(spark, tmp_path):
     }
     status, body = handle(reg, "query", qg)
     assert status == 200
-    assert set(body["message"]["knowledge_graph"]["edges"]) == {"enew"}
+    assert set(wire(body)["message"]["knowledge_graph"]["edges"]) == {"enew"}
     # meta cache was invalidated: meta KG reflects the new graph
     status, meta = handle(reg, "meta_knowledge_graph")
     assert status == 200
     assert "biolink:Disease" in meta["nodes"]
 
 
-def test_debug_endpoint(registry):
+def test_debug_endpoint(registry, spark_bound, monkeypatch):
     assert handle(registry, "query", QG)[0] == 200  # index built
+    # /debug/last counts an indexed answer's encoded knowledge graph and
+    # results exactly, here a hub-sized one (thresholds patched down)
+    from ploverdb_spark.query import response
+
+    monkeypatch.setattr(response, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 0)
+    monkeypatch.setattr(response, "SLICE_ROWS", 1)
+    status, body = handle(registry, "query", QG)
+    assert status == 200 and isinstance(body["message"]["results"], response.Encoded)
+    want = response.run_query(spark_bound, QG)["message"]
+    assert len(want["knowledge_graph"]["edges"]) > 1
+    assert registry._last_query["n_results"] == len(want["results"])
+    assert registry._last_query["n_kg_edges"] == len(want["knowledge_graph"]["edges"])
+    monkeypatch.undo()
     status, body = handle(registry, "debug", {})
     assert status == 200
     assert body["driver_memory"].get("rss_kb", 0) > 0
@@ -967,6 +981,84 @@ def test_provenance_node_injected(spark):
     prov = kg.nodes.where(kg.nodes.id == "ploverdb_spark:build").collect()
     assert len(prov) == 1
     assert "nodes.tsv" in prov[0]["description"]
+
+
+def test_http_hub_answer_wire(registry, spark_bound, monkeypatch):
+    """A hub-sized indexed answer (thresholds patched down) read over a
+    socket: its Content-Length is the bytes received, and its knowledge
+    graph and results are the Spark path's, entity by entity."""
+    import json as _json
+    import urllib.request
+    from collections import Counter
+
+    from ploverdb_spark.http_frontend import serve
+    from ploverdb_spark.query import response
+    from tests.conftest import canonical_result
+
+    monkeypatch.setattr(response, "DISTRIBUTED_SERIALIZE_MIN_EDGES", 0)
+    monkeypatch.setattr(response, "SLICE_ROWS", 1)
+    assert registry.engine("graft").warmup().graph_index(build=False) is not None
+    server = serve(registry, host="127.0.0.1", port=0)
+    try:
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{server.server_address[1]}/query",
+            data=_json.dumps(QG).encode(),
+        )
+        with urllib.request.urlopen(req, timeout=300) as r:
+            length, raw = int(r.headers["Content-Length"]), r.read()
+    finally:
+        server.shutdown()
+    assert length == len(raw)
+    got = _json.loads(raw)["message"]
+    want = wire(response.run_query(spark_bound, QG))["message"]
+    assert len(want["knowledge_graph"]["edges"]) > 1
+    for part in ("nodes", "edges"):
+        assert {k: _json.dumps(v) for k, v in got["knowledge_graph"][part].items()} == {
+            k: _json.dumps(v) for k, v in want["knowledge_graph"][part].items()
+        }
+    assert Counter(map(canonical_result, got["results"])) == Counter(
+        map(canonical_result, want["results"])
+    )
+
+
+MALFORMED = {
+    "non_integer_length": b"POST /query HTTP/1.1\r\nHost: x\r\nContent-Length: abc\r\n\r\n",
+    "negative_length": b"POST /query HTTP/1.1\r\nHost: x\r\nContent-Length: -5\r\n\r\n",
+    "array_body_neighbors": b"POST /neighbors HTTP/1.1\r\nHost: x\r\nContent-Length: 3\r\n\r\n[1]",
+    "array_body_query": b"POST /query HTTP/1.1\r\nHost: x\r\nContent-Length: 3\r\n\r\n[1]",
+    "string_body_edges": b"POST /edges HTTP/1.1\r\nHost: x\r\nContent-Length: 4\r\n\r\n\"ab\"",
+}
+
+
+@pytest.mark.parametrize("case", sorted(MALFORMED))
+def test_http_malformed_request_400(registry, case):
+    """Malformed input over a raw socket (a Content-Length that is not a
+    non-negative integer, a JSON body that is not an object) is answered
+    400 with a JSON error, not a dropped connection."""
+    import json as _json
+    import socket
+
+    from ploverdb_spark.http_frontend import serve
+
+    server = serve(registry, host="127.0.0.1", port=0)
+    try:
+        with socket.create_connection(("127.0.0.1", server.server_address[1]), timeout=60) as sock:
+            sock.sendall(MALFORMED[case])
+            reply = sock.makefile("rb")
+            status = reply.readline().split()[1]
+            headers = dict(iter(lambda: reply.readline().rstrip().split(b": ", 1), [b""]))
+            body = reply.read(int(headers[b"Content-Length"]))
+    finally:
+        server.shutdown()
+    assert status == b"400", body
+    assert "error" in _json.loads(body)
+
+
+def test_non_object_payload_400(registry):
+    """api.handle answers a payload that is not a JSON object with 400."""
+    for path in ("get_logs", "neighbors", "query", "edges"):
+        status, body = handle(registry, path, [1])
+        assert status == 400 and "error" in body
 
 
 def test_http_frontend_routes(registry):

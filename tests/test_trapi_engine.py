@@ -19,6 +19,7 @@ from ploverdb_spark.query import response
 from ploverdb_spark.query.compiler import QueryError, TrapiEngine
 from ploverdb_spark.query.response import get_edges
 from ploverdb_spark.sources.kgx import KgxConfig
+from tests.conftest import canonical_result, wire
 
 NODES = [
     # id, name, all_categories, equivalent_curies, publications
@@ -121,31 +122,20 @@ def spark_twin(engine: TrapiEngine) -> TrapiEngine:
     return _SPARK_TWINS[id(engine)]
 
 
-def _canonical_result(result: dict) -> str:
-    """One result with its binding lists in a fixed order (the two paths
-    group the same rows, but a binding list comes from a set)."""
-    r = json.loads(json.dumps(result))
-    for binds in r["node_bindings"].values():
-        binds.sort(key=json.dumps)
-    for a in r["analyses"]:
-        for eb in a["edge_bindings"].values():
-            eb.sort(key=json.dumps)
-    return json.dumps(r, sort_keys=True)
-
-
 def run_query(engine: TrapiEngine, query: dict) -> dict:
     """``response.run_query`` on both answer paths: the driver index
     (``engine``) and Spark (``spark_twin(engine)``).  Both must raise the
     same error, or return the same nodes and edges (each entity's JSON
     compared exactly, unsorted) and the same results as a multiset.  The
     index side runs with slices of one row, so every indexed answer of two
-    or more rows takes the sliced build big answers take.
-    Returns the indexed response."""
+    or more rows takes the sliced build big answers take.  Both responses
+    are compared as a client reads them: the HTTP frontend's JSON text,
+    parsed.  Returns the indexed response, parsed."""
     outcomes = []
     for eng in (engine, spark_twin(engine)):
         try:
             with mock.patch.object(response, "SLICE_ROWS", 1):
-                outcomes.append(response.run_query(eng, query))
+                outcomes.append(wire(response.run_query(eng, query)))
         except QueryError as e:
             outcomes.append(e)
     indexed, spark = outcomes
@@ -161,8 +151,8 @@ def run_query(engine: TrapiEngine, query: dict) -> dict:
             for r in (indexed, spark)
         )
         assert got == want, f"{part} differ between the index and Spark"
-    assert Counter(map(_canonical_result, indexed["message"]["results"])) == Counter(
-        map(_canonical_result, spark["message"]["results"])
+    assert Counter(map(canonical_result, indexed["message"]["results"])) == Counter(
+        map(canonical_result, spark["message"]["results"])
     ), "results differ between the index and Spark"
     return indexed
 
@@ -1168,6 +1158,43 @@ def odd_engine(spark):
     return TrapiEngine(odd, kp_infores_curie="infores:test-kp")
 
 
+@pytest.fixture(scope="module")
+def rich_engine(spark):
+    """The fixture KG with non-ASCII node names, source_record_urls, a
+    float, a bool and a string edge property (empty on some edges), and
+    attribute shells overridden with a ``value_url`` and with sources
+    read off another property (``{primary_knowledge_source}``,
+    ``{agent_type}``)."""
+    names = {"CHEM:1": "chém ☃ one", "DIS:parent": "parent dïsease ✓", "GENE:1": "gène \u0001"}
+    nodes = spark.createDataFrame(
+        [(i, names.get(i, name), *rest) for i, name, *rest in NODES],
+        "id string, name string, all_categories array<string>, "
+        "equivalent_curies array<string>, publications array<string>",
+    )
+    extra = {  # id -> source_record_urls, score, curated, note
+        "e1": (["https://src.example/1", "https://src.example/ü"], 0.75, True, "first ✓"),
+        "e2": ([], 2.0, False, ""),
+        "e5": (None, -1.5e-7, None, "qualified"),
+        "e8": (["https://src.example/8"], None, True, ""),
+    }
+    edges = spark.createDataFrame(
+        [(*e, *extra.get(e[0], (None, 1.0, False, None))) for e in EDGES],
+        EDGE_SCHEMA + ", source_record_urls array<string>, score double, "
+        "curated boolean, note string",
+    )
+    config = KgxConfig(trapi_attribute_map={
+        "score": {
+            "attribute_type_id": "biolink:score",
+            "value_url": "https://score.example/{value}",
+            "attribute_source": "{primary_knowledge_source}",
+        },
+        "note": {"attribute_type_id": "biolink:note", "attribute_source": "{agent_type}"},
+        "curated": {"attribute_type_id": "biolink:curated", "value_type_id": "metatype:Boolean"},
+    })
+    kg = build_knowledge_graph(nodes, edges, config).persist()
+    return TrapiEngine(kg, kp_infores_curie="infores:test-kp")
+
+
 PARITY_QUERIES = [
     one_hop({"ids": ["CHEM:1"]}, {}),
     one_hop({"ids": ["CHEM:1", "CHEM:2"]}, {"categories": ["biolink:Disease"]}, "biolink:treats"),
@@ -1188,13 +1215,14 @@ PARITY_QUERIES = [
 
 
 @pytest.mark.parametrize(
-    "fixture", ["engine", "numeric_id_engine", "int_prop_engine", "odd_engine"]
+    "fixture", ["engine", "numeric_id_engine", "int_prop_engine", "odd_engine", "rich_engine"]
 )
 def test_index_matches_spark(request, fixture):
     """Every query shape above, on every fixture KG — numeric edge ids, a
-    nullable int property, self-loops and an endpoint missing from the
-    node table included — gives the same response from the driver index
-    as from the Spark path (run_query compares them)."""
+    nullable int property, self-loops, an endpoint missing from the node
+    table, and overridden attribute shells over float, bool, empty and
+    non-ASCII values included — gives the same response from the driver
+    index as from the Spark path (run_query compares them)."""
     eng = request.getfixturevalue(fixture)
     answered = 0
     for qg in PARITY_QUERIES:
@@ -1209,14 +1237,14 @@ def test_indexed_query_runs_no_spark_job(engine):
     assert engine.graph_index(build=False) is not None
     tracker = engine.spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or ())
-    resp = response.run_query(
+    resp = wire(response.run_query(
         engine,
         one_hop({"ids": ["CHEM:1"]}, {"categories": ["biolink:Disease"]}, "biolink:treats"),
         spark=False,
-    )
-    node = response.run_query(
+    ))
+    node = wire(response.run_query(
         engine, {"nodes": {"n00": {"ids": ["DIS:parent"]}}, "edges": {}}, spark=False
-    )
+    ))
     assert len(tracker.getJobIdsForGroup(None) or ()) == before
     assert set(resp["message"]["knowledge_graph"]["edges"]) == {"e1", "e2", "e8"}
     assert set(node["message"]["knowledge_graph"]["nodes"]) == {
@@ -1250,7 +1278,7 @@ def test_hub_sized_indexed_query_runs_no_spark_job(engine, monkeypatch):
     tracker = engine.spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or ())
     qg = one_hop({"ids": ["CHEM:1"]}, {})
-    resp = response.run_query(engine, qg, spark=False, admit=admit)
+    resp = wire(response.run_query(engine, qg, spark=False, admit=admit))
     assert len(tracker.getJobIdsForGroup(None) or ()) == before
     assert admitted == ["in", "out"]
     assert set(resp["message"]["knowledge_graph"]["edges"]) == {"e1", "e2", "e5", "e8"}

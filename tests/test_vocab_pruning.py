@@ -19,6 +19,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import wire
+
 
 @pytest.fixture(scope="module")
 def engine(spark):
@@ -218,4 +220,4 @@ def test_rebuild_swaps_vocab(spark, engine, tmp_path):
     }
     status, body = handle(reg, "query", {"message": {"query_graph": qg}})
     assert status == 200
-    assert set(body["message"]["knowledge_graph"]["edges"]) == {"ev"}
+    assert set(wire(body)["message"]["knowledge_graph"]["edges"]) == {"ev"}
