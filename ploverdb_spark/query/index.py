@@ -84,8 +84,11 @@ def pylist(arr) -> list:
         ends = arr.offsets.to_numpy()
         values = pylist(arr.values.slice(ends[0], ends[-1] - ends[0]))
         ends = (ends - ends[0]).tolist()
-        valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
-        return [values[a:b] if ok else None for a, b, ok in zip(ends, ends[1:], valid)]
+        lists = [values[a:b] for a, b in zip(ends, ends[1:])]
+        if arr.null_count:
+            valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
+            lists = [v if ok else None for v, ok in zip(lists, valid)]
+        return lists
     return arr.to_pylist()
 
 
@@ -126,7 +129,9 @@ class GraphIndex:
     a code past the last row."""
 
     def __init__(self, nodes: DataFrame, edges_bidir: DataFrame) -> None:
-        self.nodes = nodes.toArrow()
+        # one chunk per column: a take from a chunked column concatenates
+        # its chunks first, on every answer
+        self.nodes = nodes.toArrow().combine_chunks()
         table_ids = self.nodes["id"].combine_chunks()
         n = self.n_table_nodes = len(table_ids)
         fwd = edges_bidir.where(F.col("direction") == DIR_FORWARD).drop(
@@ -183,9 +188,9 @@ class GraphIndex:
             c: np.array([*vocab[c], None], dtype=object) for c in vocab
         }
         # code -> id, and the ids sorted for bisection
-        self.node_ids = pa.chunked_array(self.nodes["id"].chunks + [missing])
+        self.node_ids = pa.concat_arrays([self.nodes["id"].combine_chunks(), missing])
         order = pc.sort_indices(self.node_ids)
-        self.sorted_ids = self.node_ids.take(order).combine_chunks()
+        self.sorted_ids = self.node_ids.take(order)
         self.sorted_codes = order.to_numpy().astype(np.int32)
 
         # CSR: entry k < n_edges is the forward traversal of edge row k,

@@ -24,7 +24,6 @@ import time
 from json.encoder import encode_basestring_ascii as _str
 from typing import Any
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -794,8 +793,9 @@ def _each(col, fn) -> list:
     """``fn(value, row number)`` over a column; over a dictionary column
     (Coded) once per distinct code, with no row number."""
     if isinstance(col, Coded):
-        u, inv = np.unique(col.codes, return_inverse=True)
-        return np.array([fn(v, None) for v in col.values[u].tolist()], dtype=object)[inv].tolist()
+        codes = col.codes.tolist()
+        frags = {c: fn(col.values[c], None) for c in set(codes)}
+        return [frags[c] for c in codes]
     return [fn(v, i) for i, v in enumerate(_values(col))]
 
 

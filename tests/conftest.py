@@ -23,15 +23,21 @@ def canonical_result(result: dict) -> str:
     return json.dumps(r, sort_keys=True)
 
 
+def _unique_keys(pairs: list) -> dict:
+    keys = [k for k, _ in pairs]
+    assert len(set(keys)) == len(keys), f"duplicate JSON object keys: {keys}"
+    return dict(pairs)
+
+
 def wire(body):
     """``body`` as a client reads it: the HTTP frontend's JSON text of it,
-    parsed (an indexed answer's knowledge graph and results are JSON text
-    already, response.Encoded)."""
+    parsed; a key repeated in one JSON object fails.  An indexed answer's
+    knowledge graph and results are JSON text already (response.Encoded)."""
     from ploverdb_spark.http_frontend import _json_pieces
 
     pieces: list[str] = []
     _json_pieces(body, pieces, depth=4)
-    return json.loads("".join(pieces))
+    return json.loads("".join(pieces), object_pairs_hook=_unique_keys)
 
 
 @pytest.fixture(scope="session")
