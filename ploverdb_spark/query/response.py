@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from ploverdb_spark.build.ingest import DIR_FORWARD
 from ploverdb_spark.functions.localdf import tiny_df
 from ploverdb_spark.functions.predicates import in_predicate
-from ploverdb_spark.query.index import Coded, pylist
 from ploverdb_spark.query.compiler import (
     MAX_ISIN_PUSHDOWN,
     CompiledQEdge,
@@ -40,6 +39,7 @@ from ploverdb_spark.query.compiler import (
     predicate_filter,
     pushdown_id_filter,
 )
+from ploverdb_spark.query.index import Coded, pylist
 
 CORE_NODE_PROPS = {"id", "name", "categories", "all_categories"}
 CORE_EDGE_PROPS = {
@@ -552,8 +552,8 @@ def _fetch_nodes(engine: TrapiEngine, node_ids, shells) -> dict[str, dict]:
 # above it mapInPandas does (30M-edge burst: ~3k-edge answers cost more
 # in extra actions than they save in GIL time; not measured past 100k
 # edges).  An indexed answer this big is encoded from the index under
-# admission and the request timeout (run_query's ``admit``): ~15 us an
-# edge, well under this path's cost at every size measured (README.md).
+# admission and the request timeout (run_query's ``admit``): 17-36 us an
+# edge up to the 100k edges measured (README.md).
 DISTRIBUTED_SERIALIZE_MIN_EDGES = 5000
 
 
