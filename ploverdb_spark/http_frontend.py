@@ -19,6 +19,7 @@ routing.
 
 from __future__ import annotations
 
+import gc
 import json
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
@@ -180,6 +181,12 @@ def serve(
         "DeepBacklogServer", (ThreadingHTTPServer,), {"request_queue_size": 512}
     )
     server = server_cls((host, port), handler)
+    # Everything alive now (the warm engines' index, model and vocab) moves
+    # to the permanent generation, so the cyclic collections a big answer's
+    # build triggers no longer walk it (reference main.py:73-78).  Here, not
+    # in TrapiEngine.warmup: a process serves once, but warms an engine
+    # per /rebuild, and each freeze also pins whatever garbage is alive.
+    gc.freeze()
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     return server

@@ -60,8 +60,8 @@ class CompiledQEdge:
     output_qnode_key: str
     input_is_subject: bool
     use_conglomerate: bool
-    directed_predicates: set[str] = dc_field(default_factory=set)
-    bidirectional_predicates: set[str] = dc_field(default_factory=set)
+    directed_predicates: frozenset[str] = frozenset()
+    bidirectional_predicates: frozenset[str] = frozenset()
     output_categories: list[str] = dc_field(default_factory=list)
     output_ids: list[str] | None = None
     attribute_constraints: list[dict] = dc_field(default_factory=list)
@@ -83,6 +83,10 @@ def _as_list(v) -> list:
         return []
     return v if isinstance(v, list) else [v]
 
+
+# Entries of an engine's memo (TrapiEngine.memoized) before it
+# is emptied: one per distinct predicate and category request
+MEMO_MAX = 4096
 
 # Beyond this many ids the IN-list stops helping (plan bloat) and the
 # broadcast join alone is the right shape.
@@ -196,6 +200,7 @@ class TrapiEngine:
         # rebuild them (minutes of redundant driver work at scale).
         self._vocab_lock = threading.Lock()
         self._congl_lock = threading.Lock()
+        self._memo: dict = {}
 
     def warmup(self, parallel: bool = False) -> "TrapiEngine":
         """Eagerly build every driver-resident structure (the driver
@@ -584,13 +589,20 @@ class TrapiEngine:
                     )
         return qg
 
-    def _expanded_output_categories(self, qnode: dict) -> list[str]:
-        """J7 (plover.py:2614-2627): mixin replacement + descendants;
-        default root NamedThing."""
-        m = self.model
-        cats = set(_as_list(qnode.get("categories"))) or {"biolink:NamedThing"}
-        cats = set(m.replace_category_mixins(sorted(cats)))
-        return sorted({d for c in cats for d in m.category_descendants(c)})
+    def _categories(self, qnode: dict) -> tuple[tuple, tuple, bool]:
+        """J7 (plover.py:2614-2627): the qnode's categories (default root
+        NamedThing), mixins replaced, with their descendants; then those
+        pruned to the KG vocab, with the skip flag (prune_category_list)."""
+
+        def compute() -> tuple:
+            m = self.model
+            cats = set(_as_list(qnode.get("categories"))) or {"biolink:NamedThing"}
+            cats = set(m.replace_category_mixins(sorted(cats)))
+            expanded = sorted({d for c in cats for d in m.category_descendants(c)})
+            pruned, skip = self.prune_category_list(expanded)
+            return tuple(expanded), tuple(pruned), skip
+
+        return self.memoized(("categories", repr(qnode.get("categories"))), compute)
 
     # ------------------------------------------------------------------
     # distributed lookup
@@ -690,13 +702,14 @@ class TrapiEngine:
             input_key, output_key = output_key, input_key
         input_is_subject = input_key == subj_key
 
+        output_categories, categories, skip_categories = self._categories(qnodes[output_key])
         compiled = CompiledQEdge(
             qedge_key=qedge_key,
             input_qnode_key=input_key,
             output_qnode_key=output_key,
             input_is_subject=input_is_subject,
             **self._predicate_sets(qedge),
-            output_categories=self._expanded_output_categories(qnodes[output_key]),
+            output_categories=list(output_categories),
             output_ids=ids_by_key[output_key] or None,
             attribute_constraints=qedge.get("attribute_constraints", []),
             required_direction=DIR_FORWARD if input_is_subject else DIR_REVERSE,
@@ -718,10 +731,22 @@ class TrapiEngine:
         else:
             # F1: category filter only when output is unpinned; pruned to
             # the KG's category vocab (and skipped when it covers it)
-            compiled.categories, compiled.skip_category_filter = (
-                self.prune_category_list(compiled.output_categories)
-            )
+            compiled.categories = list(categories)
+            compiled.skip_category_filter = skip_categories
         return compiled
+
+    def memoized(self, key: tuple, compute):
+        """``compute()``, once per ``key``: a pure function of ``key`` (of
+        query fields, as their repr) and of the engine's KG, model and
+        vocab, which never change, to an immutable value (an exception is
+        not memoized)."""
+        value = self._memo.get(key)
+        if value is None:
+            value = compute()
+            if len(self._memo) >= MEMO_MAX:
+                self._memo.clear()
+            self._memo[key] = value
+        return value
 
     def _predicate_sets(self, qedge: dict) -> dict:
         """The qedge's predicates expanded (R3/J6/J8), split by F4 and
@@ -729,12 +754,18 @@ class TrapiEngine:
         provably-TRUE filter: expansion routinely yields hundreds of
         descendants for a ~10-predicate KG, and serving keeps In-lists in
         linear form.  Keyword arguments of ``CompiledQEdge``."""
-        use_congl, pred_map = self._expanded_predicates(qedge)
-        directed, bidirectional, skip = self.prune_predicate_sets(
-            {p for p, bidir in pred_map.items() if not bidir},
-            {p for p, bidir in pred_map.items() if bidir},
-            use_congl,
-        )
+
+        def compute() -> tuple:
+            use_congl, pred_map = self._expanded_predicates(qedge)
+            directed, bidirectional, skip = self.prune_predicate_sets(
+                {p for p, bidir in pred_map.items() if not bidir},
+                {p for p, bidir in pred_map.items() if bidir},
+                use_congl,
+            )
+            return use_congl, frozenset(directed), frozenset(bidirectional), skip
+
+        key = ("predicates", repr(qedge.get("predicates")), repr(qedge.get("qualifier_constraints")))
+        use_congl, directed, bidirectional, skip = self.memoized(key, compute)
         return {
             "use_conglomerate": use_congl,
             "directed_predicates": directed,
@@ -761,9 +792,8 @@ class TrapiEngine:
             input_ids=[canon[i] for i in node_ids],
             input_pairs=[(c, c) for c in sorted(set(canon.values()))],
         )
-        compiled.categories, compiled.skip_category_filter = self.prune_category_list(
-            self._expanded_output_categories({"categories": categories})
-        )
+        _, pruned, compiled.skip_category_filter = self._categories({"categories": categories})
+        compiled.categories = list(pruned)
         return compiled
 
     def lookup(

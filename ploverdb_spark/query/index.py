@@ -3,12 +3,15 @@
 The reference answers one-hop queries from in-process maps
 (plover.py:692-695).  Below the ``driver_map_max_rows`` guard the engine
 does the same, from Arrow tables that never become per-row Python
-objects: the synonym and subclass-closure lookups (sorted, searched by
-bisection), and the graph — the node table (a node's *code* is its row),
-a CSR adjacency over both traversal directions of every edge, category
-and predicate codes, and the edge payload: the forward half of
-``edges_bidir``, so an answer row rebuilt here has the keys, values and
-Arrow types of the row the Spark probe returns.
+objects: the synonym and subclass-closure lookups and the node ids, each
+found by a hash searched with numpy (StringIndex), and the graph — the
+node table (a node's *code* is its row), a CSR adjacency over both
+traversal directions of every edge, category codes, and the edge payload:
+the forward half of ``edges_bidir``, so an answer row rebuilt here has
+the keys, values and Arrow types of the row the Spark probe returns.  A
+string payload column with a small dictionary is held as one numpy array
+of codes, so an answer gathers it with numpy; the other payload columns
+stay one Arrow table, taken once per answer.
 
 The driver's peak memory is set while the index is built, so the build
 collects no sorted table (a global sort before a collect multiplies that
@@ -19,9 +22,7 @@ dictionary codes, and keeps no collected batch.
 from __future__ import annotations
 
 import ctypes
-import functools
 import threading
-from bisect import bisect_left, bisect_right
 from dataclasses import dataclass, fields
 from typing import NamedTuple
 
@@ -39,30 +40,62 @@ _TRAVERSAL_COLS = ("neighbor_id", "node_id", "direction", "neighbor_categories")
 # string payload columns with at most this many distinct values travel
 # from the executors as int8/int16 dictionary codes
 DICTIONARY_MAX = 4096
+# payload columns queries match on (GraphIndex.match, qualifier_combos):
+# always held as codes, whatever their dictionary size
+_MATCHED_COLS = (
+    "predicate", "qualified_predicate", "object_direction_qualifier",
+    "object_aspect_qualifier", "conglomerate_predicate",
+)
 
 
-def _py(scalar):
-    return scalar.as_py()
+def _str_hashes(arr: pa.Array) -> np.ndarray:
+    """hash() of every string of ``arr``, 64k at a time: the Python strings
+    are transient."""
+    chunks = (pylist(arr.slice(i, 1 << 16)) for i in range(0, len(arr), 1 << 16))
+    return np.fromiter((hash(s) for chunk in chunks for s in chunk), np.int64, len(arr))
+
+
+class StringIndex:
+    """Strings of an Arrow string array -> their positions: numpy
+    searchsorted over their sorted hashes, then one string compare; no
+    Arrow scalar per probe, and 12 bytes a row, no per-row Python object."""
+
+    def __init__(self, strings: pa.Array) -> None:
+        self.strings = strings
+        hashes = _str_hashes(strings)
+        order = np.argsort(hashes, kind="stable")
+        self.hashes, self.positions = hashes[order], order.astype(np.int32)
+
+    def find(self, s: str) -> int | None:
+        """The first position of ``s``, or None."""
+        h = hash(s)
+        i = int(self.hashes.searchsorted(h))
+        while i < len(self.hashes) and self.hashes[i] == h:
+            p = int(self.positions[i])
+            if self.strings[p].as_py() == s:
+                return p
+            i += 1
+        return None
 
 
 class SortedLookup:
-    """Two Arrow columns sorted on the key: key -> values by bisection."""
+    """Two Arrow columns sorted on the key: key -> its values, sorted."""
 
     def __init__(self, tbl: pa.Table, key: str, value: str) -> None:
         tbl = tbl.filter(pc.and_(pc.is_valid(tbl[key]), pc.is_valid(tbl[value])))
         tbl = tbl.sort_by([(key, "ascending"), (value, "ascending")])
-        self.keys, self.values = tbl[key].combine_chunks(), tbl[value].combine_chunks()
+        keys, self.values = tbl[key].combine_chunks(), tbl[value].combine_chunks()
+        # the distinct keys, sorted, and where each one's rows start
+        enc = keys.dictionary_encode()
+        self.keys = StringIndex(enc.dictionary)
+        self.bounds = np.searchsorted(enc.indices.to_numpy(), np.arange(len(enc.dictionary) + 1))
 
     def get(self, key: str) -> list:
-        lo = bisect_left(self.keys, key, key=_py)
-        hi = bisect_right(self.keys, key, lo=lo, key=_py)
+        k = self.keys.find(key)
+        if k is None:
+            return []
+        lo, hi = self.bounds[k], self.bounds[k + 1]
         return self.values.slice(lo, hi - lo).to_pylist()
-
-
-def _codes(col, dictionary_size: int) -> np.ndarray:
-    """Dictionary indices; a null maps to ``dictionary_size``, a slot no
-    predicate or category set contains."""
-    return pc.fill_null(col.indices, dictionary_size).to_numpy()
 
 
 def _ranges(starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
@@ -76,7 +109,7 @@ def pylist(arr) -> list:
     """An Arrow array's values.  Strings, and lists of strings, go through
     numpy: ~10x faster than ``to_pylist``."""
     if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
+        arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
     t = arr.type
     if pa.types.is_string(t):
         return arr.to_numpy(zero_copy_only=False).tolist()
@@ -85,8 +118,10 @@ def pylist(arr) -> list:
         values = pylist(arr.values.slice(ends[0], ends[-1] - ends[0]))
         ends = (ends - ends[0]).tolist()
         lists = [values[a:b] for a, b in zip(ends, ends[1:])]
-        if arr.null_count:
-            valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
+        if arr.null_count:  # the validity bitmap, unpacked
+            lo = arr.offset
+            bits = np.frombuffer(arr.buffers()[0], np.uint8)[lo // 8 : (lo + len(arr) + 7) // 8]
+            valid = np.unpackbits(bits, bitorder="little")[lo % 8 : lo % 8 + len(arr)].tolist()
             lists = [v if ok else None for v, ok in zip(lists, valid)]
         return lists
     return arr.to_pylist()
@@ -169,33 +204,36 @@ class GraphIndex:
             dst = pc.coalesce(dst, pc.add(pc.index_in(edges["neighbor_id"], value_set=missing), n))
         src = src.combine_chunks().to_numpy().astype(np.int32)
         dst = dst.combine_chunks().to_numpy().astype(np.int32)
-        # the kept columns move out of the collected batches: a batch is
-        # one buffer per Arrow IPC message, which would keep the endpoint
-        # strings alive
-        columns = {}
-        for c in edges.column_names:
-            if c not in _TRAVERSAL_COLS:
-                columns[c] = pa.concat_arrays(edges[c].chunks)
-                if c in vocab:
-                    columns[c] = pa.DictionaryArray.from_arrays(
-                        columns[c], pa.array(vocab[c], pa.string())
-                    )
+        # the payload columns in table order; each moves out of the
+        # collected batches (a batch is one buffer per Arrow IPC message,
+        # which would keep the endpoint strings alive).  A dictionary
+        # column, and the predicate columns queries match on, become numpy
+        # codes, a null the code past the dictionary; the rest one table
+        self.payload = [c for c in edges.column_names if c not in _TRAVERSAL_COLS]
+        self.vocab: dict[str, list] = {}
+        self.codes: dict[str, np.ndarray] = {}
+        plain = {}
+        for c in self.payload:
+            col = pa.concat_arrays(edges[c].chunks)
+            if c in _MATCHED_COLS and c not in vocab:
+                enc = pc.dictionary_encode(col)
+                col, vocab[c] = enc.indices, enc.dictionary.to_pylist()
+            if c in vocab:
+                self.vocab[c] = vocab[c]
+                self.codes[c] = pc.fill_null(col, len(vocab[c])).to_numpy()
+            else:
+                plain[c] = col
         del edges, table_ids
-        self.edges = pa.table(columns)
-        # a dictionary column's values, None last, indexed by its codes:
-        # take() + to_pylist() on a DictionaryArray costs ~4 us a row
-        self._decoded = {
-            c: np.array([*vocab[c], None], dtype=object) for c in vocab
-        }
-        # code -> id, and the ids sorted for bisection
+        self.edges = pa.table(plain)
+        # a coded column's values, None last, indexed by its codes
+        self._decoded = {c: np.array([*v, None], dtype=object) for c, v in self.vocab.items()}
+        # code -> id, and id -> code
         self.node_ids = pa.concat_arrays([self.nodes["id"].combine_chunks(), missing])
-        order = pc.sort_indices(self.node_ids)
-        self.sorted_ids = self.node_ids.take(order)
-        self.sorted_codes = order.to_numpy().astype(np.int32)
+        self._codes_of = StringIndex(self.node_ids)
 
         # CSR: entry k < n_edges is the forward traversal of edge row k,
         # entry n_edges + k its reverse (a self-loop appears in both)
-        n_edges = len(src)
+        n_edges = self.n_edges = len(src)
         both = np.concatenate([src, dst])
         order = np.argsort(both, kind="stable")
         self.nbr = np.concatenate([dst, src])[order]
@@ -210,17 +248,7 @@ class GraphIndex:
         np.cumsum(pc.fill_null(pc.list_value_length(cats), 0).to_numpy(), out=self.cat_offsets[1:])
         enc = pc.dictionary_encode(cats.flatten())
         self.cat_vocab = enc.dictionary.to_pylist()
-        self.cat_codes = _codes(enc, len(self.cat_vocab))
-
-        # predicate match codes: the payload's dictionary indices
-        self.vocab: dict[str, list] = {}
-        self.codes: dict[str, np.ndarray] = {}
-        for c in ("predicate", "conglomerate_predicate"):
-            enc = self.edges[c].chunk(0)
-            if not pa.types.is_dictionary(enc.type):
-                enc = pc.dictionary_encode(enc)
-            self.vocab[c] = enc.dictionary.to_pylist()
-            self.codes[c] = _codes(enc, len(self.vocab[c]))
+        self.cat_codes = pc.fill_null(enc.indices, len(self.cat_vocab)).to_numpy()
         # give the build's transient memory back: the Arrow pool's, and
         # the freed collect buffers in the C heap (glibc only)
         pa.default_memory_pool().release_unused()
@@ -256,19 +284,13 @@ class GraphIndex:
         found on dictionary codes (Arrow's group_by would load its query
         engine into the driver: +5 MB RSS)."""
         quals = ["qualified_predicate", "object_direction_qualifier", "object_aspect_qualifier"]
-        t = self.edges.select(["predicate", *quals, "conglomerate_predicate"])
-        t = t.filter(functools.reduce(pc.or_, [pc.is_valid(t[c]) for c in quals]))
-        cols = [col.combine_chunks() for col in t.columns]
-        cols = [c if pa.types.is_dictionary(c.type) else pc.dictionary_encode(c) for c in cols]
-        codes = np.stack([_codes(c, len(c.dictionary)) for c in cols], axis=1)
-        values = [c.dictionary.to_pylist() + [None] for c in cols]
-        return [tuple(v[c] for v, c in zip(values, row)) for row in np.unique(codes, axis=0)]
+        qualified = np.logical_or.reduce([self.codes[c] < len(self.vocab[c]) for c in quals])
+        rows = np.stack([self.codes[c][qualified] for c in _MATCHED_COLS], axis=1)
+        values = [self._decoded[c] for c in _MATCHED_COLS]
+        return [tuple(v[c] for v, c in zip(values, row)) for row in np.unique(rows, axis=0)]
 
     def code(self, node_id: str) -> int | None:
-        i = bisect_left(self.sorted_ids, node_id, key=_py)
-        if i < len(self.sorted_ids) and self.sorted_ids[i].as_py() == node_id:
-            return int(self.sorted_codes[i])
-        return None
+        return self._codes_of.find(node_id)
 
     def has_node(self, node_id: str) -> bool:
         c = self.code(node_id)
@@ -302,7 +324,7 @@ class GraphIndex:
         keep = np.full(len(pos), bool(bidirectional or directed))
         if keep.any() and not compiled.skip_predicate_filter:
             col = "conglomerate_predicate" if compiled.use_conglomerate else "predicate"
-            vocab, p = self.vocab[col] + [None], self.codes[col][rows]
+            vocab, p = self._decoded[col], self.codes[col][rows]
             keep = _member(vocab, bidirectional)[p] | (
                 _member(vocab, directed)[p] & (dirs == compiled.required_direction)
             )
@@ -330,7 +352,9 @@ class GraphIndex:
         """A symmetric edge with both endpoints pinned matches in both
         directions; keep one row per edge id: the forward one, else the
         smallest input id (the Spark lookup's window)."""
-        ids = self.edges["id"].take(pa.array(rows[keep])).to_pylist()
+        rows = rows[keep]
+        ids = (self._decoded["id"][self.codes["id"][rows]].tolist() if "id" in self.codes
+               else self.edges["id"].take(pa.array(rows)).to_pylist())
         inputs = self.node_ids.take(pa.array(inp[keep])).to_pylist()
         best: dict = {}
         for k, eid, d, i in zip(keep, ids, dirs[keep], inputs):
@@ -338,17 +362,18 @@ class GraphIndex:
                 best[eid] = ((d != DIR_FORWARD, i), k)
         return np.array(sorted(k for _, k in best.values()), dtype=np.int64)
 
-    def columns(self, m: Match) -> dict:
+    def columns(self, m: Match, skip=frozenset()) -> dict:
         """The answer rows column by column, keyed like the Spark probe's
-        rows: traversal columns, the edge payload in table order (an Arrow
-        array; a dictionary column as its codes, Coded) and the bound
-        query ids."""
-        cols = {"output_id": self.ids(m.out), "input_id": self.ids(m.inp)}
+        rows: traversal columns, the edge payload in table order but the
+        columns in ``skip`` (a coded column as Coded, a plain one as an
+        Arrow column of one table take) and the bound query ids."""
+        ids = self.ids(np.concatenate([m.out, m.inp]))
+        cols = {"output_id": ids[: len(m)], "input_id": ids[len(m) :]}
         cols["direction"] = m.dirs.tolist()
-        rows = pa.array(m.rows)
-        for c in self.edges.column_names:
-            col, values = self.edges[c].chunk(0).take(rows), self._decoded.get(c)
-            cols[c] = col if values is None else Coded(_codes(col, len(values) - 1), values)
+        plain = self.edges.take(pa.array(m.rows)) if self.edges.num_columns else None
+        for c in self.payload:
+            if c not in skip:
+                cols[c] = Coded(self.codes[c][m.rows], self._decoded[c]) if c in self.codes else plain[c]
         cols["input_query_id"], cols["output_query_id"] = m.in_qids, m.out_qids
         return cols
 
@@ -371,13 +396,13 @@ class GraphIndex:
 
     def stats(self) -> dict:
         arrays = (
-            self.node_ids, self.sorted_ids, self.sorted_codes, self.nbr, self.row,
-            self.dirn, self.offsets, self.cat_offsets, self.cat_codes,
+            self.node_ids, self._codes_of.hashes, self._codes_of.positions, self.nbr,
+            self.row, self.dirn, self.offsets, self.cat_offsets, self.cat_codes,
             *self.codes.values(), self.edges, self.nodes,
         )
         return {
             "resident_bytes": int(sum(a.nbytes for a in arrays)),
-            "edges": self.edges.num_rows,
+            "edges": self.n_edges,
             "nodes": self.nodes.num_rows,
         }
 

@@ -150,6 +150,33 @@ def attribute_shells_for(config) -> dict[str, dict]:
     return shells
 
 
+def _source_placeholder(shell) -> str | None:
+    """The property an ``{other_prop}`` attribute source reads off the row."""
+    src = shell.get("attribute_source") if isinstance(shell, dict) else None
+    if isinstance(src, str) and src.startswith("{") and src.endswith("}"):
+        return src[1:-1]
+    return None
+
+
+class AttributeShells(dict):
+    """An engine's attribute shells (engine_shells), which keep per
+    property and KP curie how _attribute_column encodes it (``parts``)."""
+
+    def __init__(self, shells: dict) -> None:
+        super().__init__(shells)
+        self.parts: dict[tuple, tuple] = {}
+        # the internal columns no source placeholder reads: an indexed
+        # answer does not gather them
+        self.unread = frozenset(INTERNAL_COLS - {_source_placeholder(s) for s in shells.values()})
+
+
+def engine_shells(engine: TrapiEngine) -> AttributeShells:
+    """attribute_shells_for(engine.kg.config), built once per engine."""
+    return engine.memoized(
+        ("attribute_shells",), lambda: AttributeShells(attribute_shells_for(engine.kg.config))
+    )
+
+
 def make_attribute(
     prop: str,
     value: Any,
@@ -566,7 +593,7 @@ def hydrate_knowledge_graph(
     compact strings, so a cutoff-sized (1M-edge) answer costs no minutes
     of single-threaded dict building.  An edge met in both orientations
     serializes identically; the id-keyed dict keeps one."""
-    shells = attribute_shells_for(engine.kg.config)
+    shells = engine_shells(engine)
     kp = engine.kp_infores_curie
     edges = _serialize_on_executors(answers, _answer_edge_to_trapi, kp, shells)
     nodes = _serialize_on_executors(
@@ -711,7 +738,7 @@ def run_query(engine: TrapiEngine, query: dict, spark: bool = True, admit=None) 
             return _index_response(engine, index, match, compiled, qg, logs, True)
     if not spark:
         return None
-    shells = attribute_shells_for(engine.kg.config)
+    shells = engine_shells(engine)
     kp = engine.kp_infores_curie
     compiled, matched = engine.lookup(
         qg, persist_answers=False, enforce_cutoff=False, compiled=compiled
@@ -809,20 +836,28 @@ def _rows(cols: dict):
 _MARK = "\x00value\x00"
 
 
+def _attribute_parts(prop: str, kp: str, shells: dict) -> tuple[str, str, bool, bool]:
+    """How _attribute_column encodes ``prop``: the shell's JSON text before
+    and after the value, and whether the shell reads the row, or the row
+    or the value; an AttributeShells keeps them."""
+    memo = getattr(shells, "parts", {})
+    if (prop, kp) not in memo:
+        shell = shells.get(prop) or {}
+        url = shell.get("value_url")
+        reads_row = _source_placeholder(shell) not in (None, "kp_infores_curie")
+        per_value = reads_row or bool(url and isinstance(url, str))
+        head, _, tail = json.dumps(make_attribute(prop, _MARK, kp, shells)).partition(_str(_MARK))
+        memo[prop, kp] = head, tail, reads_row, per_value
+    return memo[prop, kp]
+
+
 def _attribute_column(prop: str, col, kp: str, shells: dict, row, edge: bool) -> list[str]:
     """Per row ``", "`` + the TRAPI attribute of ``prop`` as JSON, or ""
     for an empty value.  A shell that reads neither the value
     (``value_url``) nor the row (an ``{other_prop}`` source) is encoded
     once and the value spliced into its text; other shells, and an edge's
     zipped values, take make_attribute per value."""
-    shell = shells.get(prop) or {}
-    src, url = shell.get("attribute_source"), shell.get("value_url")
-    reads_row = (
-        isinstance(src, str) and src.startswith("{") and src.endswith("}")
-        and src != "{kp_infores_curie}"
-    )
-    per_value = reads_row or bool(url and isinstance(url, str))
-    head, _, tail = json.dumps(make_attribute(prop, _MARK, kp, shells)).partition(_str(_MARK))
+    head, tail, reads_row, per_value = _attribute_parts(prop, kp, shells)
 
     def frag(v, i) -> str:
         v = _clean(v)
@@ -929,13 +964,13 @@ def _result_texts(groups: list, compiled: CompiledQEdge, kp: str) -> list[str]:
 def _index_response(engine, index, match, compiled, qg, logs, yielding: bool) -> dict:
     """The response of an indexed answer, its knowledge graph and results
     encoded to JSON text (Encoded) slice by slice (_slices)."""
-    shells = attribute_shells_for(engine.kg.config)
+    shells = engine_shells(engine)
     kp = engine.kp_infores_curie
     edges, nodes, results = Encoded("{}"), Encoded("{}"), Encoded("[]")
     keys: list[tuple] = []
     seen: set = set()
     for s in _slices(len(match), yielding):
-        cols = index.columns(match[s])
+        cols = index.columns(match[s], shells.unread)
         ids = [str(e) for e in _values(cols["id"])]
         # an edge met in both orientations encodes identically: keep one
         texts = _edge_texts(cols, kp, shells)
@@ -953,7 +988,7 @@ def _index_response(engine, index, match, compiled, qg, logs, yielding: bool) ->
 def _run_single_node_query(
     engine: TrapiEngine, qg: dict, index, spark: bool = True
 ) -> dict | None:
-    shells = attribute_shells_for(engine.kg.config)
+    shells = engine_shells(engine)
     if index is not None:
         with GATE.small_turn():
             qnode_key, _, pairs = engine.compile_single_node(qg)
@@ -1032,7 +1067,7 @@ def get_edges(engine: TrapiEngine, pairs: list[list[str]]) -> dict:
     hits = edges_between(engine, pairs_df, canon_ids).select(
         "orig_a", "orig_b", *engine.kg.edges.columns
     )
-    shells = attribute_shells_for(engine.kg.config)
+    shells = engine_shells(engine)
     pairs_to_edge_ids: dict[str, list[str]] = {f"{a}--{b}": [] for a, b in pairs}
     kg_edges: dict[str, dict] = {}
     for d in _collect_dicts(hits):

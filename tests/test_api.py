@@ -1160,3 +1160,22 @@ def test_http_frontend_routes(registry):
         assert exc.value.code == 400
     finally:
         server.shutdown()
+
+
+def test_serve_freezes_the_warm_heap(registry):
+    """Serving moves the warm registry's objects to the GC's permanent
+    generation, so cyclic collections during a big answer's build do not
+    walk the engine (reference main.py:73-78)."""
+    import gc
+
+    from ploverdb_spark.http_frontend import serve
+
+    assert registry.engine("graft").warmup().graph_index(build=False) is not None
+    gc.unfreeze()
+    server = serve(registry, host="127.0.0.1", port=0)
+    try:
+        assert gc.get_freeze_count() > 0
+    finally:
+        server.shutdown()
+        server.server_close()
+        gc.unfreeze()

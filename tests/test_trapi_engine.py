@@ -1472,3 +1472,73 @@ def test_index_vocab_matches_spark(request, fixture):
     # not vacuously: a qualified edge (e5) exists except among
     # numeric_id_engine's gene-free edges
     assert bool(congl) == (fixture != "numeric_id_engine")
+
+
+def test_index_lookups_match_their_tables(odd_engine):
+    """GraphIndex.code and the synonym and closure lookups return what a
+    dict built from the same Arrow tables returns: every node id (GENE:2,
+    an edge endpoint with no node row, gets a code past the table),
+    aliases, absent, empty and non-ASCII ids."""
+    eng = odd_engine.warmup()
+    graph = eng.graph_index()
+    ids = graph.node_ids.to_pylist()
+    codes = {node_id: c for c, node_id in enumerate(ids)}
+    assert codes["GENE:2"] >= graph.n_table_nodes
+    for node_id in [*ids, "", "NOPE:1", "CHEM:ü", "CHEM:alias1"]:
+        assert graph.code(node_id) == codes.get(node_id)
+    for df, key, value, lookup in (
+        (eng.kg.id_synonyms, "alias_id", "preferred_id", eng._index.synonyms()),
+        (eng.kg.subclass_closure, "ancestor", "descendant", eng._index.closure()),
+    ):
+        want: dict = {}
+        for row in df.select(key, value).toArrow().to_pylist():
+            if row[key] is not None and row[value] is not None:
+                want.setdefault(row[key], []).append(row[value])
+        assert want  # not vacuously
+        for k in [*want, "", "NOPE:1", "CHEM:ü"]:
+            assert lookup.get(k) == sorted(want.get(k, []))
+    assert eng.canonicalize_ids(["CHEM:alias1"]) == {"CHEM:alias1": "CHEM:1"}
+
+
+def test_small_indexed_answer_arrow_calls(engine, monkeypatch):
+    """A small indexed one-hop makes at most four Arrow takes (it makes
+    three: the edge payload table, the input and output ids in one, the
+    node rows) and no fill_null: the dictionary payload columns are
+    gathered as numpy codes."""
+    import pyarrow.compute as pc
+
+    engine.warmup()
+    calls: Counter = Counter()
+    for name in ("take", "fill_null"):
+
+        def counted(*a, _name=name, _orig=getattr(pc, name), **kw):
+            calls[_name] += 1
+            return _orig(*a, **kw)
+
+        # Array.take and Table.take call pyarrow.compute.take
+        monkeypatch.setattr(pc, name, counted)
+    resp = response.run_query(engine, one_hop({"ids": ["CHEM:1"]}, {}), spark=False)
+    assert 0 < len(resp["message"]["results"]) <= response.SLICE_ROWS
+    assert calls["take"] <= 4 and calls["fill_null"] == 0, calls
+
+
+def test_compile_memo_shares_no_mutable_state(engine):
+    """Two compiles of one query share a memo entry (the same frozen
+    predicate sets) but no list: a mutated compile leaves the next one as
+    it was.  An unsupported qualifier gets its 403 on every compile."""
+    qg = one_hop({"ids": ["CHEM:1"]}, {"categories": ["biolink:Disease"]}, "biolink:treats")
+    a, b = engine.compile(qg), engine.compile(qg)
+    assert a.directed_predicates is b.directed_predicates and a == b
+    with pytest.raises(AttributeError):
+        a.directed_predicates.add("biolink:affects")
+    a.categories.append("biolink:Gene")
+    a.output_categories.clear()
+    c = engine.compile(qg)
+    assert c == b and "biolink:Gene" not in c.categories and c.output_categories
+    bad = one_hop({"ids": ["CHEM:1"]}, {}, qualifier_constraints=[
+        {"qualifier_set": [{"qualifier_type_id": "biolink:unknown", "qualifier_value": "x"}]}
+    ])
+    for _ in range(2):
+        with pytest.raises(QueryError) as err:
+            engine.compile(bad)
+        assert err.value.status == 403

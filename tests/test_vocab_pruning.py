@@ -221,3 +221,38 @@ def test_rebuild_swaps_vocab(spark, engine, tmp_path):
     status, body = handle(reg, "query", {"message": {"query_graph": qg}})
     assert status == 200
     assert set(wire(body)["message"]["knowledge_graph"]["edges"]) == {"ev"}
+
+
+def test_rebuild_compiles_against_new_vocab(spark, engine, tmp_path):
+    """The compile memo lives on the engine: after a /rebuild swap, a
+    query the old engine compiled (and memoized) compiles against the new
+    engine's vocab, while the old engine keeps its own."""
+    import json as _json
+
+    from ploverdb_spark.api import KpRegistry, handle
+
+    reg = KpRegistry(query_timeout_sec=120, rebuild_token="tok")
+    reg.register("kp", engine)
+    qg = {
+        "nodes": {"n00": {"ids": ["V:1"]}, "n01": {}},
+        "edges": {"e00": {"subject": "n00", "object": "n01",
+                          "predicates": ["biolink:affects"]}},
+    }
+    old = engine.compile(qg)
+    assert not old.directed_predicates | old.bidirectional_predicates
+    (tmp_path / "nodes.jsonl").write_text("\n".join(_json.dumps(n) for n in [
+        {"id": "V:1", "name": "v1", "all_categories": ["biolink:Gene"]},
+        {"id": "V:2", "name": "v2", "all_categories": ["biolink:Disease"]},
+    ]))
+    (tmp_path / "edges.jsonl").write_text(_json.dumps(
+        {"id": "ev", "subject": "V:1", "object": "V:2", "predicate": "biolink:affects",
+         "primary_knowledge_source": "infores:new"}
+    ))
+    status, _ = handle(reg, "rebuild", {
+        "token": "tok", "nodes_file": str(tmp_path / "nodes.jsonl"),
+        "edges_file": str(tmp_path / "edges.jsonl"), "config": {"is_test": True},
+    })
+    assert status == 200 and reg.engine("kp") is not engine
+    new = reg.engine("kp").compile(qg)
+    assert "biolink:affects" in new.directed_predicates | new.bidirectional_predicates
+    assert engine.compile(qg) == old
